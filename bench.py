@@ -430,11 +430,12 @@ def _hardware_yardsticks() -> dict:
       commit. The r16 re-baseline mechanism was exactly this number.
     - steal_pct / busy_pct: /proc/stat deltas over 0.5 s — steal is the
       only DIRECT host-co-tenancy signal the guest can see.
-    - cpu_scale_32: wall-clock RATIO of 32 concurrent fixed spins vs 1
-      (each ~0.25 s of pure Python spin in its own process). ~1.0–1.4
-      on an idle 32-cpu box (interpreter startup); >2 means the 32
-      "cpus" are not actually available — the r16 signature where the
-      1-min loadavg read quiet but officials drifted anyway."""
+    - cpu_scale_n: wall-clock RATIO of cpu_scale_k concurrent fixed
+      spins vs 1, one spin per usable CPU (``sched_getaffinity``; each
+      ~0.25 s of pure Python spin in its own process). ~1.0–1.4 on an
+      idle box (interpreter startup); >2 means the usable CPUs are not
+      actually available — the r16 signature where the 1-min loadavg
+      read quiet but officials drifted anyway."""
     hw: dict = {"loadavg_1_5_15": [round(x, 2) for x in os.getloadavg()]}
     try:
         import statistics
@@ -496,9 +497,11 @@ def _hardware_yardsticks() -> dict:
                 pr.wait()
             return time.perf_counter() - t0
 
+        k = len(os.sched_getaffinity(0))
         t1 = run_n(1)
-        t32 = run_n(32)
-        hw["cpu_scale_32"] = round(t32 / t1, 2)
+        tk = run_n(k)
+        hw["cpu_scale_k"] = k
+        hw["cpu_scale_n"] = round(tk / t1, 2)
     except Exception as e:  # noqa: BLE001
         hw["cpu_scale_err"] = str(e)[:80]
     return hw
@@ -510,12 +513,12 @@ def _hardware_yardsticks() -> dict:
 # adjudication pass a round later; the yardsticks RECORDED the state but
 # nothing acted on it. Bands from the recorded quiet officials
 # (BENCH_samples_history.jsonl): settled launches read 15-min loadavg
-# ~1.3, fsync p90 0.2–0.5 ms, cpu_scale_32 1.0–1.4, steal ~0; the
-# known-bad states read 7.29 / 5.4 ms / >2 respectively.
+# ~1.3, fsync p90 0.2–0.5 ms, cpu_scale_32 (now cpu_scale_n) 1.0–1.4,
+# steal ~0; the known-bad states read 7.29 / 5.4 ms / >2 respectively.
 _SETTLED_BANDS = {
     "loadavg_15": 4.0,
     "fsync_ms_p90": 3.0,
-    "cpu_scale_32": 2.0,
+    "cpu_scale_n": 2.0,
     "steal_pct": 5.0,
 }
 
@@ -526,7 +529,7 @@ def _unsettled_reasons(hw: dict) -> list[str]:
     la = hw.get("loadavg_1_5_15") or []
     if len(la) == 3 and la[2] > _SETTLED_BANDS["loadavg_15"]:
         reasons.append(f"loadavg_15={la[2]}>{_SETTLED_BANDS['loadavg_15']}")
-    for key in ("fsync_ms_p90", "cpu_scale_32", "steal_pct"):
+    for key in ("fsync_ms_p90", "cpu_scale_n", "steal_pct"):
         v = hw.get(key)
         if isinstance(v, (int, float)) and v > _SETTLED_BANDS[key]:
             reasons.append(f"{key}={v}>{_SETTLED_BANDS[key]}")

@@ -303,84 +303,43 @@ def cmd_index(args) -> int:
                 .persist()
             )
             n_queries = qdf.count()  # bounded by --max-queries
-            huge_key = "spark.sql.codegen.hugeMethodLimit"
-            prev_huge = None
-            if args.rescorer in ("unrolled", "balanced"):
-                # the explicit opt-in must actually deliver: the
-                # unrolled tree is only fast when Spark rejects the
-                # un-JIT-able fused whole-stage method and falls back
-                # per-stage (measured 5.6 s vs 17.0 s at 5k queries —
-                # operators/vector_index.py _JIT_METHOD_LIMIT). The CLI
-                # owns its session and materializes within this
-                # invocation, so scoping the conf here (restored below
-                # for in-process callers like the tests) is safe;
-                # 'auto' deliberately leaves the session conf untouched
-                # and resolves from it instead.
-                prev_huge = spark.conf.get(huge_key, "65535")
-                spark.conf.set(huge_key, "8000")
-            try:
-                # rescorer default 'auto' stays PREDICTABLE and in-JVM:
-                # under a vanilla session it resolves to the proven
-                # fold; with hugeMethodLimit <= 8000 it takes the
-                # unrolled tree (bit-identical, 3x faster at batch
-                # volume — SCALE.md r15/r16). The r16 VOLUME GATE
-                # (auto -> fold below 1000 queries) is REMOVED in r17:
-                # its rationale was the unrolled tree's ~1-2.5 s
-                # per-invocation plan cost (sim_search_index regressed
-                # 5.8 -> 10.8 s under a global 8000 via the
-                # auto->unrolled flip), and that cost was MEASURED to
-                # be the py4j Column build the SQL-text builders
-                # eliminated — the same A/B re-run after the fix reads
-                # 0.91 (4.05 vs 4.45 s, BENCH_samples_history.jsonl
-                # r17). auto is now conf-only here exactly as in the
-                # library; an explicit --rescorer always wins.
-                rescorer = args.rescorer
-                # (r16 advice) an EXPLICIT non-auto rescorer always
-                # rides the DataFrame serve — the list path has no
-                # rescorer at all, so honoring the threshold there
-                # would silently ignore what the user asked for (while
-                # the conf block above had already lowered
-                # hugeMethodLimit for nothing). 'auto' keeps the
-                # threshold split.
-                if args.rescorer != "auto" or n_queries >= args.df_serve_threshold:
-                    # big query batches ride the DataFrame-native serve:
-                    # the probe ranking stays distributed instead of a
-                    # driver loop; row-identical to the list path
-                    # (test-pinned). The Arrow pandas_udf path is
-                    # DEPRECATED (dominated by 'unrolled'/'balanced',
-                    # heavy tail + one observed indefinite stall —
-                    # SCALE.md r14/r16)
-                    res = search_vector_index_df(
-                        spark,
-                        args.path,
-                        qdf.select(
-                            F.col("vec_id").alias("query_id"),
-                            F.col("embedding").alias("qv"),
-                        ),
-                        top_k=args.top_k,
-                        n_probe=args.n_probe,
-                        rescorer=rescorer,
-                    )
-                else:
-                    queries = [(int(r.vec_id), list(r.embedding)) for r in qdf.collect()]
-                    res = search_vector_index(
-                        spark, args.path, queries, top_k=args.top_k, n_probe=args.n_probe
-                    )
-                if args.out:
-                    res.write.mode("overwrite").parquet(args.out)
-                    print(json.dumps({"queries": n_queries, "out": args.out}))
-                else:
-                    for r in res.collect():
-                        print(json.dumps({"query_id": r.query_id, "vec_id": r.vec_id, "cosine": r.cosine, "rn": r.rn}))
-                # release the serve caches (r13 advice): qdf here, and
-                # the df-serve path's eagerly-materialized result —
-                # repeated searches in one embedding session must not
-                # accumulate
-                qdf.unpersist()
-                res.unpersist()
-            finally:
-                if prev_huge is not None:
-                    spark.conf.set(huge_key, prev_huge)
+            # both serve paths' cosine tree follows the session's
+            # spark.sql.codegen.hugeMethodLimit (operators/vector_index.py
+            # _cosine_col): the fold under a vanilla session, the
+            # bit-identical unrolled tree when it is <= 8000 (set it via
+            # PYSPARK_SUBMIT_ARGS --conf)
+            if n_queries >= args.df_serve_threshold:
+                # big query batches ride the DataFrame-native serve:
+                # the probe ranking stays distributed instead of a
+                # driver loop; row-identical to the list path
+                # (test-pinned)
+                res = search_vector_index_df(
+                    spark,
+                    args.path,
+                    qdf.select(
+                        F.col("vec_id").alias("query_id"),
+                        F.col("embedding").alias("qv"),
+                    ),
+                    top_k=args.top_k,
+                    n_probe=args.n_probe,
+                )
+            else:
+                queries = [(int(r.vec_id), list(r.embedding)) for r in qdf.collect()]
+                res = search_vector_index(
+                    spark, args.path, queries, top_k=args.top_k, n_probe=args.n_probe
+                )
+            if args.out:
+                res.write.mode("overwrite").parquet(args.out)
+                print(json.dumps({"queries": n_queries, "out": args.out}))
+            else:
+                for r in res.collect():
+                    print(json.dumps({"query_id": r.query_id, "vec_id": r.vec_id, "cosine": r.cosine, "rn": r.rn}))
+            # release the serve caches (r13 advice): qdf here, and
+            # the df-serve path's eagerly-materialized result —
+            # repeated searches in one embedding session must not
+            # accumulate
+            qdf.unpersist()
+            res.unpersist()
             return 0
         if not args.src:
             raise SystemExit(f"index {args.action} requires --src (embeddings parquet)")
@@ -661,32 +620,6 @@ def main(argv: list[str] | None = None) -> int:
         default=2,
         help="compact only when at least this many committed refresh scopes "
         "exist on disk (below it the merge would not reduce files)",
-    )
-    p.add_argument(
-        "--rescorer",
-        choices=["auto", "unrolled", "balanced", "arrow", "hof"],
-        default="auto",
-        help="cosine rescorer for the DataFrame serve: 'auto' (default — the "
-        "in-JVM fold under a vanilla session; resolves to the unrolled "
-        "dot-product tree when the index dim is known <= 256 AND the session "
-        "sets spark.sql.codegen.hugeMethodLimit <= 8000), 'unrolled' (the "
-        "fast SAFE opt-in: scopes that conf for this invocation and serves "
-        "~3x faster than the fold, bit-identical, no Python pipe), "
-        "'balanced' (the WIDE-dim opt-in for dims 256-1536 where the "
-        "unrolled tree cannot build: pairwise-tree dot product, in-JVM, "
-        "scopes the same conf; NOT bit-identical to the fold — neighbor "
-        "sets match except on genuine cosine ties, cosines within ulps), "
-        "'hof' "
-        "(force the fold), or 'arrow' (DEPRECATED since r16 — vectorized "
-        "pandas_udf, strictly dominated by 'unrolled' everywhere measured "
-        "(16.3 s vs 3.9 s at the 5k-query probe) and carrying a measured "
-        "heavy tail: occasional 5x degradation and one observed INDEFINITE "
-        "pipe stall, executor blocked in PythonRunner.ReaderInputStream.read "
-        "with idle workers; kept for comparison runs only — if you must run "
-        "it unattended, set a wall-clock timeout of ~4x the expected median "
-        "and enable spark.python.worker.faulthandler.enabled plus "
-        "spark.speculation so a stalled task is visible and retried; "
-        "cosines may differ from the fold in the last ulp)",
     )
     p.set_defaults(fn=cmd_index)
 

@@ -84,12 +84,14 @@ def _dot_sql_lit(col_sql: str, c: list[float]) -> str:
     return f"(CASE WHEN size({col_sql}) = {len(c)} THEN {s} ELSE {fold} END)"
 
 
-# Above this dimension the unrolled literal trees stop being obviously
-# cheap to analyze/compile and janino stack-depth territory begins (the
-# vector_index._UNROLL_MAX_DIM rationale; ~768 literal statements in one
-# method overflowed janino's per-statement recursion on a vanilla 1g
-# driver — see sim_search_balanced). Callers keep the bit-identical
-# lambda-fold form past it, so wide-dim paths are untouched.
+# Above this dimension the unrolled trees stop being obviously cheap to
+# analyze/compile: the unrolled left spine's Catalyst recursion is
+# O(dim) (StackOverflowError at 384, SCALE.md r16), and ~768 literal
+# statements in one method overflowed janino's per-statement recursion
+# on a vanilla 1g driver. One cap for every unrolled tree (the literal
+# centroid trees here and vector_index._cosine_col); callers keep the
+# bit-identical lambda-fold form past it, so wide-dim paths are
+# untouched.
 _LIT_UNROLL_MAX_DIM = 256
 
 # r19 (ADVICE r18 #3): the dim cap bounds PER-CENTROID tree depth only;
@@ -99,6 +101,10 @@ _LIT_UNROLL_MAX_DIM = 256
 # would silently fall back to interpreted compile-retry — the fold form
 # is the honest choice there.
 _LIT_UNROLL_MAX_TERMS = 2048
+
+# The corpus size (Catalyst's compressed-bytes estimate) from which the
+# build side takes the literal trees — see ``_lit_build_path``.
+_LIT_UNROLL_MIN_BYTES = 4 << 20
 
 
 def _lit_build_path(df: DataFrame, cvs: list[list[float]]) -> bool:
@@ -118,11 +124,10 @@ def _lit_build_path(df: DataFrame, cvs: list[list[float]]) -> bool:
     Catalyst's input-size estimate — the repo's standing
     smallInputBytes pattern; NOTE it reports COMPRESSED parquet bytes
     (~260 B per dim-64 vector on the testdata, not the 512 B raw) —
-    under ``spark.sdt.vector.litUnrollMinBytes`` (default 4 MiB ≈ 16k
-    dim-64 vectors compressed, between the two measured points; 0
-    forces the literal path, the plan-shape tests use it). Both
-    branches are bit-identical (r18 pins), so the dispatch can never
-    change results.
+    against ``_LIT_UNROLL_MIN_BYTES`` (4 MiB ≈ 16k dim-64 vectors
+    compressed, between the two measured points; 0 forces the literal
+    path, the plan-shape tests patch it so). Both branches are
+    bit-identical (r18 pins), so the dispatch can never change results.
 
     Also guards the empty-model IndexError (ADVICE r18 #2) and the k×dim
     janino term budget (ADVICE r18 #3)."""
@@ -130,14 +135,9 @@ def _lit_build_path(df: DataFrame, cvs: list[list[float]]) -> bool:
         return False
     if len(cvs) * len(cvs[0]) > _LIT_UNROLL_MAX_TERMS:
         return False
-    min_bytes = int(
-        df.sparkSession.conf.get("spark.sdt.vector.litUnrollMinBytes", str(4 << 20))
-    )
-    if min_bytes <= 0:
-        return True
     from .skew import estimated_plan_bytes
 
-    return estimated_plan_bytes(df) >= min_bytes
+    return estimated_plan_bytes(df) >= _LIT_UNROLL_MIN_BYTES
 
 
 def _dot_sql_fold(col_sql: str, c: list[float]) -> str:
@@ -200,12 +200,12 @@ _EMB_DIM = 64  # the embeddings width every paired oracle hardcodes
 
 
 def _dot_sql_cols(x: str, y: str, dim: int) -> str:
-    """Unrolled column×column dot product — the vector_index._unrolled_dot
-    shape (proven bit-identical to the zip_with/aggregate fold over 2.5M
-    real pairs, SCALE.md r15): plain GetArrayItem/Cast/Multiply/Add that
-    whole-stage codegen compiles, where the fold is CodegenFallback —
-    interpreted per row, the measured dominator of every pair-scoring
-    plan in this module."""
+    """Unrolled column×column dot product — the serve rescore's unrolled
+    tree (vector_index._cosine_col; proven bit-identical to the
+    zip_with/aggregate fold over 2.5M real pairs, SCALE.md r15): plain
+    GetArrayItem/Cast/Multiply/Add that whole-stage codegen compiles,
+    where the fold is CodegenFallback — interpreted per row, the
+    measured dominator of every pair-scoring plan in this module."""
     s = "CAST(0.0 AS DOUBLE)"
     for i in range(dim):
         s = f"({s} + (CAST({x}[{i}] AS DOUBLE) * CAST({y}[{i}] AS DOUBLE)))"
@@ -346,7 +346,7 @@ def sim_search_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
     query set as TWO SUCCESSIVE BATCHES through the same handle — the
     production call pattern the handle exists for (model read, centroid
     frame and rescore tree built once, amortized across calls). Full
-    probe plus the default rescorer keep every serve EXACT — identical
+    probe plus the rescore tree keep every serve EXACT — identical
     fold expressions and tiebreak as the in-plan brute force — so the
     UNION of the two batches pairs with the same DuckDB oracle as
     ``sim_search``/``sim_search_index``: oracle-hash evidence that
@@ -882,93 +882,6 @@ def _ivf_serve(e: DataFrame, cvs: list[list[float]]) -> DataFrame:
 # registered: the two were separate rows-only entries in r1/r2 and the
 # catalog must fit the driver's 50-query sweep window.
 QUERIES["sim_search_ivf_lloyd"] = sim_search_ivf_lloyd
-
-
-# one per-process index dir, the _SIM_IDX_DIR recipe (r12 advice)
-_SIM_BAL_DIR: dict = {"path": None}
-
-# The KEY's width: 768 — TRUE production embedding width, strictly past
-# the unrolled left-spine cliff (StackOverflowError at 384, measured —
-# SCALE.md r16). r16 pinned this key at 384 because driver-side plan
-# processing of the Column-API tree cost ~60 s/invocation at 768; the
-# r17 SQL-text builders collapsed that to ~13 ms (SCALE.md r17,
-# tools/warm_serve_probe.py), so the key now evidences the width the
-# balanced path exists for (key measured 17–28 s/invocation at sf0.01,
-# in the heavy-key band of the sweep).
-_BAL_DIM = 768
-
-
-@q("sim_search_balanced")
-def sim_search_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WIDE-dim persisted-index serve through the r16 BALANCED rescorer
-    — driver evidence for the production-width path. The testdata's
-    embeddings are 64-dim, so each vec_id is deterministically expanded
-    to a _BAL_DIM-wide vector in-plan (xxhash64 per dimension — pure
-    expressions, no Python), the IVF index is built over the wide
-    vectors (by_label centroids: deterministic, no k-means iteration
-    order in the loop), and the standard query set is served
-    DataFrame-native with ``rescorer="balanced"`` — the pairwise-tree
-    cosine that is the only in-JVM fast path at widths the unrolled
-    left spine cannot build (Catalyst recursion is O(dim), measured
-    fatal at 384; SCALE.md r16).
-
-    Rows-only BY DESIGN (operators/_registry.py discipline): pairwise
-    summation is a different IEEE order than the sequential fold, so
-    cosine bits are not oracle-pinnable. The invariants are test-pinned
-    instead: neighbor sets equal to the fold serve on the same index
-    except genuine ties, cosines within 1e-9, and run-to-run
-    determinism (tests/test_vector_index.py)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from .vector_index import build_vector_index, search_vector_index_df
-
-    e = table(spark, sf_dir, "embeddings")
-    # ONE HOF expression, not a 768-element array literal: the literal
-    # form generates ~768 statements in a single method and janino's
-    # per-statement recursion (buildLocalVariableMap) can overflow the
-    # compile thread's stack on a VANILLA driver session (observed on
-    # local[8]/1g while the tuned session survived — a stack-depth
-    # coin flip this key must not take; the transform is CodegenFallback
-    # but runs once over 500 rows)
-    wide = e.select(
-        "vec_id",
-        "label",
-        F.expr(
-            f"transform(sequence(0, {_BAL_DIM - 1}), d -> "
-            "cast(pmod(xxhash64(vec_id, d), 1000) as float) / 1000.0 - 0.5)"
-        ).alias("embedding"),
-    )
-    if _SIM_BAL_DIR["path"] is None:
-        _SIM_BAL_DIR["path"] = tempfile.mkdtemp(prefix="sdt_simsearchbal_")
-        atexit.register(shutil.rmtree, _SIM_BAL_DIR["path"], ignore_errors=True)
-    path = _SIM_BAL_DIR["path"]
-    qdf = wide.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    # Scope shuffle.partitions to the 500-row corpus (restored below —
-    # the bench.py smallInputBytes / eager-serve hugeMethodLimit
-    # precedent): a vanilla session's 200 default partitions made every
-    # serve stage pay 200 × the PER-TASK instantiation of the ~7k-node
-    # interpreted wide-dim tree (measured 75 s serve + 17 s collect at
-    # 510 rows, local[8]; 16 partitions collapse it to seconds), and the
-    # serve's eager persist pins the plan so AQE cannot coalesce it
-    # away. At real scale partition counts size to DATA, amortizing the
-    # per-task tree init — this key's corpus is fixed-tiny by contract.
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prev_shuffle = spark.conf.get(shuffle_key)
-    spark.conf.set(shuffle_key, "16")
-    try:
-        build_vector_index(spark, wide, path, centroids="by_label")
-        # full probe (n_probe clamps to the cell count): the serve is
-        # exact modulo summation order, so the rn ordering is the
-        # brute-force one
-        return search_vector_index_df(
-            spark, path, qdf, top_k=_TOP_K, n_probe=64, rescorer="balanced"
-        )
-    finally:
-        spark.conf.set(shuffle_key, prev_shuffle)
 
 
 def _lloyd_refine(e: DataFrame, cvs: list[list[float]], iters: int = 3) -> list[list[float]]:

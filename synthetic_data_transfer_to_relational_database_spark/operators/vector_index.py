@@ -93,7 +93,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import threading
 import warnings
 from concurrent.futures import ThreadPoolExecutor
 
@@ -1230,122 +1229,15 @@ def search_vector_index(
         .select(
             "query_id",
             "vec_id",
-            # auto: the codegen-able unrolled tree at known small dims,
-            # the HOF fold otherwise — bit-identical either way
-            _cosine_col(dim, "auto"),
+            # the codegen-able unrolled tree at known small dims under a
+            # low hugeMethodLimit, the HOF fold otherwise — bit-identical
+            _cosine_col(dim, spark),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
     return scored.select(
         "query_id", "vec_id", "cosine", F.row_number().over(w).alias("rn")
     ).filter(F.col("rn") <= top_k)
-
-
-# Above this dimension the unrolled cosine's expression tree (3×dim
-# GetArrayItem·Cast·Multiply·Add nodes) stops being obviously cheap to
-# analyze/compile, and codegen method-splitting territory begins — the
-# fold is the proven fallback there. r19 (verdict item 7): ONE cap
-# shared with the literal-tree paths (similarity._LIT_UNROLL_MAX_DIM,
-# 256 — covers every common embedding width this engine targets, the
-# testdata is 64-dim) instead of two drift-prone 256 constants.
-_UNROLL_MAX_DIM = _LIT_UNROLL_MAX_DIM
-
-# Serializes the eager forced-unrolled serve's session-global
-# hugeMethodLimit set/restore (r15 advice): without it, two concurrent
-# forced-unrolled serves can interleave set and restore and leave the
-# lowered limit applied for the rest of the session.
-_HUGE_LIMIT_LOCK = threading.Lock()
-
-
-def _unrolled_dot(x: str, y: str, dim: int):
-    """The serve fold, unrolled: ``((0.0 + x[0]*y[0]) + x[1]*y[1]) + …``
-    — the IDENTICAL left-associated IEEE tree as ``_fold_sum`` over
-    ``zip_with`` (same initial 0.0 accumulator, same operand order), so
-    results are bit-identical (test-pinned, and probed over 2.5M real
-    pairs: zero bitwise differences). The difference is execution:
-    ``aggregate``/``zip_with`` lambda trees are CodegenFallback —
-    interpreted per row, the measured dominator of both serve paths
-    (SCALE.md r13/r14) — while this tree is plain
-    GetArrayItem/Cast/Multiply/Add with no Python pipe at all (no
-    Arrow heavy-tail/stall exposure, the r14 un-adoption's
-    motivation). Speed is CONF-DEPENDENT, measured both ways at the
-    5k-query serve probe (SCALE.md r15): under default whole-stage
-    codegen the fused stage emits one method past the JIT's ~8 KB
-    bytecode limit and runs in the bytecode interpreter — 2.4× SLOWER
-    than the fold — while with
-    ``spark.sql.codegen.hugeMethodLimit=8000`` Spark rejects that
-    method, falls back per-stage, per-expression codegen splits this
-    tree into JIT-able submethods, and the serve reads 5.6 s vs the
-    fold's 17.0 s (3.1×). Hence the ``auto`` gate in ``_cosine_col``.
-
-    BUILT AS ONE SQL STRING, not Column arithmetic (r17): the
-    Column-API form issued ~4 py4j round-trips per element and
-    measured 25.6 s to BUILD at dim 768 (the r16 "~60 s/invocation"
-    driver cost, mis-attributed then to Catalyst — the measured
-    Catalyst share is 0.5 s; tools/warm_serve_probe.py). SQL's
-    left-associative ``+`` parses iteratively to the IDENTICAL left
-    spine in ~3 ms, and the parsed tree is the same
-    GetArrayItem/Cast/Multiply/Add nodes — bit-identity re-pinned
-    against the Column form in tests.
-
-    r19 (verdict item 7): delegates to ``similarity._dot_sql_cols`` —
-    ONE audited construction of the bit-identity-critical tree instead
-    of two drift-prone copies. The textual seed differs
-    (``CAST(0.0 AS DOUBLE)`` vs the old ``0.0D``) but both fold to the
-    same double Literal before execution; the left spine and every
-    operand are unchanged (bit-identity tests re-pinned)."""
-    return F.expr(_dot_sql_cols(x, y, dim))
-
-
-# The balanced tree's own cap, measured two-sided like the unrolled
-# one: serve-green at 768 (2.0x over the fold) and 1536 (2.0x), while
-# at 3072 JANINO's own recursion dies (StackOverflowError inside
-# buildLocalVariableMap over the ~9k-statement split method — the JVM
-# goes down with it, r16 pair probe). Catalyst is fine at any of these
-# depths (the tree is log2-deep); the binding constraint is janino's
-# per-statement recursion, which is O(statement count) = O(dim).
-_BALANCED_MAX_DIM = 1536
-
-
-def _balanced_dot(x: str, y: str, dim: int):
-    """PAIRWISE (balanced-tree) dot product for WIDE dims: the unrolled
-    left spine's Catalyst recursion is O(dim) and measurably fatal past
-    256 (dim 384 throws ``StackOverflowError`` during analysis, dim 768
-    killed the driver JVM — r16 dim probe), so production embedding
-    widths (768/1536/3072) could not reach the in-JVM fast path at all.
-    A balanced tree keeps the node count (~3×dim per dot) but cuts the
-    recursion depth to ``ceil(log2 dim)`` — depth 12 at 3072 — so wide
-    plans analyze fine and per-expression codegen splits the subtrees
-    into JIT-able methods.
-
-    CONTRACT: NOT bit-identical to the sequential fold (IEEE addition
-    is not associative; pairwise grouping sums in a different order —
-    the same numeric profile as numpy's pairwise summation in the
-    deprecated arrow path, typically CLOSER to the exact sum than the
-    sequential fold). Oracle-pinned callers and ``auto`` therefore
-    never pick it; it is the explicit wide-dim opt-in with the
-    neighbor-parity guarantee (test-pinned: same neighbor sets as the
-    fold except on genuine cosine ties, cosines within ulps).
-
-    BUILT AS ONE SQL STRING like ``_unrolled_dot`` (r17): the pairwise
-    grouping is emitted as parenthesized text — nesting depth
-    ``ceil(log2 dim)``, trivial for the parser — and parsed JVM-side
-    in ~5 ms at dim 1536 vs ~26 s of py4j Column building at 768
-    (tools/warm_serve_probe.py). The parsed tree is node-for-node the
-    Column-API tree (bit-identity between the two forms re-pinned in
-    tests; the CONTRACT vs the fold is unchanged — pairwise, not
-    sequential)."""
-    terms = [
-        f"cast({x}[{i}] as double) * cast({y}[{i}] as double)" for i in range(dim)
-    ]
-    while len(terms) > 1:
-        paired = [
-            f"({terms[i]} + {terms[i + 1]})" for i in range(0, len(terms) - 1, 2)
-        ]
-        if len(terms) % 2:
-            paired.append(terms[-1])
-        terms = paired
-    return F.expr(terms[0])
 
 
 # The JVM JIT refuses to compile methods over ~8000 bytecode bytes
@@ -1356,126 +1248,41 @@ def _balanced_dot(x: str, y: str, dim: int):
 # compiled method and falls back to non-whole-stage execution for that
 # one stage, where per-expression codegen splits the unrolled tree into
 # JIT-able submethods — measured 5.6 s vs the fold's 17.0 s (3.1×) at
-# the 5k-query serve probe. ``auto`` therefore picks the unrolled tree
-# only when the ACTIVE session's hugeMethodLimit makes it fast.
+# the 5k-query serve probe. ``_cosine_col`` therefore picks the unrolled
+# tree only when the session's hugeMethodLimit makes it fast.
 _JIT_METHOD_LIMIT = 8000
 
 
-def _session_huge_method_limit(spark: SparkSession | None = None) -> int:
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        return 65535
-    try:
-        return int(spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535"))
-    except Exception:  # noqa: BLE001 - conf read best-effort, default wins
-        return 65535
+def _cosine_col(dim: int, spark: SparkSession):
+    """The serve paths' cosine column over joined (qv, cv) pairs, built
+    as one of two BIT-IDENTICAL trees (the dispatch is an execution
+    choice, never a semantics one):
 
+    * the unrolled ``((0.0 + qv[0]*cv[0]) + qv[1]*cv[1]) + …`` tree
+      (``similarity._dot_sql_cols`` — the identical left-associated IEEE
+      sum as the fold, same 0.0 seed and operand order; test-pinned)
+      when the model knows a dim in ``(0, _LIT_UNROLL_MAX_DIM]`` AND the
+      session's ``spark.sql.codegen.hugeMethodLimit`` is at or under
+      ``_JIT_METHOD_LIMIT`` (the conf under which it is fast, see
+      there). It is built as SQL text: the parser folds the left spine
+      in ms, where Column arithmetic paid ~4 py4j round-trips per
+      element (SCALE.md r17).
+    * the ``aggregate``/``zip_with`` fold otherwise — wide or unknown
+      dims, and every vanilla session.
 
-def _resolve_rescorer(dim: int, rescorer: str, spark: SparkSession | None = None) -> str:
-    """``auto`` resolves to the unrolled in-JVM tree when (a) the model
-    knows a dim within ``_UNROLL_MAX_DIM`` AND (b) the active session's
-    ``spark.sql.codegen.hugeMethodLimit`` is at or under the JIT's
-    method-size limit — the conf that makes the unrolled tree fast
-    (3.1× over the fold, measured; see ``_JIT_METHOD_LIMIT`` above for
-    the mechanism) is the same one gating its selection, so a vanilla
-    session keeps the proven fold and never regresses. Both are
-    bit-identical, so the dispatch is an execution-strategy choice,
-    never a semantics one. Exposed separately from ``_cosine_col`` so
-    the warm handle can know WHICH tree it cached (its eager conf scope
-    keys off the resolved mode — r17 review). ``spark`` threads the
-    CALLER'S session into the conf read (r17 advice #3): in a
-    multi-session process ``getActiveSession()`` can belong to a
-    different session than the one this resolution will serve and
-    conf-scope, and the two must agree."""
-    if rescorer != "auto":
-        return rescorer
-    return (
-        "unrolled"
-        if 0 < dim <= _UNROLL_MAX_DIM
-        and _session_huge_method_limit(spark) <= _JIT_METHOD_LIMIT
-        else "hof"
-    )
-
-
-def _cosine_col(dim: int, rescorer: str, spark: SparkSession | None = None):
-    """The serve paths' cosine column over joined (qv, cv) pairs —
-    ``rescorer`` resolution per ``_resolve_rescorer``. ``arrow`` stays
-    the explicit opt-in (median ~2× at 10k+ queries, heavy tail —
-    SCALE.md r14)."""
-    mode = _resolve_rescorer(dim, rescorer, spark)
-    if mode == "arrow":
-        return _arrow_cosine()(F.col("qv"), F.col("cv")).alias("cosine")
-    if mode == "unrolled":
-        if not 0 < dim <= _UNROLL_MAX_DIM:
-            raise ValueError(
-                f"rescorer 'unrolled' needs a known dim in (0, "
-                f"{_UNROLL_MAX_DIM}], the index model has dim={dim!r} — "
-                "use 'auto' (falls back to the fold), 'hof', or "
-                "'balanced' (wide dims, neighbor-parity contract)"
-            )
-        return (
-            _unrolled_dot("qv", "cv", dim)
-            / (
-                F.sqrt(_unrolled_dot("qv", "qv", dim))
-                * F.sqrt(_unrolled_dot("cv", "cv", dim))
-            )
-        ).alias("cosine")
-    if mode == "balanced":
-        if not 0 < dim <= _BALANCED_MAX_DIM:
-            raise ValueError(
-                f"rescorer 'balanced' needs a known dim in (0, "
-                f"{_BALANCED_MAX_DIM}], the index model has dim={dim!r} — "
-                "use 'auto' or 'hof'"
-            )
-        return (
-            _balanced_dot("qv", "cv", dim)
-            / (
-                F.sqrt(_balanced_dot("qv", "qv", dim))
-                * F.sqrt(_balanced_dot("cv", "cv", dim))
-            )
-        ).alias("cosine")
-    # the sequential IEEE fold — bit-identical to the unrolled tree and
-    # the oracle-pinned sim_search expressions
-    dot = _fold_sum("zip_with(qv, cv, (a, b) -> cast(a as double) * cast(b as double))")
-    nq = _fold_sum("transform(qv, a -> cast(a as double) * cast(a as double))")
-    nc = _fold_sum("transform(cv, b -> cast(b as double) * cast(b as double))")
+    ``spark`` is the CALLER'S session (in a multi-session process
+    ``getActiveSession()`` may be another one). The conf is only read
+    here, never written."""
+    huge = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535"))
+    if 0 < dim <= _LIT_UNROLL_MAX_DIM and huge <= _JIT_METHOD_LIMIT:
+        dot, nq, nc = (
+            _dot_sql_cols(x, y, dim) for x, y in (("qv", "cv"), ("qv", "qv"), ("cv", "cv"))
+        )
+    else:
+        dot = _fold_sum("zip_with(qv, cv, (a, b) -> cast(a as double) * cast(b as double))")
+        nq = _fold_sum("transform(qv, a -> cast(a as double) * cast(a as double))")
+        nc = _fold_sum("transform(cv, b -> cast(b as double) * cast(b as double))")
     return (F.expr(dot) / (F.sqrt(F.expr(nq)) * F.sqrt(F.expr(nc)))).alias("cosine")
-
-
-def _arrow_cosine():
-    """Arrow-vectorized cosine over joined (qv, cv) pairs — the
-    measured alternative to the HOF folds (r13 verdict: the
-    ``aggregate``/``zip_with`` folds are CodegenFallback and the
-    dominator of both serve paths at 5k queries). One numpy matmul-ish
-    ``einsum`` per Arrow batch instead of an interpreted per-row
-    expression tree. NOT bit-identical to the sequential HOF fold
-    (numpy uses pairwise summation), so oracle-pinned callers keep the
-    HOF path; the CLI/batch serve opts in via ``rescorer="arrow"``.
-
-    DEPRECATED since r16: strictly dominated by the unrolled in-JVM
-    tree everywhere measured (5k-query serve probe: arrow 16.3 s vs
-    unrolled 3.9 s vs fold 14.4 s) while carrying the r14 heavy-tail /
-    one-observation indefinite-stall caveat. Kept for comparison runs
-    and as the only rescorer whose per-pair cost is dim-independent in
-    Python (numpy einsum) — not recommended for anything unattended."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _cos(qv, cv):
-        qm = np.array(qv.tolist(), dtype=np.float64)
-        cm = np.array(cv.tolist(), dtype=np.float64)
-        dots = np.einsum("ij,ij->i", qm, cm)
-        nq = np.einsum("ij,ij->i", qm, qm)
-        nc = np.einsum("ij,ij->i", cm, cm)
-        return pd.Series(dots / (np.sqrt(nq) * np.sqrt(nc)))
-
-    # real (non-string) annotations: the module's `from __future__
-    # import annotations` would stringify inline hints, and pandas_udf's
-    # type-hint inference cannot resolve 'pd.Series' against a
-    # function-local import
-    _cos.__annotations__ = {"qv": pd.Series, "cv": pd.Series, "return": pd.Series}
-    return pandas_udf(_cos, "double")
 
 
 class VectorIndexServer:
@@ -1485,15 +1292,14 @@ class VectorIndexServer:
     is a one-shot wrapper over this class, so the two are row-identical
     by construction (one code path).
 
-    What construction amortizes, measured at dim 768
-    (tools/warm_serve_probe.py, SCALE.md r17): the model JSON read +
-    centroid validation, the broadcast centroid row, and the rescore
-    cosine column. With the r17 SQL-text tree builders the cosine build
-    itself is already ~3 ms (it was the r16 "~60 s/invocation" cost —
-    py4j Column round-trips, not Catalyst), so the remaining per-call
-    win is the model read + centroid frame; at production call rates
-    the handle also keeps 'auto' resolution and validation out of the
-    hot path entirely.
+    What construction amortizes, measured at dim 768 (SCALE.md r17):
+    the model JSON read + centroid validation, the broadcast centroid
+    row, and the rescore cosine column. With the r17 SQL-text tree
+    builders the cosine build itself is already ~3 ms (it was the r16
+    "~60 s/invocation" cost — py4j Column round-trips, not Catalyst), so
+    the remaining per-call win is the model read + centroid frame; at
+    production call rates the handle also keeps the tree choice and
+    validation out of the hot path entirely.
 
     SNAPSHOT CONTRACT, epoch-fenced: the handle pins the model read at
     construction — the same scope snapshot any single serve call takes —
@@ -1505,16 +1311,11 @@ class VectorIndexServer:
     silently serving stale scope names (after a compaction the old
     snapshot's scope list matches nothing but the build partition —
     silent wrong results, the r17 review's finding); ``repin()`` the
-    handle or construct a new one. ``auto`` resolves its execution
-    strategy once, against the session conf AT CONSTRUCTION (the
-    one-shot wrapper re-resolves per call because it constructs per
-    call), and the eager conf scope keys off the RESOLVED mode so a
-    cached auto-resolved unrolled tree keeps its enabling conf even if
-    the session conf changed after construction.
+    handle or construct a new one. The cosine tree (``_cosine_col``) is
+    chosen once, against the session conf AT CONSTRUCTION (the one-shot
+    wrapper chooses per call because it constructs per call).
 
-    Thread-safety: ``search`` is safe to call concurrently; the
-    forced-rescorer eager conf scope serializes behind the module lock
-    exactly as the one-shot path does."""
+    Thread-safety: ``search`` is safe to call concurrently."""
 
     def __init__(
         self,
@@ -1522,14 +1323,7 @@ class VectorIndexServer:
         path: str,
         top_k: int = 5,
         n_probe: int = 2,
-        rescorer: str = "auto",
     ) -> None:
-        if rescorer not in ("auto", "unrolled", "balanced", "hof", "arrow"):
-            # validate BEFORE any distributed work: a typo must not pay
-            # the model read first (r14 review)
-            raise ValueError(
-                f"unknown rescorer {rescorer!r} (auto | unrolled | balanced | hof | arrow)"
-            )
         self._spark = spark
         self._path = _norm_path(path)
         self._meta = read_meta(self._path, spark)
@@ -1543,7 +1337,6 @@ class VectorIndexServer:
         self._dim = int(self._meta.get("dim") or 0)
         self._top_k = top_k
         self._n_probe = n_probe
-        self._rescorer = rescorer
         # the staleness fence (r17 review): every COMMIT meta write
         # (refresh, stream batch, compaction) bumps commit_epoch, so a
         # per-search compare detects any out-of-band change. Without it
@@ -1551,20 +1344,8 @@ class VectorIndexServer:
         # build partition only (_live_scope_filter selects scope names
         # that no longer exist).
         self._epoch = int(self._meta.get("commit_epoch", -1))
-        # built HERE so a forced rescorer without a usable dim fails at
-        # construction, before any serve pays the ranking fold; 'auto'
-        # resolves against THIS handle's session conf (r17 advice #3)
-        # once, now — and the RESOLVED mode is kept because the eager
-        # conf scope must key off which tree was actually cached, not
-        # what was requested (an auto-resolved unrolled tree
-        # materializing after the session conf was restored would run
-        # interpreted, the 2.4×-slower case). The cached column is built
-        # FROM the resolved mode (r17 advice #2): a second independent
-        # 'auto' resolution inside _cosine_col could race a concurrent
-        # conf change and cache a tree that disagrees with the mode the
-        # conf scope keys off.
-        self._resolved = _resolve_rescorer(self._dim, rescorer, spark)
-        self._cosine = _cosine_col(self._dim, self._resolved, spark)
+        # chosen against THIS handle's session conf (r17 advice #3)
+        self._cosine = _cosine_col(self._dim, spark)
         self._cents_row = spark.createDataFrame(
             [([(cid, cv) for cid, cv in self._cents],)],
             "__cents array<struct<cell_id:int,cv:array<double>>>",
@@ -1576,10 +1357,9 @@ class VectorIndexServer:
         longer need a fresh handle after every refresh/stream/compact
         commit: ``repin`` re-reads the model and rebuilds only the
         invalidated warm pieces — the meta snapshot, the centroid
-        broadcast row, and the fence epoch; the rescore tree (and the
-        'auto' execution-strategy resolution) are rebuilt only when the
-        model's dim changed, since they depend on nothing else in the
-        model. Fence semantics are exactly the snapshot contract's: a
+        broadcast row, and the fence epoch; the rescore tree is rebuilt
+        only when the model's dim changed, since it depends on nothing
+        else in the model. Fence semantics are exactly the snapshot contract's: a
         ``search`` between an out-of-band commit and the ``repin`` still
         raises; nothing here weakens the staleness guarantee — it just
         makes recovery a method call instead of a reconstruction.
@@ -1598,8 +1378,7 @@ class VectorIndexServer:
             raise ValueError(f"index at {self._path} has no centroids — rebuild it")
         new_dim = int(meta.get("dim") or 0)
         if new_dim != self._dim:
-            self._resolved = _resolve_rescorer(new_dim, self._rescorer, self._spark)
-            self._cosine = _cosine_col(new_dim, self._resolved, self._spark)
+            self._cosine = _cosine_col(new_dim, self._spark)
             self._dim = new_dim
         self._meta = meta
         self._cents = cents
@@ -1647,7 +1426,6 @@ class VectorIndexServer:
         n_probe = self._n_probe if n_probe is None else n_probe
         n_probe = max(1, min(n_probe, len(self._cents)))
         dim = self._dim
-        rescorer = self._resolved
         cosine = self._cosine
         qv_ok = queries_df.select(
             F.col("query_id").cast("bigint").alias("query_id"), F.col("qv")
@@ -1714,57 +1492,13 @@ class VectorIndexServer:
                 # materialize the (small) serve result BEFORE the finally
                 # block releases the ranked-queries cache: later actions on
                 # the returned frame read the cached result, never re-walk
-                # the lineage into the released frame. An EXPLICITLY forced
-                # unrolled/balanced rescorer also gets its enabling conf
-                # scoped around this one materialization (the CLI's
-                # courtesy, here for library callers): without
-                # hugeMethodLimit at or under the JIT limit the unrolled
-                # tree measures 2.4× SLOWER than the fold — a silent
-                # foot-gun for an eager caller who asked for the fast
-                # path. 'auto' never lands here with an unset conf (it
-                # resolves against the conf), and eager=False can't be
-                # helped (the caller owns execution time), so this covers
-                # exactly the surprising case. Perf-only caveats (both
-                # documented rather than fixed): an UNRELATED query on
-                # another thread of the same session that runs inside this
-                # window sees the lowered limit (stage fallback for
-                # 8000–65535-byte generated methods — never wrong
-                # results); and if the persisted result is later evicted
-                # and recomputed, the recompute runs under the restored
-                # conf (interpreted fold speed, identical bits).
-                huge_key = "spark.sql.codegen.hugeMethodLimit"
-                locked = rescorer in ("unrolled", "balanced")
-                if locked:
-                    # (r16 advice, both items) acquire FIRST and decide
-                    # under the lock: deciding from a pre-lock conf read
-                    # races a concurrent holder whose temporarily-lowered
-                    # 8000 would make this serve skip the scope entirely —
-                    # and then materialize AFTER the holder restores 65535,
-                    # running the forced tree interpreted (the 2.4×-slower
-                    # case the scope exists to prevent). And everything
-                    # from acquire onward sits inside try/finally so a
-                    # raising conf.get/set (stopped session) cannot leave
-                    # the lock held forever, deadlocking every later
-                    # forced-rescorer eager serve in the process.
-                    _HUGE_LIMIT_LOCK.acquire()
-                prev_huge = None
+                # the lineage into the released frame
+                out = out.persist()
                 try:
-                    if locked and _session_huge_method_limit(spark) > _JIT_METHOD_LIMIT:
-                        prev_huge = spark.conf.get(huge_key, "65535")
-                        spark.conf.set(huge_key, str(_JIT_METHOD_LIMIT))
-                    out = out.persist()
-                    try:
-                        out.count()
-                    except Exception:
-                        out.unpersist()  # nothing returned — release the mark
-                        raise
-                finally:
-                    try:
-                        if prev_huge is not None:
-                            spark.conf.set(huge_key, prev_huge)
-                    finally:
-                        if locked:
-                            _HUGE_LIMIT_LOCK.release()
+                    out.count()
+                except Exception:
+                    out.unpersist()  # nothing returned — release the mark
+                    raise
             returned = True
             return out
         finally:
@@ -1784,7 +1518,6 @@ def search_vector_index_df(
     top_k: int = 5,
     n_probe: int = 2,
     eager: bool = True,
-    rescorer: str = "auto",
 ) -> DataFrame:
     """DataFrame-native serve (r12 verdict #4): same answer as
     ``search_vector_index`` — row-identical, test-pinned — but the
@@ -1835,6 +1568,6 @@ def search_vector_index_df(
     # _fence=False: construction read the full model microseconds ago —
     # a second read for the one-shot's single search proves nothing and
     # costs a meta I/O per call (r17 advice #4)
-    return VectorIndexServer(spark, path, rescorer=rescorer).search(
+    return VectorIndexServer(spark, path).search(
         queries_df, top_k=top_k, n_probe=n_probe, eager=eager, _fence=False
     )

@@ -472,7 +472,7 @@ class GenerationPlan:
     def _build_table(self, table: TableSpec) -> DataFrame:
         n = self.rows_for(table.name)
         self._row_count_of[table.name] = n
-        infer_table_rules(table)
+        infer_table_rules(table, self._row_count_of)
         self._pk_expr_fns[table.name] = self._pk_expr_fn(table)
 
         df = self._id_frame(n)

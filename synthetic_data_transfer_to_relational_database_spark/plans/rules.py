@@ -198,16 +198,30 @@ def _pk_safe_rule(col: ColumnSpec, inferred: str) -> str:
 _INJECTIVE_RULES = ("uuid4", "seq_int", "seq_code", "seq_date", "seq_timestamp", "seq_decimal")
 
 
-def _enforce_unique_indexes(table: TableSpec) -> None:
+def _enforce_unique_indexes(table: TableSpec, parent_rows: dict[str, int]) -> None:
     """Unique business keys (CREATE UNIQUE INDEX, e.g. uBankaUlkeKod
     script.sql:2621): tuple uniqueness follows from ANY injective member,
     so switch one member column per index to an injective rule. Non-FK
     members are preferred (a local rule change); an index made of FK
-    columns only marks its first member ``unique`` instead — the executor
-    then samples that parent WITHOUT replacement (affine permutation).
-    The reference knowingly violates these constraints (SURVEY.md §1.3)."""
+    columns only marks one member ``unique`` instead — the one with the
+    most parent rows (``parent_rows``; the first on a tie), which has the
+    most room — and the executor then samples that parent WITHOUT
+    replacement (affine permutation).
+    The reference knowingly violates these constraints (SURVEY.md §1.3).
+
+    The PK tuple goes through the same rule: its non-FK members already
+    carry injective rules (``_pk_safe_rule``), but a PK made only of FK
+    columns (``AspNetUserRoles (UserId, RoleId)``) would otherwise sample
+    every member with replacement and repeat tuples. A shared-PK subtype
+    is exempt — the executor samples its parent without replacement. A
+    member of a composite PK is not unique on its own, so it covers an
+    index only when it is the whole PK."""
     pk = set(table.pk)
-    for idx_cols in table.unique_indexes:
+    # (columns, whether a PK member already covers the tuple)
+    tuples = [(cols, len(pk) == 1) for cols in table.unique_indexes]
+    if table.shared_pk_fk() is None:
+        tuples.insert(0, (table.pk, False))
+    for idx_cols, pk_covers in tuples:
         members: list[ColumnSpec] = []
         covered = False
         for name in idx_cols:
@@ -215,7 +229,7 @@ def _enforce_unique_indexes(table: TableSpec) -> None:
                 c = table.column(name)
             except KeyError:
                 continue
-            if c.identity or c.name in pk or c.unique:
+            if c.identity or c.unique or (pk_covers and c.name in pk):
                 covered = True
                 break
             base = (c.rule or "").partition(":")[0]
@@ -245,7 +259,10 @@ def _enforce_unique_indexes(table: TableSpec) -> None:
             fk_members = [c for c in members if c.fk_parent]
             if fk_members:
                 # without-replacement parent sampling (executor._sample_idx)
-                fk_members[0].unique = True
+                max(
+                    fk_members,
+                    key=lambda c: parent_rows.get(c.fk_parent.partition(".")[0], 0),
+                ).unique = True
 
 
 # F4/F5: system/framework tables excluded from generation by default
@@ -255,10 +272,14 @@ DEFAULT_SKIP_TABLES = ("__EFMigrationsHistory", "sysdiagrams", "dtproperties")
 DEFAULT_SKIP_COLUMNS = ("LogId", "CreateDate", "CreatedBy", "UpdateDate", "UpdatedBy")
 
 
-def infer_table_rules(table: TableSpec) -> dict[str, str]:
+def infer_table_rules(
+    table: TableSpec, parent_rows: dict[str, int] | None = None
+) -> dict[str, str]:
     """Rule map for every generated column of a table (the data_rules.json
     shape: {column: "provider[:args]"}). PK columns are forced to
-    injective rules so generated keys are unique."""
+    injective rules so generated keys are unique. ``parent_rows`` (table
+    name → row count) picks which FK member of an all-FK key samples
+    without replacement."""
     out = {}
     pk = set(table.pk)
     for c in table.generated_columns:
@@ -266,7 +287,7 @@ def infer_table_rules(table: TableSpec) -> dict[str, str]:
         if c.name in pk:
             rule = _pk_safe_rule(c, rule)
         c.rule = rule
-    _enforce_unique_indexes(table)
+    _enforce_unique_indexes(table, parent_rows or {})
     for c in table.generated_columns:
         out[c.name] = c.rule
     return out

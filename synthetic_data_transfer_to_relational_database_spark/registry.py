@@ -47,9 +47,9 @@ _MODULES = [
 #      text_doc_pairs_jaccard / text_containment (verification rewritten
 #      to array_intersect over grouped token sets), vector_norms (local
 #      folds unrolled), the persisted-index serves sim_search_index /
-#      sim_search_warm / sim_search_balanced / embedding_index_refresh
-#      (ride the _lit_build_path size dispatch AND the _unrolled_dot
-#      delegation to similarity._dot_sql_cols), sim_search_ivf_lloyd /
+#      sim_search_warm / embedding_index_refresh (ride the
+#      _lit_build_path size dispatch AND the serve's unrolled tree from
+#      similarity._dot_sql_cols), sim_search_ivf_lloyd /
 #      sim_search_ivfpq (ride _ivf_serve/_lloyd_refine dispatch,
 #      rows-only), and gen_synthetic_orders / fk_sample_join (ride the
 #      generator's split()-literal array rendering). The dedup keys'
@@ -84,7 +84,6 @@ _SWEEP_FIRST = [
     "vector_norms",
     "sim_search_index",
     "sim_search_warm",
-    "sim_search_balanced",
     "embedding_index_refresh",
     "sim_search_ivf_lloyd",
     "sim_search_ivfpq",

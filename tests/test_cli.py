@@ -396,10 +396,9 @@ def test_cli_vector_index_lifecycle(spark, tmp_path, capsys):
     ]) == 0
     res = spark.read.parquet(res_out)
     assert res.count() == 15 and res.filter("rn > 3").count() == 0
-    # same search forced onto the DataFrame-native serve (threshold 1)
-    # with the DEFAULT rescorer — which is the predictable in-JVM HOF
-    # fold (r14: the Arrow path's measured heavy tail makes it opt-in),
-    # so the result is row-identical to the list path, bit for bit
+    # same search forced onto the DataFrame-native serve (threshold 1):
+    # the same in-JVM HOF fold under this session, so the result is
+    # row-identical to the list path, bit for bit
     res_out_df = str(tmp_path / "res_df")
     assert main([
         "index", "search", "--path", idx, "--queries-src", str(qsrc),
@@ -408,42 +407,6 @@ def test_cli_vector_index_lifecycle(spark, tmp_path, capsys):
     ]) == 0
     got = sorted(map(tuple, spark.read.parquet(res_out_df).collect()))
     assert got == sorted(map(tuple, res.collect()))
-    # the OPT-IN Arrow rescorer (median ~2x, not pinned bit-identical):
-    # same neighbors, cosines within an ulp of the fold
-    res_out_ar = str(tmp_path / "res_arrow")
-    assert main([
-        "index", "search", "--path", idx, "--queries-src", str(qsrc),
-        "--top-k", "3", "--n-probe", "8", "--out", res_out_ar,
-        "--df-serve-threshold", "1", "--rescorer", "arrow",
-    ]) == 0
-    ar = {(r.query_id, r.rn): (r.vec_id, r.cosine)
-          for r in spark.read.parquet(res_out_ar).collect()}
-    want = {(r.query_id, r.rn): (r.vec_id, r.cosine) for r in res.collect()}
-    assert set(ar) == set(want)
-    assert all(
-        ar[k][0] == want[k][0] and abs(ar[k][1] - want[k][1]) < 1e-9 for k in ar
-    )
-    # (r16 advice) an EXPLICIT rescorer below the df-serve threshold
-    # must still ride the DataFrame serve — the list path would ignore
-    # it silently. Pin the routing by making the list path unreachable,
-    # and the result bit-identical (unrolled's contract) to the fold.
-    from synthetic_data_transfer_to_relational_database_spark.operators import vector_index as _vi
-
-    res_out_forced = str(tmp_path / "res_forced")
-    _orig_list_serve = _vi.search_vector_index
-    _vi.search_vector_index = lambda *a, **k: (_ for _ in ()).throw(
-        AssertionError("explicit --rescorer must not take the list path")
-    )
-    try:
-        assert main([
-            "index", "search", "--path", idx, "--queries-src", str(qsrc),
-            "--top-k", "3", "--n-probe", "8", "--out", res_out_forced,
-            "--rescorer", "unrolled",
-        ]) == 0
-    finally:
-        _vi.search_vector_index = _orig_list_serve
-    got_forced = sorted(map(tuple, spark.read.parquet(res_out_forced).collect()))
-    assert got_forced == sorted(map(tuple, res.collect()))
     # compact: two committed scopes (r1 + a second refresh) fold into c1
     assert main(["index", "refresh", "--path", idx, "--src", str(qsrc)]) == 0
     capsys.readouterr()

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import io
 import contextlib
+import os
 
 import pytest
 
@@ -267,10 +268,12 @@ def test_bench_hardware_yardsticks_shape():
     # each yardstick either measured or reported failed — never absent
     assert "fsync_ms_median" in hw or "fsync_err" in hw
     assert "steal_pct" in hw or "proc_stat_err" in hw
-    assert "cpu_scale_32" in hw or "cpu_scale_err" in hw
+    assert "cpu_scale_n" in hw or "cpu_scale_err" in hw
     if "fsync_ms_median" in hw:
         # >= 0: on tmpfs-class filesystems a ~us fsync rounds to 0.0
         assert 0 <= hw["fsync_ms_median"] < 10_000
         assert hw["fsync_ms_p90"] >= hw["fsync_ms_median"]
-    if "cpu_scale_32" in hw:
-        assert hw["cpu_scale_32"] > 0
+    if "cpu_scale_n" in hw:
+        # one spin per usable CPU
+        assert hw["cpu_scale_k"] == len(os.sched_getaffinity(0))
+        assert hw["cpu_scale_n"] > 0

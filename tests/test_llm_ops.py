@@ -925,10 +925,10 @@ def test_vector_norms_unrolled_bitwise_matches_fold(spark, sf_dir):
         assert struct.pack("<2d", *new[k]) == struct.pack("<2d", *old[k]), k
 
 
-def test_lit_build_path_dispatch_and_lloyd_parity(spark, sf_dir):
+def test_lit_build_path_dispatch_and_lloyd_parity(spark, sf_dir, monkeypatch):
     """r19: the build-side literal-unroll dispatch
     (similarity._lit_build_path) must (a) route small corpora to the fold
-    form and honor the conf both ways, (b) refuse empty models and k×dim
+    form and honor the size threshold both ways, (b) refuse empty models and k×dim
     budget violations (ADVICE r18 #2/#3), and (c) produce IDENTICAL Lloyd
     centroids on both branches — the dispatch may change plan shape,
     never a result."""
@@ -941,18 +941,16 @@ def test_lit_build_path_dispatch_and_lloyd_parity(spark, sf_dir):
 
     e = table(spark, sf_dir, "embeddings")
     seeds = S._seed_centroids(e)
-    # (a) this test corpus is far below the 8 MiB default -> fold branch
+    # (a) this test corpus is far below the 4 MiB threshold -> fold branch
     assert S._lit_build_path(e, seeds) is False
-    spark.conf.set("spark.sdt.vector.litUnrollMinBytes", "0")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(S, "_LIT_UNROLL_MIN_BYTES", 0)
         assert S._lit_build_path(e, seeds) is True
-        # (b) guards still apply under a forced conf
+        # (b) guards still apply under a forced threshold
         assert S._lit_build_path(e, []) is False
         assert S._lit_build_path(e, [[0.0] * 300] * 2) is False  # dim cap
         assert S._lit_build_path(e, [[0.0] * 256] * 9) is False  # k*dim cap
         lit_cvs = S._lloyd_refine(e, seeds, iters=2)
-    finally:
-        spark.conf.unset("spark.sdt.vector.litUnrollMinBytes")
     fold_cvs = S._lloyd_refine(e, seeds, iters=2)
     # (c) bit-identical centroids either way
     import struct

@@ -331,3 +331,67 @@ def test_unenforceable_unique_index_not_falsely_claimed():
     )
     infer_table_rules(t)
     assert not t.column("Oran").unique
+
+
+def _all_fk_pk_schema(pk: list[str]) -> dict[str, TableSpec]:
+    """The AspNetUserRoles shape: a composite PK whose every member is
+    an FK (to AspNetUsers.Id and AspNetRoles.Id)."""
+    tables = {
+        "U": TableSpec("U", [ColumnSpec("Id", "uuid", nullable=False, length=36)], pk=["Id"]),
+        "R": TableSpec("R", [ColumnSpec("Id", "uuid", nullable=False, length=36)], pk=["Id"]),
+        "UR": TableSpec(
+            "UR",
+            [
+                ColumnSpec("UserId", "uuid", nullable=False, length=36),
+                ColumnSpec("RoleId", "uuid", nullable=False, length=36),
+            ],
+            pk=pk,
+            fks=[FKSpec(["UserId"], "U", ["Id"]), FKSpec(["RoleId"], "R", ["Id"])],
+        ),
+    }
+    wire_fk_rules(tables)
+    return tables
+
+
+@pytest.mark.parametrize(
+    "seed,pk",
+    [(0, ["UserId", "RoleId"]), (1, ["UserId", "RoleId"]), (2, ["UserId", "RoleId"]),
+     (0, ["RoleId", "UserId"])],
+)
+def test_all_fk_composite_pk_never_repeats(spark, seed, pk):
+    """A PK made only of FK columns gets no injective rule from
+    _pk_safe_rule; sampled with replacement, 2,000 (user, role) pairs
+    over 2,000 × 20 parents repeat ~50 tuples. The PK tuple runs through
+    the unique-index rule, so one member samples without replacement —
+    the one over the larger parent, whatever the PK's column order (the
+    20-row parent would wrap and repeat)."""
+    built = GenerationPlan(
+        spark,
+        _all_fk_pk_schema(pk),
+        seed=seed,
+        row_counts={"U": 2_000, "R": 20, "UR": 2_000},
+    ).run()
+    ur = built["UR"]
+    assert ur.count() == 2_000
+    assert _dupes(ur, ["UserId", "RoleId"]) == 0
+    # FK closure: every member value is a parent key
+    for col, parent in (("UserId", "U"), ("RoleId", "R")):
+        orphans = ur.join(
+            built[parent], ur[col] == built[parent]["Id"], "left_anti"
+        ).count()
+        assert orphans == 0, f"{col} has {orphans} orphan values"
+
+
+def test_unique_index_over_a_composite_pk_member(spark):
+    """A member of a composite PK is not unique on its own: a unique
+    index (RoleId, Kod) beside PK (UserId, RoleId) must still get an
+    injective member, or 2,000 rows over 20 roles repeat (RoleId, Kod)."""
+    tables = _all_fk_pk_schema(["UserId", "RoleId"])
+    ur = tables["UR"]
+    ur.columns.append(ColumnSpec("Kod", "short", nullable=False))
+    ur.unique_indexes = [["RoleId", "Kod"]]
+    built = GenerationPlan(
+        spark, tables, seed=0, row_counts={"U": 2_000, "R": 20, "UR": 2_000}
+    ).run()
+    assert _dupes(built["UR"], ["RoleId", "Kod"]) == 0
+    assert _dupes(built["UR"], ["UserId", "RoleId"]) == 0

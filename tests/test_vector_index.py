@@ -836,36 +836,6 @@ def test_repeated_df_serves_leave_no_cached_rdds_behind(spark, sf_dir, tmp_path)
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_arrow_rescorer_matches_hof_neighbors(spark, sf_dir, tmp_path):
-    """The opt-in Arrow rescorer (``rescorer="arrow"``) changes the fold
-    ORDER (numpy pairwise summation vs the sequential HOF fold), so
-    cosines are not pinned bit-identical — but the returned neighbor
-    sets must agree and every cosine must match to 1e-9 on real
-    embeddings. Oracle-pinned callers keep the default HOF path."""
-    from synthetic_data_transfer_to_relational_database_spark.operators.vector_index import (
-        search_vector_index_df,
-    )
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    idx = str(tmp_path / "vidx")
-    build_vector_index(spark, e, idx, centroids="kmeans", n_cells=8)
-    qdf = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    hof = {
-        (r.query_id, r.vec_id): r.cosine
-        for r in search_vector_index_df(spark, idx, qdf, top_k=5, n_probe=8).collect()
-    }
-    arrow = {
-        (r.query_id, r.vec_id): r.cosine
-        for r in search_vector_index_df(
-            spark, idx, qdf, top_k=5, n_probe=8, rescorer="arrow"
-        ).collect()
-    }
-    assert set(hof) == set(arrow)
-    assert all(abs(hof[k] - arrow[k]) < 1e-9 for k in hof)
-
-
 def test_lifecycle_random_walk_invariants(spark, sf_dir, tmp_path, monkeypatch):
     """Seeded operation-sequence drill over the WHOLE writer surface:
     a fixed random walk of plain refreshes, stream batches, replays,
@@ -1102,17 +1072,36 @@ def test_post_commit_marker_release_failure_warns_not_raises(
     assert h["removed_markers"] == ["r1"] and h["ok"]
 
 
-def test_unrolled_rescorer_bit_identical_and_auto_dispatch(spark, sf_dir, tmp_path):
-    """r15 serve-path upgrade: the default rescorer is now 'auto' — the
-    UNROLLED dot-product tree (plain GetArrayItem/Cast/Multiply/Add,
-    whole-stage-codegen-able, no Python pipe) when the model knows a dim
-    within _UNROLL_MAX_DIM, the HOF fold otherwise. The unrolled tree is
-    the same left-associated IEEE expression as the fold (same 0.0
-    accumulator, same operand order), so this is an execution-strategy
-    dispatch, never a semantics one: pinned here as EXACT equality over
-    every (query, vec_id, cosine, rn) row on real embeddings."""
-    import pytest
+def _serve_rows(spark, idx, qdf, huge_limit, **kw):
+    """Rows of one eager DataFrame serve with the session's
+    hugeMethodLimit set to ``huge_limit`` (restored after) — the conf
+    ``_cosine_col`` reads to choose the unrolled tree or the fold."""
+    from synthetic_data_transfer_to_relational_database_spark.operators import (
+        vector_index as vi,
+    )
 
+    huge = "spark.sql.codegen.hugeMethodLimit"
+    prev = spark.conf.get(huge, "65535")
+    try:
+        spark.conf.set(huge, str(huge_limit))
+        out = vi.search_vector_index_df(spark, idx, qdf, **kw)
+        rows = sorted(map(tuple, out.collect()))
+        out.unpersist()
+    finally:
+        spark.conf.set(huge, prev)
+    return rows
+
+
+def test_unrolled_rescorer_bit_identical_and_auto_dispatch(spark, sf_dir, tmp_path):
+    """The serve's cosine is the UNROLLED dot-product tree (plain
+    GetArrayItem/Cast/Multiply/Add, whole-stage-codegen-able, no Python
+    pipe) when the model knows a dim within _LIT_UNROLL_MAX_DIM and the
+    session's hugeMethodLimit is <= 8000, the HOF fold otherwise. The
+    unrolled tree is the same left-associated IEEE expression as the
+    fold (same 0.0 accumulator, same operand order), so this is an
+    execution-strategy dispatch, never a semantics one: pinned here as
+    EXACT equality over every (query, vec_id, cosine, rn) row on real
+    embeddings."""
     from synthetic_data_transfer_to_relational_database_spark.operators import (
         vector_index as vi,
     )
@@ -1121,56 +1110,48 @@ def test_unrolled_rescorer_bit_identical_and_auto_dispatch(spark, sf_dir, tmp_pa
     idx = str(tmp_path / "vidx")
     build_vector_index(spark, base, idx, centroids="by_label")
     qdf = base.limit(30).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    conf_before = spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535")
-    rows = {}
-    for mode in ("unrolled", "hof", "auto"):
-        out = vi.search_vector_index_df(
-            spark, idx, qdf, top_k=5, n_probe=3, rescorer=mode
-        )
-        rows[mode] = sorted(map(tuple, out.collect()))
-        out.unpersist()
-    assert rows["unrolled"] == rows["hof"] == rows["auto"]  # bit-exact
-    # the eager forced-unrolled serve scopes its enabling conf around
-    # its own materialization and RESTORES it (library foot-gun guard)
-    assert spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535") == conf_before
-    # auto dispatch is CONF-GATED: the unrolled tree is only fast when
+    huge = "spark.sql.codegen.hugeMethodLimit"
+    conf_before = spark.conf.get(huge, "65535")
+    rows_u = _serve_rows(spark, idx, qdf, 8000, top_k=5, n_probe=3)
+    rows_f = _serve_rows(spark, idx, qdf, 65535, top_k=5, n_probe=3)
+    assert rows_u == rows_f and rows_u  # bit-exact
+    # the library only READS the conf: a serve leaves it as it found it
+    out = vi.search_vector_index_df(spark, idx, qdf, top_k=5, n_probe=3)
+    assert sorted(map(tuple, out.collect())) == rows_f
+    out.unpersist()
+    assert spark.conf.get(huge, "65535") == conf_before
+    # the dispatch is CONF-GATED: the unrolled tree is only fast when
     # the session's hugeMethodLimit makes Spark reject the un-JIT-able
     # fused whole-stage method (measured 2.4x SLOWER without it), so a
-    # vanilla session must resolve to the proven fold and an opted-in
-    # session (hugeMethodLimit <= 8000) to the unrolled tree
-    huge = "spark.sql.codegen.hugeMethodLimit"
-    prev = spark.conf.get(huge, "65535")
+    # vanilla session must choose the proven fold and an opted-in
+    # session (hugeMethodLimit <= 8000) the unrolled tree
     try:
         spark.conf.set(huge, "65535")
-        assert "aggregate(" in str(vi._cosine_col(64, "auto"))  # vanilla
+        assert "aggregate(" in str(vi._cosine_col(64, spark))  # vanilla
         spark.conf.set(huge, "8000")
-        assert "aggregate(" not in str(vi._cosine_col(64, "auto"))  # opted in
-        assert "aggregate(" in str(vi._cosine_col(vi._UNROLL_MAX_DIM + 1, "auto"))
-        assert "aggregate(" in str(vi._cosine_col(0, "auto"))  # unknown dim
+        assert "aggregate(" not in str(vi._cosine_col(64, spark))  # opted in
+        assert "aggregate(" in str(vi._cosine_col(vi._LIT_UNROLL_MAX_DIM + 1, spark))
+        assert "aggregate(" in str(vi._cosine_col(0, spark))  # unknown dim
     finally:
-        spark.conf.set(huge, prev)
-    with pytest.raises(ValueError, match="unrolled"):
-        vi._cosine_col(0, "unrolled")  # forced without a known dim
-    with pytest.raises(ValueError, match="unknown rescorer"):
-        vi.search_vector_index_df(spark, idx, qdf, rescorer="typo")
+        spark.conf.set(huge, conf_before)
 
 
 def test_unrolled_rescorer_at_the_dim_cap(spark, tmp_path):
-    """_UNROLL_MAX_DIM is a shipped constant, so the boundary must be
-    proven, not asserted: at dim = 256 the unrolled cosine is a
+    """_LIT_UNROLL_MAX_DIM is a shipped constant, so the boundary must
+    be proven, not asserted: at dim = 256 the unrolled cosine is a
     3×256-term tree — this builds a synthetic 256-dim index and serves
-    it with the forced unrolled rescorer under the conf that makes it
-    fast (hugeMethodLimit=8000, per-stage fallback + per-expression
+    it under the conf that selects the unrolled tree and makes it fast
+    (hugeMethodLimit=8000, per-stage fallback + per-expression
     codegen), pinning that the tree compiles and stays bit-identical to
-    the fold at the cap. One past the cap, auto falls back to the fold
-    (covered in the dispatch test)."""
+    the fold at the cap. One past the cap, the fold is chosen (covered
+    in the dispatch test)."""
     from pyspark.sql import functions as F
 
     from synthetic_data_transfer_to_relational_database_spark.operators import (
         vector_index as vi,
     )
 
-    dim = vi._UNROLL_MAX_DIM
+    dim = vi._LIT_UNROLL_MAX_DIM
     n = 400
     vecs = spark.range(n).select(
         F.col("id").alias("vec_id"),
@@ -1186,22 +1167,8 @@ def test_unrolled_rescorer_at_the_dim_cap(spark, tmp_path):
     qdf = vecs.limit(8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    huge = "spark.sql.codegen.hugeMethodLimit"
-    prev = spark.conf.get(huge, "65535")
-    try:
-        spark.conf.set(huge, "8000")
-        got_u = vi.search_vector_index_df(
-            spark, idx, qdf, top_k=5, n_probe=4, rescorer="unrolled"
-        )
-        rows_u = sorted(map(tuple, got_u.collect()))
-        got_u.unpersist()
-    finally:
-        spark.conf.set(huge, prev)
-    got_h = vi.search_vector_index_df(
-        spark, idx, qdf, top_k=5, n_probe=4, rescorer="hof"
-    )
-    rows_h = sorted(map(tuple, got_h.collect()))
-    got_h.unpersist()
+    rows_u = _serve_rows(spark, idx, qdf, 8000, top_k=5, n_probe=4)
+    rows_h = _serve_rows(spark, idx, qdf, 65535, top_k=5, n_probe=4)
     assert rows_u == rows_h and len(rows_u) == 8 * 5  # bit-exact at the cap
 
 
@@ -1402,132 +1369,20 @@ def test_aba_fence_mismatch_release_failure_keeps_the_retryable_signal(
     assert rep["n_added"] == 5 and verify_vector_index(spark, idx)["ok"]
 
 
-def test_eager_unrolled_conf_scope_is_locked_and_restored_across_threads(
-    spark, sf_dir, tmp_path
-):
-    """r15 advice: the eager forced-unrolled serve's enabling-conf
-    set/restore is session-global state — two concurrent serves must not
-    interleave set and restore and leave hugeMethodLimit=8000 applied.
-    The module lock serializes them; this drills two threaded serves and
-    pins (a) the conf restored to its pre-call value, (b) the lock free,
-    (c) both results bit-identical to the fold."""
-    import threading
-
-    from synthetic_data_transfer_to_relational_database_spark.operators import (
-        vector_index as vi,
-    )
-
-    base, _ = _splits(spark, sf_dir)
-    idx = str(tmp_path / "vidx")
-    build_vector_index(spark, base, idx, centroids="by_label")
-    qdf = base.limit(16).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    huge = "spark.sql.codegen.hugeMethodLimit"
-    conf_before = spark.conf.get(huge, "65535")
-    assert int(conf_before) > vi._JIT_METHOD_LIMIT  # the mutating case
-    results, errors = {}, []
-
-    def serve(tag):
-        try:
-            out = vi.search_vector_index_df(
-                spark, idx, qdf, top_k=5, n_probe=3, rescorer="unrolled"
-            )
-            results[tag] = sorted(map(tuple, out.collect()))
-            out.unpersist()
-        except Exception as e:  # noqa: BLE001 - surfaced below
-            errors.append(e)
-
-    threads = [threading.Thread(target=serve, args=(i,)) for i in range(2)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors, errors
-    assert spark.conf.get(huge, "65535") == conf_before
-    assert not vi._HUGE_LIMIT_LOCK.locked()
-    ref = vi.search_vector_index_df(spark, idx, qdf, top_k=5, n_probe=3, rescorer="hof")
-    ref_rows = sorted(map(tuple, ref.collect()))
-    ref.unpersist()
-    assert results[0] == results[1] == ref_rows
-
-
-def test_balanced_rescorer_wide_dim_neighbor_parity(spark, tmp_path):
-    """The r16 WIDE-dim rescorer (``rescorer="balanced"``): production
-    embedding widths (768+) cannot build the unrolled left-spine tree
-    (Catalyst recursion is O(dim) — StackOverflowError at 384, measured),
-    so the balanced pairwise tree is the in-JVM fast path there, depth
-    ceil(log2 dim). It sums in a different IEEE order than the
-    sequential fold (the arrow contract, not the unrolled one): pinned
-    here at dim 768 — neighbor sets equal, cosines within 1e-9, and the
-    serve conf restored. Also pins the two caps: 'unrolled' must REFUSE
-    a wide dim rather than risk the measured driver crash, and
-    'balanced' must refuse past _BALANCED_MAX_DIM."""
-    import pytest
-
-    from synthetic_data_transfer_to_relational_database_spark.operators import (
-        vector_index as vi,
-    )
-
-    dim = 768
-    dims_sql = ", ".join(
-        f"cast(pmod(xxhash64(id, {d}), 1000) as float) / 1000.0 - 0.5"
-        for d in range(dim)
-    )
-    vecs = spark.range(800).select(
-        F.col("id").alias("vec_id"),
-        F.expr("cast(pmod(xxhash64(id, 'lbl'), 4) as int)").alias("label"),
-        F.expr(f"array({dims_sql})").alias("embedding"),
-    )
-    idx = str(tmp_path / "vidx_wide")
-    build_vector_index(spark, vecs, idx, centroids="by_label")
-    qdf = vecs.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    conf_before = spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535")
-    hof = {
-        (r.query_id, r.vec_id): r.cosine
-        for r in vi.search_vector_index_df(
-            spark, idx, qdf, top_k=5, n_probe=4
-        ).collect()
-    }
-    bal = {
-        (r.query_id, r.vec_id): r.cosine
-        for r in vi.search_vector_index_df(
-            spark, idx, qdf, top_k=5, n_probe=4, rescorer="balanced"
-        ).collect()
-    }
-    assert set(hof) == set(bal) and len(hof) == 8 * 5
-    assert all(abs(hof[k] - bal[k]) < 1e-9 for k in hof)
-    # the eager balanced serve scoped+restored its enabling conf
-    assert spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535") == conf_before
-    # cap pins: wide dims must be REFUSED by 'unrolled' (the measured
-    # driver-fatal class), and 'balanced' bounded by its own cap
-    with pytest.raises(ValueError, match="unrolled"):
-        vi._cosine_col(dim, "unrolled")
-    with pytest.raises(ValueError, match="balanced"):
-        vi._cosine_col(vi._BALANCED_MAX_DIM + 1, "balanced")
-    # auto at a wide dim resolves to the fold even under the serve conf
-    prev = spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535")
-    try:
-        spark.conf.set("spark.sql.codegen.hugeMethodLimit", "8000")
-        assert "aggregate(" in str(vi._cosine_col(dim, "auto"))
-    finally:
-        spark.conf.set("spark.sql.codegen.hugeMethodLimit", prev)
-
-
 def test_vector_index_server_warm_handle(spark, tmp_path):
     """r17 warm-serve API (r16 verdict #1): ONE ``VectorIndexServer``
     serves successive query batches row-identically to the per-call
     wrapper (which delegates through it — one code path), is
-    deterministic across repeated searches of the same batch, honors
-    per-call top_k overrides, and restores the forced-rescorer conf
-    around every eager search. Also pins the r17 SQL-TEXT tree builders
-    bit-identical to the Column-API form they replaced (the form whose
+    deterministic across repeated searches of the same batch, and honors
+    per-call top_k overrides. Also pins the r17 SQL-TEXT unrolled tree
+    bit-identical to the Column-API form it replaced (the form whose
     py4j build cost was the r16 "~60 s/invocation" — measured 25.6 s at
-    dim 768, tools/warm_serve_probe.py / SCALE.md r17)."""
+    dim 768, SCALE.md r17)."""
     import pytest
 
+    from synthetic_data_transfer_to_relational_database_spark.operators import (
+        similarity as sim,
+    )
     from synthetic_data_transfer_to_relational_database_spark.operators import (
         vector_index as vi,
     )
@@ -1549,36 +1404,23 @@ def test_vector_index_server_warm_handle(spark, tmp_path):
     q2 = vecs.filter((F.col("vec_id") >= 6) & (F.col("vec_id") < 12)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    conf_before = spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535")
 
     def rows(df):
         got = sorted(map(tuple, df.collect()))
         df.unpersist()
         return got
 
-    # forced-rescorer handle: two successive batches, each row-identical
-    # to the one-shot wrapper, conf restored after every eager search
-    srv = vi.VectorIndexServer(spark, idx, top_k=5, n_probe=4, rescorer="balanced")
+    # one handle, two successive batches, each row-identical to the
+    # one-shot wrapper
+    srv = vi.VectorIndexServer(spark, idx, top_k=5, n_probe=4)
     for q in (q1, q2):
         warm = rows(srv.search(q))
-        assert spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535") == conf_before
-        assert not vi._HUGE_LIMIT_LOCK.locked()
-        one_shot = rows(
-            vi.search_vector_index_df(spark, idx, q, top_k=5, n_probe=4, rescorer="balanced")
-        )
+        one_shot = rows(vi.search_vector_index_df(spark, idx, q, top_k=5, n_probe=4))
         assert warm == one_shot and len(warm) == 6 * 5
     # determinism on the reused handle
     assert rows(srv.search(q1)) == rows(srv.search(q1))
     # per-call override narrows the result without rebuilding the handle
     assert all(r[3] <= 3 for r in rows(srv.search(q1, top_k=3)))
-    # a default-rescorer handle matches the wrapper's default serve
-    srv_auto = vi.VectorIndexServer(spark, idx, top_k=5, n_probe=4)
-    assert rows(srv_auto.search(q1)) == rows(
-        vi.search_vector_index_df(spark, idx, q1, top_k=5, n_probe=4)
-    )
-    # a bad rescorer fails at CONSTRUCTION, before any distributed work
-    with pytest.raises(ValueError, match="unknown rescorer"):
-        vi.VectorIndexServer(spark, idx, rescorer="typo")
     # STALENESS FENCE (r17 review): an out-of-band commit (refresh here;
     # compaction is the dangerous one — it deletes the old scope dirs,
     # so a stale handle would silently serve the build partition only)
@@ -1601,8 +1443,8 @@ def test_vector_index_server_warm_handle(spark, tmp_path):
     # a NEW handle over the refreshed index serves fine
     fresh = rows(vi.VectorIndexServer(spark, idx, top_k=5, n_probe=4).search(q1))
     assert len(fresh) == 6 * 5
-    # SQL-text builders are bit-identical to the Column-API trees they
-    # replaced (same GetArrayItem/Cast/Multiply/Add nodes, parsed not
+    # the SQL-text unrolled tree is bit-identical to the Column-API tree
+    # it replaced (same GetArrayItem/Cast/Multiply/Add nodes, parsed not
     # py4j-built) — the refactor's contract
     pairs = vecs.select(
         F.col("embedding").alias("qv"),
@@ -1614,70 +1456,11 @@ def test_vector_index_server_warm_handle(spark, tmp_path):
     acc = F.lit(0.0)
     for i in range(dim):
         acc = acc + F.col("qv")[i].cast("double") * F.col("cv")[i].cast("double")
-    col_terms = [
-        F.col("qv")[i].cast("double") * F.col("cv")[i].cast("double")
-        for i in range(dim)
-    ]
-    while len(col_terms) > 1:
-        nxt = [col_terms[i] + col_terms[i + 1] for i in range(0, len(col_terms) - 1, 2)]
-        if len(col_terms) % 2:
-            nxt.append(col_terms[-1])
-        col_terms = nxt
     diffs = pairs.select(
-        vi._unrolled_dot("qv", "cv", dim).alias("u_sql"),
+        F.expr(sim._dot_sql_cols("qv", "cv", dim)).alias("u_sql"),
         acc.alias("u_col"),
-        vi._balanced_dot("qv", "cv", dim).alias("b_sql"),
-        col_terms[0].alias("b_col"),
-    ).filter(
-        F.expr("u_sql IS DISTINCT FROM u_col OR b_sql IS DISTINCT FROM b_col")
-    ).count()
+    ).filter(F.expr("u_sql IS DISTINCT FROM u_col")).count()
     assert diffs == 0
-
-
-def test_sim_search_balanced_key_parity_and_determinism(spark, sf_dir):
-    """The registered ``sim_search_balanced`` key (rows-only by the
-    summation-order rule) carries its invariants here instead of an
-    oracle: (a) run-to-run determinism — same rows, bit for bit;
-    (b) neighbor parity against the FOLD serve over the same persisted
-    wide index — sets equal, cosines within 1e-9; (c) the contract
-    shape (10 queries x top-5, rn dense within query)."""
-    from synthetic_data_transfer_to_relational_database_spark.operators import (
-        similarity as sim,
-    )
-    from synthetic_data_transfer_to_relational_database_spark.operators import (
-        vector_index as vi,
-    )
-
-    out1 = sim.sim_search_balanced(spark, sf_dir)
-    rows1 = sorted(map(tuple, out1.collect()))
-    out1.unpersist()
-    out2 = sim.sim_search_balanced(spark, sf_dir)
-    rows2 = sorted(map(tuple, out2.collect()))
-    out2.unpersist()
-    assert rows1 == rows2  # deterministic, bit for bit
-    assert len(rows1) == 10 * 5
-    per_q = {}
-    for qid, _vid, _cos, rn in rows1:
-        per_q.setdefault(qid, []).append(rn)
-    assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
-    # fold serve over the SAME index dir the key just built
-    path = sim._SIM_BAL_DIR["path"]
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dims_sql = ", ".join(
-        f"cast(pmod(xxhash64(vec_id, {d}), 1000) as float) / 1000.0 - 0.5"
-        for d in range(sim._BAL_DIM)
-    )
-    qdf = (
-        e.select("vec_id", F.expr(f"array({dims_sql})").alias("embedding"))
-        .filter(F.col("vec_id") < 10)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    )
-    hof = vi.search_vector_index_df(spark, path, qdf, top_k=5, n_probe=64)
-    hof_map = {(r.query_id, r.vec_id): r.cosine for r in hof.collect()}
-    hof.unpersist()
-    bal_map = {(q, v): c for q, v, c, _ in rows1}
-    assert set(hof_map) == set(bal_map)
-    assert all(abs(hof_map[k] - bal_map[k]) < 1e-9 for k in hof_map)
 
 
 def _synthetic_vecs(spark, n, dim, salt="lbl"):

@@ -1,19 +1,18 @@
 #!/usr/bin/env python
-"""Scale probe for the persisted index's TWO serve paths (r12 verdict
-item 4): the list path ranks probe cells in a driver-side Python loop
-(O(|queries| × n_cells)) and attaches queries to cells with a
-broadcast nested-loop array_contains join — fine for its 10-query CLI
-contract, a wall at batch-inference query counts. The DataFrame-native
-path (``search_vector_index_df``) ranks probe cells map-side and
-equi-joins on cell_id. This measures both at a query count where the
-difference matters and asserts they return the SAME rows.
+"""A/B of the persisted index's DataFrame serve under its two cosine
+trees (``operators/vector_index.py`` ``_cosine_col``): the
+``aggregate``/``zip_with`` fold a vanilla session gets, and the
+bit-identical unrolled tree the session selects by setting
+``spark.sql.codegen.hugeMethodLimit=8000``. Arms are interleaved
+(fold, unrolled, fold, unrolled, …) so a drifting host hits both; every
+wall is printed, and the two arms' rows must be bit-identical.
 
-Synthetic 64-dim hash vectors (the vector_refresh_probe recipe);
-corpus and query builds happen OUTSIDE the clock; each timing is
-best-of-2 in one warmed JVM.
+Synthetic 64-dim hash vectors (the vector_refresh_probe recipe) over a
+100k-vector index, n_probe 2; corpus and query builds happen OUTSIDE
+the clock, and one 64-query serve per arm warms the JVM first.
 
-Usage: python tools/serve_scale_probe.py [n_queries] [n_cells]
-       # defaults 5000 queries, 64 cells over a 100k-vector index
+Usage: python tools/serve_scale_probe.py [n_queries] [n_cells] [reps]
+       # defaults 2000 queries, 64 cells, 2 interleaved rounds
 """
 
 from __future__ import annotations
@@ -30,21 +29,25 @@ sys.path.insert(0, _REPO)
 
 from vector_refresh_probe import synth_vectors  # noqa: E402
 
+_HUGE = "spark.sql.codegen.hugeMethodLimit"
+_ARMS = {"fold": "65535", "unrolled": "8000"}
+
 
 def main() -> None:
-    n_queries = int(sys.argv[1]) if len(sys.argv) > 1 else 5_000
+    n_queries = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000
     n_cells = int(sys.argv[2]) if len(sys.argv) > 2 else 64
+    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     from pyspark.sql import functions as F
 
     from synthetic_data_transfer_to_relational_database_spark.operators.vector_index import (
         build_vector_index,
-        search_vector_index,
         search_vector_index_df,
     )
     from synthetic_data_transfer_to_relational_database_spark.session import get_spark
 
     spark = get_spark("sdt-serve-probe")
     tmp = tempfile.mkdtemp(prefix="sdt_serve_")
+    prev_huge = spark.conf.get(_HUGE, "65535")
     try:
         idx = os.path.join(tmp, "idx")
         build_vector_index(spark, synth_vectors(spark, 100_000), idx, n_cells=n_cells)
@@ -54,100 +57,45 @@ def main() -> None:
             .persist()
         )
         qdf.count()
-        queries = [(int(r.query_id), list(r.qv)) for r in qdf.collect()]
 
-        def timed(fn) -> float:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn().write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            return round(best, 3)
+        def serve(arm: str, q, eager: bool = False):
+            # the tree is chosen from the conf when the serve is built,
+            # and runs under it at the materialization below
+            spark.conf.set(_HUGE, _ARMS[arm])
+            return search_vector_index_df(spark, idx, q, top_k=5, n_probe=2, eager=eager)
 
-        # eager=False throughout the TIMED calls: the noop write is the
-        # single materialization for every path (the list path returns a
-        # lazy plan too), so walls stay method-symmetric and comparable
-        # with the r13 series; the default eager mode would add a
-        # persist+count inside the df calls only (r14 review). The
-        # eager=False probed-frame persists accumulate — a handful of
-        # 5k-row frames, deliberate and bounded for the probe process.
-        def df_serve(q, rescorer="hof"):
-            return search_vector_index_df(
-                spark, idx, q, top_k=5, n_probe=2, eager=False, rescorer=rescorer
-            )
+        def timed(arm: str, q) -> float:
+            # eager=False: the noop write is the one materialization
+            t0 = time.perf_counter()
+            serve(arm, q).write.format("noop").mode("overwrite").save()
+            return round(time.perf_counter() - t0, 3)
 
-        # warm-up (codegen/JIT/Arrow), discarded
-        timed(lambda: df_serve(qdf.limit(64)))
-        timed(lambda: df_serve(qdf.limit(64), "arrow"))
-        df_wall = timed(lambda: df_serve(qdf))
-        # r13 verdict #5: the HOF folds are CodegenFallback and the
-        # measured serve dominator — A/B them against the Arrow
-        # (pandas_udf einsum) rescorer at the same probe scale
-        arrow_wall = timed(lambda: df_serve(qdf, "arrow"))
-        # r15: the unrolled in-JVM tree, timed under the conf that
-        # makes it fast (hugeMethodLimit <= JIT limit → per-stage
-        # fallback + per-expression codegen; see vector_index.py
-        # _JIT_METHOD_LIMIT). Scoped + restored so the other walls in
-        # this probe keep their r13/r14-comparable method.
-        huge = "spark.sql.codegen.hugeMethodLimit"
-        prev_huge = spark.conf.get(huge, "65535")
-        try:
-            spark.conf.set(huge, "8000")
-            timed(lambda: df_serve(qdf.limit(64), "unrolled"))  # warm
-            unrolled_wall = timed(lambda: df_serve(qdf, "unrolled"))
-            # r16: the missing A/B cell — the FOLD under the same conf.
-            # The r15 3.1x read unrolled@8000 against hof@DEFAULT; if
-            # the conf (per-stage fallback ⇒ the join/window stages
-            # become JIT-able) helps the fold too, the tree swap is a
-            # smaller share of the win than r15 credited it with.
-            hof8000_wall = timed(lambda: df_serve(qdf))
-        finally:
-            spark.conf.set(huge, prev_huge)
-        list_wall = timed(
-            lambda: search_vector_index(spark, idx, queries, top_k=5, n_probe=2)
-        )
-        res_hof = search_vector_index_df(spark, idx, qdf, top_k=5, n_probe=2)
-        res_arrow = search_vector_index_df(
-            spark, idx, qdf, top_k=5, n_probe=2, rescorer="arrow"
-        )
-        n_df, n_arrow = res_hof.count(), res_arrow.count()
-        # neighbor-set parity (the honest check for the arrow path: the
-        # fold ORDER differs, so cosines may differ in the last ulp and
-        # rows are not pinned bit-identical — the returned NEIGHBORS
-        # must still agree except on genuine ties)
-        pairs_hof = {(r.query_id, r.vec_id) for r in res_hof.collect()}
-        pairs_arrow = {(r.query_id, r.vec_id) for r in res_arrow.collect()}
-        res_hof.unpersist()
-        res_arrow.unpersist()
-        n_list = search_vector_index(spark, idx, queries, top_k=5, n_probe=2).count()
+        for arm in _ARMS:
+            timed(arm, qdf.limit(64))  # warm-up (codegen/JIT), discarded
+        walls: dict[str, list[float]] = {arm: [] for arm in _ARMS}
+        for _ in range(reps):
+            for arm in _ARMS:
+                walls[arm].append(timed(arm, qdf))
+        rows = {}
+        for arm in _ARMS:
+            res = serve(arm, qdf, eager=True)
+            rows[arm] = sorted(map(tuple, res.collect()))
+            res.unpersist()
         print(
             json.dumps(
                 {
                     "n_queries": n_queries,
                     "n_cells": n_cells,
                     "corpus": 100_000,
-                    "walls": {
-                        "df_path": df_wall,
-                        "df_path_arrow": arrow_wall,
-                        "df_path_unrolled_huge8000": unrolled_wall,
-                        "df_path_hof_huge8000": hof8000_wall,
-                        "list_path": list_wall,
-                    },
-                    "speedup": round(list_wall / df_wall, 2) if df_wall else None,
-                    "arrow_speedup_vs_hof": round(df_wall / arrow_wall, 2)
-                    if arrow_wall
-                    else None,
-                    "unrolled_speedup_vs_hof": round(df_wall / unrolled_wall, 2)
-                    if unrolled_wall
-                    else None,
-                    "rows_equal": n_df == n_list,
-                    "arrow_neighbor_parity": round(
-                        len(pairs_hof & pairs_arrow) / max(1, len(pairs_hof)), 6
-                    ),
+                    "cpus": spark.sparkContext.defaultParallelism,
+                    "walls": walls,
+                    "rows_bit_identical": rows["fold"] == rows["unrolled"],
+                    "n_rows": len(rows["fold"]),
                 }
             )
         )
     finally:
+        spark.conf.set(_HUGE, prev_huge)
         shutil.rmtree(tmp, ignore_errors=True)
         spark.stop()
 
