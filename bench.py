@@ -39,6 +39,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tests.full_schema import full_schema_kind, full_schema_script  # noqa: E402
+
 # Headline set: one per operator family, heaviest members preferred.
 HEADLINE = [
     "revenue_by_nation",   # 4-way join + agg + sort (flagship)
@@ -224,12 +226,11 @@ def _gen_1m(spark, fact_rows: int = 1_000_000):
     _materialize(built["Hareket"])
 
 
-_REFERENCE_SCRIPT = "/root/reference/script.sql"
-
-
 def _gen_full_schema(spark, fk_skew: float = 0.0, rows: int = 10_000) -> None:
-    """The reference's complete 85-table ERP schema (script.sql), parsed
-    and generated at 10k rows/table through the parquet write path —
+    """The complete 85-table ERP schema — the reference's script.sql when
+    its checkout is present, else the in-repo census stand-in
+    (tests/full_schema.py; the history line's ``gen_schema`` says which)
+    — parsed and generated at 10k rows/table through the parquet write path —
     toposorted FK closure, subtype PK permutations, identity sequences,
     the lot. This is the end-to-end pipeline run_engine.py performs at 15
     rows/table, at 667× its row count. ``fk_skew=1.0`` warps every
@@ -242,7 +243,7 @@ def _gen_full_schema(spark, fk_skew: float = 0.0, rows: int = 10_000) -> None:
     from synthetic_data_transfer_to_relational_database_spark.plans.executor import GenerationPlan
     from synthetic_data_transfer_to_relational_database_spark.sources.ddl import parse_schema_script
 
-    tables = parse_schema_script(_REFERENCE_SCRIPT)
+    tables = parse_schema_script(full_schema_script())
     out = tempfile.mkdtemp(prefix="sdt_bench_fullgen_")
     try:
         plan = GenerationPlan(
@@ -376,14 +377,13 @@ def run_sample(sf_dir: str) -> dict:
     timings[MAINTAIN_FULL] = first_pass[MAINTAIN_FULL] = round(maintain, 3)
     spark.catalog.clearCache()
 
-    if os.path.exists(_REFERENCE_SCRIPT):
-        for key, skew in ((GEN_FULL_SCHEMA, 0.0), (GEN_FULL_SCHEMA_SKEW, 1.0)):
-            t0 = time.perf_counter()
-            _gen_full_schema(spark, fk_skew=skew)
-            dt = round(time.perf_counter() - t0, 3)
-            timings[key] = dt
-            first_pass[key] = dt
-            spark.catalog.clearCache()
+    for key, skew in ((GEN_FULL_SCHEMA, 0.0), (GEN_FULL_SCHEMA_SKEW, 1.0)):
+        t0 = time.perf_counter()
+        _gen_full_schema(spark, fk_skew=skew)
+        dt = round(time.perf_counter() - t0, 3)
+        timings[key] = dt
+        first_pass[key] = dt
+        spark.catalog.clearCache()
 
     # Forced-scalable branch: threshold 0 routes window_rank through the
     # range-slice derivation (the dispatch cache keys on the threshold,
@@ -649,6 +649,9 @@ def main() -> None:
                         # with them so a drifted official self-identifies
                         "settled": not unsettled,
                         "unsettled_reasons": unsettled,
+                        # gen_full_schema series: "reference" script.sql
+                        # or the "census" stand-in (a separate series)
+                        "gen_schema": full_schema_kind(),
                         "hardware_before": hw_before,
                         "hardware_after": _hardware_yardsticks(),
                         "samples": samples,

@@ -15,11 +15,11 @@ Generators build **SQL text**, not Column objects. Classic-PySpark
 Column composition costs one py4j socket round trip per ``F.*`` call (and
 per ``_lit``): an 85-table schema build spent ~50% of its wall clock in
 ~240k such round trips (profiled, r9). Rendering each column's whole
-expression as one SQL string and parsing it once with ``F.expr`` is O(1)
-round trips per COLUMN instead of per NODE — the same fix already
-applied to array literals (plans/executor._array_literal); this completes
-it for the generator layer. The caller (plans/compiler.compile_rule →
-plans/executor) wraps the final string in ``F.expr(...).alias(...)``.
+expression as one SQL string is O(1) round trips per TABLE instead of
+per NODE — the same fix applied to array literals
+(plans/executor._array_literal). The caller (plans/compiler.compile_rule
+→ plans/executor) aliases each column's string and parses the whole
+table in one ``selectExpr``.
 
 Literal rendering must reproduce the exact types classic ``F.lit`` would
 have produced — ``xxhash64`` output (and hence every generated value)
@@ -316,9 +316,9 @@ _ARR_CACHE: dict[tuple[str, ...], str] = {}
 # node count of the generator's per-table eager analysis), and the
 # optimizer constant-folds split-of-literal to the IDENTICAL ArrayData
 # before execution, so runtime plans and output bytes are unchanged
-# (value-identity probed elementwise in tools/gen_split_arr_ab.py and
-# pinned by the determinism goldens). Below the threshold the classic
-# form stays — nothing to save on a 5-word list.
+# (pinned by tests/test_full_schema_gen.py::test_census_build_digest).
+# Below the threshold the classic form stays — nothing to save on a
+# 5-word list.
 _SPLIT_ARR_MIN = 16
 
 

@@ -4,16 +4,16 @@ This is the executor the reference never built for its own rule grammar
 (data_rules.json is written by generate_config_v2.py:100-101 but consumed
 by nothing — SURVEY.md §0). Each rule compiles to a pure expression over
 the ``__id`` row-number column; the table's whole row is then one
-``spark.range(n).select(*exprs)`` projection (SURVEY.md §4: generation as
-projection, replacing the reference's Python row loop A2).
+``spark.range(n).selectExpr(*items)`` projection (SURVEY.md §4: generation
+as projection, replacing the reference's Python row loop A2).
 
 ``compile_rule`` returns **SQL text** (including the cast to the
-column's declared type, excluding the alias); the executor parses it
-once with ``F.expr(sql).alias(name)``. One py4j round trip per column
-instead of one per expression node — see functions/generators.py for
-why that dominates wide-schema build time. The ``id_sql`` parameter is
-likewise SQL text ("__id", or a sampled-index expression when a parent
-PK is recomputed by composition — plans/executor._pk_expr_fn).
+column's declared type, excluding the alias); the executor aliases it
+and parses the whole table in that one ``selectExpr`` call — see
+functions/generators.py for why per-node round trips dominate
+wide-schema build time. The ``id_sql`` parameter is likewise SQL text
+("__id", or a sampled-index expression when a parent PK is recomputed
+by composition — plans/executor._pk_expr_fn).
 
 ``foreign_key:`` rules are NOT compiled here — they need parent-table
 context and are planned by plans/executor.py (J1 sampling join).

@@ -6,8 +6,10 @@ The Spark-native re-expression of the reference's engines
 - table build order = Kahn toposort of the FK graph (O1, fill_db.py:39-61)
   with the v2 incremental sequencing (O2, run_engine.py:265-266): each
   table is materialized before dependents sample its keys.
-- row generation = ONE projection: ``spark.range(n).select(*compiled
-  exprs)`` — whole-stage codegen, no Python row loop (SURVEY.md §4).
+- row generation = ONE projection: every value is SQL text (compile_rule,
+  the PK functions, the FK samplers below) and the table is one
+  ``spark.range(n).selectExpr(*items)`` call — whole-stage codegen, no
+  Python row loop (SURVEY.md §4).
 - **FK sampling join (J1, run_engine.py:156-162)**: each child row gets a
   uniformly-random EXISTING parent key. Two physical strategies:
     * parents ≤ `broadcast_threshold` rows AND an estimated
@@ -21,8 +23,9 @@ The Spark-native re-expression of the reference's engines
       10× full-schema probe), and on a real cluster the closure
       re-ships per stage;
     * larger parents: deterministic random index on the child + equi-join
-      against ``parent.zipWithIndex`` — shuffle-based, scales to any
-      parent cardinality, AQE handles skew.
+      against the parent's keys numbered by their global rank
+      (``_indexed_parent``: range-partitioned, partition-local sorts) —
+      shuffle-based, scales to any parent cardinality, AQE handles skew.
 - **FK fallback (J2, run_engine.py:160-162)**: empty parent ⇒ fabricated
   key by type (the reference tolerates the violation because constraints
   are disabled; we reproduce the semantics and flag it).
@@ -47,7 +50,7 @@ import threading
 import warnings
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import generators as G
@@ -60,17 +63,22 @@ from .toposort import toposort_tables
 DEFAULT_ROW_COUNT = 1000
 
 
-def _array_literal(values: list) -> Column:
-    """ONE parsed ``array(...)`` literal for a Python list.
+def _sql_name(name: str) -> str:
+    """Backquoted identifier for selectExpr items."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _array_literal(values: list) -> str:
+    """ONE ``array(...)`` literal for a Python list, as SQL text.
 
     ``F.lit(list)`` in classic PySpark builds the array ELEMENT-BY-ELEMENT
     — one py4j round trip per element — so a 10k-key parent array cost
     ~5 s of pure socket time per FK edge, and an 85-table schema build
     spent ~47% of its wall clock inside those listcomps (measured, r6).
     Rendering the SQL text driver-side and parsing it once JVM-side is
-    O(1) round trips at any length. Covers the key types parent PKs can
-    carry (str/int/float/bool/Decimal/date/datetime); anything else
-    falls back to the per-element form — correct, just slow.
+    O(1) round trips at any length. Covers every key type a parent can
+    carry (str/int/float/bool/Decimal/date/datetime/bytes, None as NULL);
+    anything else raises TypeError.
 
     Float and string rendering delegate to generators._qd /._qs so the
     exact-double repr and the parser-mode-safe quoting (unbase64 for
@@ -85,15 +93,18 @@ def _array_literal(values: list) -> Column:
     # analyzer walks 3 nodes instead of one per key; the optimizer
     # constant-folds split-of-literal to the IDENTICAL ArrayData, so the
     # executed plan, the task-binary footprint and the output bytes are
-    # unchanged (determinism goldens + tests/test_generator.py pin it).
-    # Strings only — every other key dtype keeps the exact typed-literal
-    # rendering below; ';' inside a key falls back likewise.
+    # unchanged (tests/test_full_schema_gen.py::test_census_build_digest
+    # and tests/test_generator.py pin it). Strings only — every other key
+    # dtype keeps the exact typed-literal rendering below; ';' inside a
+    # key falls back likewise.
     if len(values) >= 64 and all(
         isinstance(v, str) and v and ";" not in v for v in values
     ):
-        return F.expr(f"split({_qs(';'.join(values))}, ';')")
+        return f"split({_qs(';'.join(values))}, ';')"
 
-    def render(v) -> str | None:
+    def render(v) -> str:
+        if v is None:
+            return "NULL"
         if isinstance(v, bool):
             return "true" if v else "false"
         if isinstance(v, int):
@@ -112,15 +123,26 @@ def _array_literal(values: list) -> Column:
             return f"DATE '{v.isoformat()}'"
         if isinstance(v, str):
             return _qs(v)
-        return None
+        if isinstance(v, (bytes, bytearray)):
+            return f"X'{bytes(v).hex()}'"
+        raise TypeError(f"no SQL literal for {type(v).__name__} key {v!r}")
 
-    parts = []
-    for v in values:
-        r = render(v)
-        if r is None:
-            return F.lit(list(values))  # unknown element type: slow path
-        parts.append(r)
-    return F.expr("array(" + ",".join(parts) + ")")
+    return "array(" + ",".join(render(v) for v in values) + ")"
+
+
+def _fk_sql(col: ColumnSpec, value_sql: str, table_seed: int) -> str:
+    """An FK column's value cast to its declared type. Nullable FK
+    columns get a deterministic null fraction (one row in ten, by a hash
+    of row id, table seed and column), exercising the null-extension
+    path like the reference's nullable handling (fill_db.py:162-163).
+    Unique-indexed columns stay non-null: repeated NULLs would violate
+    the index under ANSI-92 semantics (MSSQL treats NULLs equal)."""
+    if col.nullable and not col.unique:
+        value_sql = (
+            f"CASE WHEN pmod(xxhash64(__id, {_qi(table_seed)}, {_qs(col.name + '.null')}), 10) = 0"
+            f" THEN NULL ELSE {value_sql} END"
+        )
+    return f"CAST({value_sql} AS {col.spark_type().simpleString()})"
 
 
 def _coprime_step(n: int, seed: int) -> int:
@@ -309,15 +331,11 @@ class GenerationPlan:
             f"pmod(xxhash64({id_sql}, {_qi(self.seed)}, {_qs(salt)}), {_qi(n)})"
         )
 
-    def _fk_value(self, table: TableSpec, col: ColumnSpec, id_sql: str) -> Column:
-        """J1/J2: deterministic sample of an existing parent key. The salt
-        is per-FK-constraint (not per-column) so composite-FK columns
-        sample the same parent row — tuple-consistent references.
-
-        ``id_sql`` is SQL text; the pure-expression paths (PK
-        composition, fallback synthesis) compose strings and parse ONCE
-        here, while the array paths keep Column composition on top of the
-        single parsed ``_array_literal`` node (already O(1) round trips)."""
+    def _fk_value(self, table: TableSpec, col: ColumnSpec, id_sql: str) -> str:
+        """J1/J2: deterministic sample of an existing parent key, as SQL
+        text over ``id_sql``. The salt is per-FK-constraint (not
+        per-column) so composite-FK columns sample the same parent row —
+        tuple-consistent references."""
         parent_name, _, parent_col = col.fk_parent.partition(".")
         salt = col.fk_salt or f"{table.name}.{col.name}"
         child_rows = self._row_count_of.get(table.name, self.rows_for(table.name))
@@ -329,8 +347,8 @@ class GenerationPlan:
             pk_fns = self._pk_expr_fns.get(table.name, {})
             fn = pk_fns.get(parent_col)
             if fn is not None:
-                return F.expr(fn(self._sample_idx(id_sql, salt, n, col.unique, child_rows)))
-            return F.lit(None)
+                return fn(self._sample_idx(id_sql, salt, n, col.unique, child_rows))
+            return "NULL"
 
         # live-DB identity read-back wins over every assumed-key path
         override = self.parent_keys_override.get(parent_name, {}).get(parent_col)
@@ -374,9 +392,8 @@ class GenerationPlan:
                 self._override_prepped[memo_key] = prepped
             _, override, est = prepped
             if len(override) <= self.broadcast_threshold and est <= self.broadcast_key_bytes:
-                arr = _array_literal(list(override))
-                idx = (F.expr(self._sample_idx(id_sql, salt, len(override), col.unique, child_rows)) + 1).cast("int")
-                return F.element_at(arr, idx)
+                idx = self._sample_idx(id_sql, salt, len(override), col.unique, child_rows)
+                return f"element_at({_array_literal(override)}, CAST(({idx}) + 1 AS INT))"
             # Over cap: route through the same equi-join machinery as big
             # GENERATED parents, against a DataFrame built from the
             # readback keys. Registered under a synthetic name because
@@ -407,7 +424,7 @@ class GenerationPlan:
         # expression-computable parent PK ⇒ function composition, no join
         fn = self._pk_expr_fns.get(parent_name, {}).get(parent_col)
         if fn is not None:
-            return F.expr(fn(self._sample_idx(id_sql, salt, n_parent, col.unique, child_rows)))
+            return fn(self._sample_idx(id_sql, salt, n_parent, col.unique, child_rows))
 
         if (
             n_parent <= self.broadcast_threshold
@@ -416,11 +433,9 @@ class GenerationPlan:
         ):
             keys = [r[0] for r in parent_df.select(parent_col).collect()]
             # ONE array literal (a single Catalyst Literal node), not 10^5
-            # F.lit() Column constructions — the per-element form blows up
-            # py4j call count and plan size long before the threshold.
-            arr = _array_literal(keys)
-            idx = (F.expr(self._sample_idx(id_sql, salt, len(keys), col.unique, child_rows)) + 1).cast("int")
-            return F.element_at(arr, idx)
+            # per-element literals
+            idx = self._sample_idx(id_sql, salt, len(keys), col.unique, child_rows)
+            return f"element_at({_array_literal(keys)}, CAST(({idx}) + 1 AS INT))"
 
         # large-parent path is planned in _build_table via an equi-join
         raise _NeedsJoin(parent_name, parent_col)
@@ -460,13 +475,13 @@ class GenerationPlan:
             return self.broadcast_key_bytes + 1
         return max(spec.length or 24, 8) + 3
 
-    def _fk_fallback(self, col: ColumnSpec, id_sql: str, salt: str) -> Column:
+    def _fk_fallback(self, col: ColumnSpec, id_sql: str, salt: str) -> str:
         """J2 semantics (run_engine.py:160-162): fabricate by type."""
         if col.dtype == "uuid":
-            return F.expr(G.gen_uuid(id_sql, self.seed, salt + ".fallback"))
+            return G.gen_uuid(id_sql, self.seed, salt + ".fallback")
         if col.dtype in ("int", "short", "long"):
-            return F.expr(G.gen_int(id_sql, self.seed, salt + ".fallback", 1, 10)).cast(col.dtype)
-        return F.expr(G.gen_lexify(id_sql, self.seed, salt + ".fallback", min(col.length or 3, 4)))
+            return f"CAST({G.gen_int(id_sql, self.seed, salt + '.fallback', 1, 10)} AS {col.dtype})"
+        return G.gen_lexify(id_sql, self.seed, salt + ".fallback", min(col.length or 3, 4))
 
     # ------------------------------------------------------------------
     def _build_table(self, table: TableSpec) -> DataFrame:
@@ -475,8 +490,6 @@ class GenerationPlan:
         infer_table_rules(table, self._row_count_of)
         self._pk_expr_fns[table.name] = self._pk_expr_fn(table)
 
-        df = self._id_frame(n)
-        id_col = F.col("__id")
         id_sql = "__id"
         table_seed = self.seed + _stable_hash(table.name)
 
@@ -501,70 +514,54 @@ class GenerationPlan:
                     if fn is not None:
                         subtype_pk_exprs[pk_col] = fn(perm_idx)
 
-        exprs: list[Column] = []
+        items: list[str] = []
+        names: list[str] = []
         join_requests: list[tuple[ColumnSpec, str, str]] = []
         for col in table.generated_columns:
             if col.name in self.skip_columns:
                 continue
             if col.name in subtype_pk_exprs:
-                exprs.append(
-                    F.expr(subtype_pk_exprs[col.name]).cast(col.spark_type()).alias(col.name)
-                )
-                continue
-            if col.fk_parent:
+                sql = f"CAST({subtype_pk_exprs[col.name]} AS {col.spark_type().simpleString()})"
+            elif col.fk_parent:
                 try:
-                    expr = self._fk_value(table, col, id_sql)
+                    sql = _fk_sql(col, self._fk_value(table, col, id_sql), table_seed)
                 except _NeedsJoin as nj:
                     join_requests.append((col, nj.parent, nj.parent_col))
                     continue
-                # nullable FK columns get a deterministic null fraction,
-                # exercising the null-extension path like the reference's
-                # nullable handling (fill_db.py:162-163). Unique-indexed
-                # columns stay non-null: repeated NULLs would violate the
-                # index under ANSI-92 semantics (MSSQL treats NULLs equal).
-                if col.nullable and not col.unique:
-                    is_null = F.pmod(F.xxhash64(id_col, F.lit(table_seed), F.lit(col.name + ".null")), F.lit(10)) == 0
-                    expr = F.when(is_null, F.lit(None)).otherwise(expr)
-                exprs.append(expr.cast(col.spark_type()).alias(col.name))
-                continue
-            exprs.append(
-                F.expr(compile_rule(col.rule or "word", col, id_sql, table_seed)).alias(col.name)
-            )
+            else:
+                sql = compile_rule(col.rule or "word", col, id_sql, table_seed)
+            items.append(f"{sql} AS {_sql_name(col.name)}")
+            names.append(col.name)
 
-        out = df.select(id_col, *exprs)
+        if not join_requests:
+            return self._id_frame(n).selectExpr(*items)
+        out = self._id_frame(n).selectExpr(id_sql, *items)
 
         # Large-parent FK values via index-equi-join (scale path of J1).
         # Requests are grouped per (parent, fk constraint salt): composite-FK
         # columns that share a constraint join against ONE sampled parent
-        # row, keeping tuple consistency on this path too.
+        # row, keeping tuple consistency on this path too. The final
+        # projection puts the joined columns after the inline ones.
         grouped: dict[tuple[str, str], list[tuple[ColumnSpec, str]]] = {}
         for col, parent_name, parent_col in join_requests:
             salt = col.fk_salt or f"{table.name}.{col.name}"
             grouped.setdefault((parent_name, salt), []).append((col, parent_col))
 
+        final = [_sql_name(name) for name in names]
         for (parent_name, salt), pairs in grouped.items():
             parent_idx, n_parent = self._indexed_parent(parent_name, pairs)
             uniq = any(col.unique for col, _ in pairs)
-            pick = F.expr(self._sample_idx("__id", salt, n_parent, uniq, n)).alias("__pick")
+            pick = self._sample_idx(id_sql, salt, n_parent, uniq, n)
             out = (
-                out.withColumn("__pick", pick)
+                out.selectExpr("*", f"{pick} AS __pick")
                 .join(parent_idx, F.col("__pick") == F.col("__pidx"), "left")
                 .drop("__pick", "__pidx")
             )
-            for col, _ in pairs:
-                val = F.col(f"__pk_{col.name}").cast(col.spark_type())
-                if col.nullable and not col.unique:
-                    is_null = (
-                        F.pmod(
-                            F.xxhash64(F.col("__id"), F.lit(table_seed), F.lit(col.name + ".null")),
-                            F.lit(10),
-                        )
-                        == 0
-                    )
-                    val = F.when(is_null, F.lit(None)).otherwise(val)
-                out = out.withColumn(col.name, val).drop(f"__pk_{col.name}")
-
-        return out.drop("__id")
+            final += [
+                f"{_fk_sql(col, _sql_name(f'__pk_{col.name}'), table_seed)} AS {_sql_name(col.name)}"
+                for col, _ in pairs
+            ]
+        return out.selectExpr(*final)
 
     # ------------------------------------------------------------------
     def _indexed_parent(
@@ -578,8 +575,6 @@ class GenerationPlan:
         layout-independent — but every sort is partition-local, so the path
         scales to arbitrarily large parents.
         """
-        from pyspark.sql.window import Window
-
         parent_df = self._built[parent_name]
         n_parent = self._row_count_of.get(parent_name) or parent_df.count()
         key_cols = [f"__pk_{col.name}" for col, _ in pairs]
@@ -609,22 +604,20 @@ class GenerationPlan:
         p = p.cache()
         self._scratch.append(p)
         counts = {r["__part"]: r["count"] for r in p.groupBy("__part").count().collect()}
-        offsets: dict[int, int] = {}
-        acc = 0
-        for part in sorted(counts):
-            offsets[part] = acc
+        parts = sorted(counts)
+        offsets, acc = [], 0
+        for part in parts:
+            offsets.append(acc)
             acc += counts[part]
-        off_expr = F.element_at(
-            F.map_from_arrays(
-                F.lit([int(k) for k in sorted(counts)]),
-                F.lit([int(offsets[k]) for k in sorted(counts)]),
-            ),
-            F.col("__part"),
+        off_sql = (
+            f"element_at(map_from_arrays({_array_literal(parts)},"
+            f" {_array_literal(offsets)}), __part)"
         )
-        w = Window.partitionBy("__part").orderBy(*key_cols)
-        parent_idx = (
-            p.withColumn("__pidx", (F.row_number().over(w) - 1 + off_expr).cast("long"))
-            .drop("__part")
+        order = ", ".join(_sql_name(c) for c in key_cols)
+        parent_idx = p.selectExpr(
+            *[_sql_name(c) for c in key_cols],
+            f"CAST(row_number() OVER (PARTITION BY __part ORDER BY {order}) - 1"
+            f" + {off_sql} AS BIGINT) AS __pidx",
         )
         return parent_idx, n_parent
 

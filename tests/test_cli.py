@@ -14,7 +14,7 @@ import pytest
 
 from synthetic_data_transfer_to_relational_database_spark.__main__ import main
 
-REFERENCE_SCRIPT = "/root/reference/script.sql"
+from .full_schema import full_schema_script
 
 MINI_SPEC = """CREATE TABLE [dbo].[Musteri](
 \t[Id] [uniqueidentifier] NOT NULL,
@@ -155,12 +155,9 @@ def test_cli_row_counts_rejects_malformed_input(tmp_path):
             )
 
 
-@pytest.mark.skipif(
-    not os.path.exists(REFERENCE_SCRIPT), reason="reference checkout not present"
-)
 def test_cli_rules_on_full_reference_schema(tmp_path):
     out = tmp_path / "data_rules.json"
-    assert main(["rules", "--script", REFERENCE_SCRIPT, "--out", str(out)]) == 0
+    assert main(["rules", "--script", full_schema_script(), "--out", str(out)]) == 0
     cfg = json.loads(out.read_text())
     assert len(cfg) == 85  # the reference's data_rules.json covers 85 tables
 

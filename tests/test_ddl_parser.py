@@ -1,10 +1,9 @@
-"""DDL-dump parser tests: an inline SSMS-style fixture plus (when the
-reference checkout is present) the real 85-table script, asserting the
-facts established in SURVEY.md §1.3."""
+"""DDL-dump parser tests: an inline SSMS-style fixture plus the 85-table
+script (the reference's when its checkout is present, else the census
+stand-in — tests/full_schema.py), asserting the facts established in
+SURVEY.md §1.3."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -15,6 +14,8 @@ from synthetic_data_transfer_to_relational_database_spark.sources.ddl import (
     parse_schema_script,
     split_go_batches,
 )
+
+from .full_schema import full_schema_kind, full_schema_script
 
 INLINE_DDL = """
 CREATE DATABASE [SomeDb]
@@ -88,15 +89,11 @@ def test_parse_create_table_inline():
     assert fk.on_delete_cascade
 
 
-REFERENCE_SCRIPT = "/root/reference/script.sql"
-
-
-@pytest.mark.skipif(not os.path.exists(REFERENCE_SCRIPT), reason="reference checkout not present")
 def test_parse_reference_script():
     """Structural parity with the reference schema (facts from SURVEY.md
     §1.3: 85 tables, 131 FKs, self-refs on CariHesap, shared-PK subtype
     SatisBelge→BelgeBaslik, composite PK Referans, identity PK Banka)."""
-    tables = parse_schema_script(REFERENCE_SCRIPT)
+    tables = parse_schema_script(full_schema_script())
     assert len(tables) == 85
     n_fks = sum(len(t.fks) for t in tables.values())
     assert n_fks == 131
@@ -116,10 +113,14 @@ def test_parse_reference_script():
     # SURVEY.md §0; the §1.3 figure of 1,366 used a narrower count).
     assert sum(len(t.columns) for t in tables.values()) == 1431
     # widest tables — counts verified against the reference's own
-    # data_rules.json per-table rule counts.
-    assert len(tables["StokHareket"].columns) == 97
-    assert len(tables["CariHesap"].columns) == 88
-    assert len(tables["CariHareket"].columns) == 76
+    # data_rules.json per-table rule counts; the census stand-in keeps
+    # the same three widest tables at its own declared widths.
+    if full_schema_kind() == "reference":
+        widest = {"StokHareket": 97, "CariHesap": 88, "CariHareket": 76}
+    else:
+        from perfbench.census import WIDEST as widest
+    for name, width in widest.items():
+        assert len(tables[name].columns) == width, name
 
 
 def test_go_repeat_count_form():
@@ -138,8 +139,6 @@ def test_ddl_emitter_round_trips_reference_schema():
     semantic fields, and every FK re-parses equal. This is the emitter
     the reference lacks (it can only replay an existing dump): specs
     reflected from a live catalog or JSONL become deployable DDL."""
-    import os
-
     from synthetic_data_transfer_to_relational_database_spark.sources.ddl import (
         fk_to_ddl,
         parse_create_table,
@@ -149,12 +148,7 @@ def test_ddl_emitter_round_trips_reference_schema():
         table_to_ddl,
     )
 
-    script = "/root/reference/script.sql"
-    if not os.path.exists(script):
-        import pytest
-
-        pytest.skip("reference checkout not present")
-    tables = parse_schema_script(script)
+    tables = parse_schema_script(full_schema_script())
     assert len(tables) == 85
     for name, spec in tables.items():
         back = parse_create_table(table_to_ddl(spec))

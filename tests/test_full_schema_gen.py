@@ -1,9 +1,12 @@
-"""End-to-end: generate the FULL 85-table reference schema (parsed from
-script.sql) at small row counts and validate global FK closure — the
-complete capability of the reference's run_engine.py in one run."""
+"""End-to-end: generate the FULL 85-table schema (the reference's
+script.sql when present, else the in-repo census stand-in — see
+tests/full_schema.py) at small row counts and validate global FK closure
+— the complete capability of the reference's run_engine.py in one run."""
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 
 import pytest
@@ -11,19 +14,25 @@ import pytest
 from synthetic_data_transfer_to_relational_database_spark.plans.executor import GenerationPlan
 from synthetic_data_transfer_to_relational_database_spark.sources.ddl import parse_schema_script
 
-REFERENCE_SCRIPT = "/root/reference/script.sql"
+from .full_schema import REFERENCE_SCRIPT, census_script, full_schema_kind, full_schema_script
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(REFERENCE_SCRIPT), reason="reference checkout not present"
-)
+DIGEST_GOLDEN = os.path.join(os.path.dirname(__file__), "census_build_digest.json")
+
+
+def _build(spark, script):
+    tables = parse_schema_script(script)
+    plan = GenerationPlan(spark, tables, seed=11, default_rows=15)  # ROW_COUNT=15, run_engine.py:18
+    return tables, plan.run(materialize=True)
 
 
 @pytest.fixture(scope="module")
 def full_build(spark):
-    tables = parse_schema_script(REFERENCE_SCRIPT)
-    plan = GenerationPlan(spark, tables, seed=11, default_rows=15)  # ROW_COUNT=15, run_engine.py:18
-    built = plan.run(materialize=True)
-    return tables, built
+    return _build(spark, full_schema_script())
+
+
+@pytest.fixture(scope="module")
+def census_build(spark, full_build):
+    return full_build if full_schema_kind() == "census" else _build(spark, census_script())
 
 
 def test_all_tables_built(full_build):
@@ -102,7 +111,7 @@ def test_erasure_plan_covers_full_reference_schema():
         erasure_delete_statements,
     )
 
-    tables = parse_schema_script(REFERENCE_SCRIPT)
+    tables = parse_schema_script(full_schema_script())
     stmts = erasure_delete_statements(tables, "CariHesap", "Id IN ('probe')")
     deletes = [s.split()[2] for s in stmts if s.startswith("DELETE")]
     assert "CariHesap" in deletes and len(deletes) > 10
@@ -119,6 +128,12 @@ def test_erasure_plan_covers_full_reference_schema():
                 assert pos[name] < pos[p], (name, p)
 
 
+@pytest.mark.skipif(
+    full_schema_kind() != "reference",
+    reason="reference checkout not present: the 560 KB budget is measured on "
+    "the reference schema; on the census stand-in StokHareket (854 KB) and "
+    "CariHareket (781 KB) already fail whole-stage codegen",
+)
 def test_generated_code_stays_under_janino_budget(spark):
     """Whole-stage codegen cannot split a projection's doConsume method
     when it is fed by a fused Range scan (the row id arrives as a long
@@ -135,6 +150,10 @@ def test_generated_code_stays_under_janino_budget(spark):
     every table's pre-materialization plan and pins the headroom: a new
     rule that regresses past 560 KB fails here before it silently
     degrades the build."""
+    # the module's full_build fixture caches the same seed-11, 15-row
+    # tables: without this, CacheManager swaps every probed plan for an
+    # InMemoryTableScan and the sizes measured are the cache reads'
+    spark.catalog.clearCache()
     tables = parse_schema_script(REFERENCE_SCRIPT)
     plan = GenerationPlan(spark, tables, seed=11, default_rows=15)
     built = plan.run(materialize=False)
@@ -151,3 +170,30 @@ def test_generated_code_stays_under_janino_budget(spark):
         "(>=650 KB on this schema). Pack more draws per hash reference "
         "(generators._packed) or precompose a lexicon bank."
     )
+
+
+def _table_digest(df) -> str:
+    """sha256 over the schema and the sorted rows, each row rendered
+    JVM-side as JSON (session time zone, exact Spark value text) so the
+    digest does not depend on the Python process's locale or time zone."""
+    rows = sorted(r[0] for r in df.selectExpr("to_json(struct(*))").collect())
+    h = hashlib.sha256(df.schema.simpleString().encode())
+    for r in rows:
+        h.update(b"\n" + r.encode())
+    return h.hexdigest()
+
+
+def test_census_build_digest(census_build):
+    """Cross-commit byte identity of the generator: per-table digests of
+    the census stand-in built at seed 11, 15 rows/table, materialize=True.
+    Every value is a hash of (row id, seed, salt), so the digests move
+    only when generated output changes; a refactor of the executor or
+    the generators must leave tests/census_build_digest.json untouched.
+    Regenerate it (and say why in CHANGES.md) only for an intended
+    output change."""
+    _, built = census_build
+    got = {name: _table_digest(df) for name, df in sorted(built.items())}
+    with open(DIGEST_GOLDEN) as f:
+        want = json.load(f)
+    changed = sorted(n for n in set(want) | set(got) if want.get(n) != got.get(n))
+    assert not changed, f"{len(changed)} census tables changed output: {changed[:10]}"

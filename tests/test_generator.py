@@ -558,12 +558,12 @@ def test_array_literal_quotes_parse_in_both_parser_modes(spark):
     """ADVICE r6 (corrected by the r7 review): NO quoting scheme parses
     identically under both the default parser and the legacy
     spark.sql.parser.escapedStringLiterals=true (a doubled quote is not
-    collapsed in legacy mode — engine-verified), so any string
-    containing a quote OR backslash must route the array through the
-    F.lit fallback. Three arrays so each path is actually exercised:
-    plain strings take the fast expr path (asserted via the plan),
-    quote- and backslash-bearing arrays each take the fallback, and all
-    three round-trip bit-exact in BOTH parser modes."""
+    collapsed in legacy mode — engine-verified), so a string containing
+    a quote OR backslash renders as ``CAST(unbase64('..') AS STRING)``
+    (generators._qs). Three arrays so both renderings are exercised:
+    plain strings render as quoted literals, quote- and
+    backslash-bearing ones through unbase64, and all three round-trip
+    bit-exact in BOTH parser modes."""
     from synthetic_data_transfer_to_relational_database_spark.plans.executor import (
         _array_literal,
     )
@@ -572,17 +572,14 @@ def test_array_literal_quotes_parse_in_both_parser_modes(spark):
     quoted = ["it's", "two''quotes", "plain"]
     slashed = ["back\\slash", "plain"]
 
-    # routing is asserted structurally so no case silently takes the
-    # other path (the vacuous-test trap the r7 review caught): the SQL-
-    # text expr renders elements as 'a','b' (no space), F.lit as 'a', 'b'
-    assert "','" in str(_array_literal(plain))
-    assert "','" not in str(_array_literal(quoted))
-    assert "','" not in str(_array_literal(slashed))
+    # the rendering is asserted structurally so no case silently takes
+    # the other form (the vacuous-test trap the r7 review caught)
+    assert _array_literal(plain) == "array('alpha','beta gamma','d-elta_9')"
+    assert "unbase64" in _array_literal(quoted)
+    assert "unbase64" in _array_literal(slashed)
 
     def roundtrip(vals):
-        return spark.range(1).select(
-            _array_literal(vals).alias("a")
-        ).collect()[0]["a"]
+        return spark.range(1).selectExpr(f"{_array_literal(vals)} AS a").collect()[0]["a"]
 
     for vals in (plain, quoted, slashed):
         assert roundtrip(vals) == vals
@@ -689,9 +686,7 @@ def test_array_literal_fuzz_roundtrip_both_parser_modes(spark):
     vals += ["", "'", "''", "\\", "\\'", "'; DROP TABLE x; --", "a'b\\c"]
 
     def roundtrip():
-        return spark.range(1).select(
-            _array_literal(vals).alias("a")
-        ).collect()[0]["a"]
+        return spark.range(1).selectExpr(f"{_array_literal(vals)} AS a").collect()[0]["a"]
 
     assert roundtrip() == vals
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
@@ -699,6 +694,55 @@ def test_array_literal_fuzz_roundtrip_both_parser_modes(spark):
         assert roundtrip() == vals
     finally:
         spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+
+
+def test_binary_and_null_keys_take_the_collected_array_path(spark):
+    """Every key a parent can carry renders as SQL text: a binary-keyed
+    parent (bytearray keys, ``X'..'`` literals) and a natural-key parent
+    holding a NULL both go through the collected-array path; the child
+    samples only existing keys, the NULL key included."""
+    from synthetic_data_transfer_to_relational_database_spark.plans.executor import (
+        _array_literal,
+    )
+    from synthetic_data_transfer_to_relational_database_spark.plans.model import (
+        ColumnSpec,
+        FKSpec,
+        TableSpec,
+        wire_fk_rules,
+    )
+
+    assert _array_literal([b"\x00\xff", bytearray(b"a"), None]) == "array(X'00ff',X'61',NULL)"
+    with pytest.raises(TypeError):
+        _array_literal([object()])
+
+    tables = {
+        "B": TableSpec("B", [ColumnSpec("K", "binary", nullable=False)], pk=["K"]),
+        "N": TableSpec("N", [ColumnSpec("Kod", "string", length=4)], pk=["Kod"]),
+        "C": TableSpec(
+            "C",
+            [
+                ColumnSpec("Id", "int", nullable=False, rule="seq_int"),
+                ColumnSpec("BK", "binary", nullable=False),
+                ColumnSpec("NKod", "string", nullable=False, length=4),
+            ],
+            pk=["Id"],
+            fks=[FKSpec(["BK"], "B", ["K"]), FKSpec(["NKod"], "N", ["Kod"])],
+        ),
+    }
+    wire_fk_rules(tables)
+    plan = GenerationPlan(spark, tables, seed=3, row_counts={"C": 60})
+    b_keys = [bytearray(b"\x00\x01"), bytearray(b"\xfe"), bytearray(b"k3")]
+    n_keys = ["AA", None, "BB", "CC"]
+    # registered as built, so neither parent has a PK expression to
+    # compose and both FKs sample the collected key arrays
+    plan._built["B"] = spark.createDataFrame([(k,) for k in b_keys], "K binary")
+    plan._built["N"] = spark.createDataFrame([(k,) for k in n_keys], "Kod string")
+    plan._row_count_of.update(B=len(b_keys), N=len(n_keys))
+    rows = plan.build_one("C").collect()
+    assert len(rows) == 60
+    assert {bytes(r["BK"]) for r in rows} <= {bytes(k) for k in b_keys}
+    got = {r["NKod"] for r in rows}
+    assert got <= set(n_keys) and None in got and len(got) > 2
 
 
 def test_packed_draws_are_uniform_even_at_high_divisors(spark):

@@ -151,11 +151,14 @@ GO
 
 
 def test_reference_script_unique_indexes_enforced(spark):
-    """End-to-end against the real 85-table DDL: the parsed schema carries
+    """End-to-end against the 85-table DDL (the reference script, or the
+    census stand-in — tests/full_schema.py): the parsed schema carries
     unique indexes and a generated sample table honors one."""
     from synthetic_data_transfer_to_relational_database_spark.sources.ddl import parse_schema_script
 
-    tables = parse_schema_script("/root/reference/script.sql")
+    from .full_schema import full_schema_script
+
+    tables = parse_schema_script(full_schema_script())
     with_uniq = [t for t in tables.values() if t.unique_indexes]
     assert len(with_uniq) >= 20, "expected the script's unique indexes to parse"
     # Banka carries uBankaUlkeKod (script.sql:2621)
