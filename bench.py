@@ -268,13 +268,12 @@ def _ingest_corpus(spark, sf_dir: str, n_batches: int = 4, with_maintain: bool =
     additionally times the composed day-2 maintenance pass
     (compact_corpus + compact_index + verify_index, the `maintain --full`
     CLI body) against the corpus the drain just built; without it the
-    second element is None (tools/ingest_cost_split.py uses the drain
-    element only so its two-point model stays pure). The return shape is
-    flag-INdependent on purpose — r10 advice flagged the earlier
-    float-or-tuple shape as a misuse trap. The headline entry times the 4-batch
-    split; the cost-split experiment re-times the SAME corpus at 8
-    batches to separate fixed micro-batch overhead from per-row
-    work."""
+    second element is None. The return shape is flag-INdependent on
+    purpose — r10 advice flagged the earlier float-or-tuple shape as a
+    misuse trap. The headline entry times the 4-batch split; SCALE.md's
+    "Ingest cost model" re-timed the SAME corpus at 8 batches (drain
+    element only) to separate fixed micro-batch overhead from per-row
+    work, and its per-trigger layer table splits one trigger's cost."""
     import glob as _glob
     import shutil
     import tempfile

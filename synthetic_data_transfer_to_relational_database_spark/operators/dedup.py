@@ -604,15 +604,15 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["dedup_simhash"] = dedup_simhash
 
 
-def _cc_driver_unionfind(e: DataFrame) -> DataFrame:
-    """Driver-side exact connected components over a BOUNDED canonical
-    edge set (caller dispatches under ``spark.sdt.cc.collectMaxEdges``):
-    union-find with path compression, then one pass mapping every node to
-    its component MINIMUM — the same (node, label) rows the distributed
-    star contraction converges to, component roots excluded (a root never
-    appears as a star edge's src; callers coalesce absent nodes to
-    themselves)."""
-    rows = e.collect()  # bounded by the dispatch cap
+def _cc_driver_unionfind(e: DataFrame, rows: list) -> DataFrame:
+    """Driver-side exact connected components over the collected rows of
+    a BOUNDED canonical edge set ``e`` (caller dispatches under
+    ``spark.sdt.cc.collectMaxEdges``): union-find with path compression,
+    then one pass mapping every node to its component MINIMUM — the same
+    (node, label) rows the distributed star contraction converges to,
+    component roots excluded (a root never appears as a star edge's src;
+    callers coalesce absent nodes to themselves). No rows gives the empty
+    (node, label) frame."""
     parent: dict = {}
 
     def find(x):
@@ -659,7 +659,8 @@ def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
     exact union-find on the driver — identical labels, no shuffle
     rounds, no ``max_rounds`` involvement (union-find cannot return
     partial labels). Larger sets run the distributed star contraction
-    below. Path equality is test-pinned
+    below; an empty edge set returns the empty frame on either setting.
+    Path equality is test-pinned
     (tests/test_llm_ops.py::test_connected_components_dispatch_parity).
 
     Scale shape: each round is two self-contained groupBy+join passes over
@@ -680,31 +681,17 @@ def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    e = checkpoint_pinned(e, eager=True)
-    # ONE count job seeds both the empty short-circuit and the fixpoint
-    # test's left side: every round's test used to re-count the PREVIOUS
-    # round's checkpointed set (a job whose answer was already known) and
-    # the entry paid a separate isEmpty — the r18 ingest phase probe
-    # (tools/ingest_phase_probe.py) put cc_rounds at ~1.5-1.9 s/batch of
-    # pure fixed cost on 24-32-edge batches, so every job matters here.
-    n_e = e.count()
-    if n_e == 0:
-        # no edges ⇒ no non-trivial components (isolated nodes never
-        # appear; callers coalesce them to themselves). Skip the
-        # star-contraction round entirely — a round is ~6 shuffle jobs,
-        # and the CLEAN batch (zero near-dup pairs) is the common case
-        # in streaming ingest.
-        return e.select(F.col("src").alias("node"), F.col("dst").alias("label"))
     # cost-based dispatch (the window_rank / FK-sampling / percentile
     # pattern): a SMALL edge set runs exact union-find on the driver —
     # identical labels (component minimum), zero shuffle rounds. The r18
-    # ingest phase probe measured the distributed rounds at ~1.5-2 s of
-    # pure fixed cost per micro-batch on 24-32-edge batches (each round
-    # is ~6 exchanges + an eager checkpoint + fixpoint-test jobs, all
-    # latency at that size); union-find over a bounded collect is
-    # milliseconds. The bound is edges ALREADY counted for the empty
-    # short-circuit, so the dispatch costs no extra job; memory is
-    # broadcast-side class (50k edges ≈ a few MB of Row objects).
+    # ingest phase split (SCALE.md) measured the distributed rounds at
+    # ~1.5-2 s of pure fixed cost per micro-batch on 24-32-edge batches
+    # (each round is ~6 exchanges + an eager checkpoint + fixpoint-test
+    # jobs, all latency at that size); union-find over a bounded collect
+    # is milliseconds. ONE bounded ``limit(cap + 1)`` collect both sizes
+    # the edge set and fetches it, a single job per streaming trigger. Zero rows (the CLEAN batch, streaming ingest's
+    # common case) yields the empty frame. Memory is broadcast-side
+    # class (50k edges ≈ a few MB of Row objects).
     # Production tuning: spark.sdt.cc.collectMaxEdges (0 disables).
     # ADVICE r18 #4: read the conf from the SAME session handle the
     # collect path uses (e, the canonicalized frame), and WARN on an
@@ -720,8 +707,15 @@ def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
             stacklevel=2,
         )
         cap = 50000
-    if n_e <= cap:
-        return _cc_driver_unionfind(e)
+    cap = max(cap, 0)  # a negative cap disables the driver path, as 0 does
+    rows = e.limit(cap + 1).collect()
+    if len(rows) <= cap:
+        return _cc_driver_unionfind(e, rows)
+    e = checkpoint_pinned(e, eager=True)
+    # ONE count job seeds the fixpoint test's left side: every round's
+    # test used to re-count the PREVIOUS round's checkpointed set (a job
+    # whose answer was already known)
+    n_e = e.count()
 
     def large_star(e: DataFrame) -> DataFrame:
         # per node u: m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u

@@ -7,8 +7,11 @@ Implements SCALE.md §6 as code rather than advice:
 - ``write_bucketed``: hash-bucketed + sorted table registered in the
   catalog; two tables bucketed the same way equi-join with ZERO exchange
   (verified by tests/test_layout.py asserting no Exchange in the plan).
-- ``repartition_for_layout``: file-count hygiene — one task per partition
-  directory target, avoiding the many-small-files failure mode.
+
+Both writers repartition on their layout columns first
+(``write_partitioned`` at its default ``target_files_per_partition``), so
+a write's file count follows its directories or buckets, not the shuffle
+partition count: that avoids the many-small-files failure mode.
 
 Bucketing goes through ``saveAsTable`` because bucket metadata lives in
 the catalog (Spark cannot express it path-only).
@@ -44,8 +47,21 @@ def write_bucketed(
 ) -> None:
     """Bucketed (and optionally sorted) catalog table. Matching bucket
     spec on both sides of an equi-join removes the shuffle entirely; the
-    sort removes the sort step of sort-merge-join too."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
+    sort removes the sort step of sort-merge-join too.
+
+    Every write produces at most ``n_buckets`` files, whatever
+    ``spark.sql.shuffle.partitions`` or the input's partitioning is: the
+    frame is hash-repartitioned on ``bucket_cols`` into ``n_buckets``
+    first. Spark assigns a row's bucket with the same
+    ``pmod(murmur3(bucket_cols), n_buckets)`` the hash partitioner uses,
+    so each write task holds exactly one bucket and writes one file.
+    Without it every task writes one file per bucket it holds, and an
+    appended table gains up to tasks × buckets files per append."""
+    writer = (
+        df.repartition(n_buckets, *bucket_cols)
+        .write.mode(mode)
+        .bucketBy(n_buckets, *bucket_cols)
+    )
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     if path:

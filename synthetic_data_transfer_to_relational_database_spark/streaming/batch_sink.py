@@ -11,7 +11,7 @@ existence IS the commit, written and listed through the Hadoop
 FileSystem API (works on any cluster filesystem; a 0-byte create+close
 is visible-atomically on local/HDFS, and a single PUT on object stores).
 
-The r18 ingest phase probe (tools/ingest_phase_probe.py) measured the
+The r18 ingest phase split (SCALE.md, "r18 re-baseline") measured the
 original single-row-parquet-per-batch ledger at ~0.5-0.9 s per commit
 (one Spark job + the FileOutputCommitter's temporary-dir/rename dance
 for FOUR BYTES of payload) plus ~0.15 s per replay-guard read (a

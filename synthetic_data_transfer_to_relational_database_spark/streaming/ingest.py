@@ -342,8 +342,9 @@ def forget_documents(
         # a fully-emptied partition still writes a schema-bearing empty
         # part file (Spark 4 FileFormatWriter), so later corpus reads
         # keep working — locked by
-        # tests/test_streaming.py::test_forget_all_documents_keeps_corpus_readable
-        kept.write.mode("overwrite").parquet(path)
+        # tests/test_streaming.py::test_forget_all_documents_keeps_corpus_readable;
+        # rebalance sizes the rewritten files by bytes, as the ingest does
+        kept.hint("rebalance").write.mode("overwrite").parquet(path)
 
     idx = read_bucketed(spark, index_table)
     idx_total = idx.count()
@@ -454,7 +455,12 @@ def write_stream_dedup_ingest(
     4. survivors append to ``<out_path>/data/batch_id=N`` (idempotent
        batch-scoped overwrite) and their signatures (reused, not
        recomputed) append to the bucketed index table, so subsequent
-       batches dedup against them;
+       batches dedup against them. File counts follow bytes and
+       buckets, never ``spark.sql.shuffle.partitions``: the survivor
+       write is a ``rebalance`` whose files AQE sizes by bytes (one file
+       per directory at trigger scale), and the index append writes at
+       most ``_N_BUCKETS`` files (``write_bucketed``), so a trigger's
+       cost does not grow with the number of triggers before it;
     5. with ``compact_every=N``, every Nth committed batch runs
        ``compact_index`` so crash-replay signature twins never
        accumulate unboundedly (runs AFTER the ledger commit — a crash
@@ -508,7 +514,9 @@ def write_stream_dedup_ingest(
             )
             survivor_ids = reps.join(corpus_dupes, "doc_id", "left_anti")
             survivors = batch.join(survivor_ids, "doc_id", "left_semi").persist()
-            survivors.write.mode("overwrite").parquet(
+            # rebalance: AQE sizes the files by bytes (one at trigger
+            # scale), not one per shuffle partition
+            survivors.hint("rebalance").write.mode("overwrite").parquet(
                 os.path.join(out_path, "data", f"batch_id={batch_id}")
             )
             # 4. index append reuses the cached signatures

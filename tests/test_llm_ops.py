@@ -427,25 +427,33 @@ def test_connected_components_under_reliable_checkpoint(spark, tmp_path):
     checkpoints when a checkpoint dir is configured (the cluster
     setting): the persist -> eager checkpoint -> unpersist path must
     produce the same labels as localCheckpoint mode, with checkpoint
-    files actually written."""
+    files actually written. Forces the contraction (collectMaxEdges=0):
+    a 42-edge set would otherwise take the driver union-find, which
+    checkpoints nothing."""
     import os
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)] + [(90, 91), (91, 92)],
         "src long, dst long",
     )
-    baseline = {r["node"]: r["label"] for r in dedup.connected_components(edges).collect()}
-
-    ckpt = str(tmp_path / "cc_ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt)
+    spark.conf.set("spark.sdt.cc.collectMaxEdges", "0")
     try:
-        reliable = {
+        baseline = {
             r["node"]: r["label"] for r in dedup.connected_components(edges).collect()
         }
-        assert any(files for _, _, files in os.walk(ckpt)), "no checkpoint files"
+        ckpt = str(tmp_path / "cc_ckpt")
+        spark.sparkContext.setCheckpointDir(ckpt)
+        try:
+            reliable = {
+                r["node"]: r["label"] for r in dedup.connected_components(edges).collect()
+            }
+            assert any(files for _, _, files in os.walk(ckpt)), "no checkpoint files"
+        finally:
+            spark.sparkContext.setCheckpointDir(None)
     finally:
-        spark.sparkContext.setCheckpointDir(None)
+        spark.conf.unset("spark.sdt.cc.collectMaxEdges")
     assert reliable == baseline
+    assert baseline[40] == 0 and baseline[92] == 90
 
 
 def test_doc_pairs_jaccard_matches_bruteforce(spark, tmp_path):

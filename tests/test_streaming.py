@@ -811,6 +811,98 @@ def test_compact_index_under_reliable_checkpoint_dir(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {index_table}")
 
 
+def test_ingest_files_are_bucketed_and_bounded_per_write(spark, tmp_path):
+    """Every index part file holds only the rows of the bucket its name
+    carries — ``pmod(hash(band, band_sig), n)``, the id Spark's
+    bucketing assigns — after the trigger appends, a forget_documents
+    rewrite and a compact_index rewrite: the catalog's bucket metadata
+    is what lets the index join skip its shuffle, so a file holding a
+    foreign bucket's rows would silently lose matches. And the file
+    fan-out is set by buckets and bytes, never by the shuffle partition
+    count: each trigger adds at most ``_N_BUCKETS`` index files and one
+    file to its ``batch_id=N`` directory at this scale."""
+    import glob
+    import os as _os
+    import random
+    import re
+
+    import pandas as pd
+
+    from synthetic_data_transfer_to_relational_database_spark.operators.dedup import (
+        build_lsh_index,
+    )
+    from synthetic_data_transfer_to_relational_database_spark.sinks.parquet_layout import (
+        write_bucketed,
+    )
+    from synthetic_data_transfer_to_relational_database_spark.streaming.ingest import (
+        _N_BUCKETS,
+        bootstrap_index,
+        compact_index,
+        forget_documents,
+        stream_documents,
+        verify_index,
+        write_stream_dedup_ingest,
+    )
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(500)]
+
+    def mk(doc_id):
+        text = " ".join(rng.choice(vocab) for _ in range(30))
+        return {"doc_id": doc_id, "text": text, "lang": "en",
+                "source": "s", "n_chars": len(text)}
+
+    src, idx, out = tmp_path / "src", tmp_path / "idx", tmp_path / "corpus"
+    src.mkdir()
+
+    def index_files():
+        return sorted(glob.glob(str(idx / "*.parquet")))
+
+    def assert_bucketed():
+        rows = 0
+        for f in index_files():
+            bucket = int(re.match(r".*_(\d+)(?:\..*)?$", _os.path.basename(f)).group(1))
+            got = spark.read.parquet(f).groupBy(
+                F.expr(f"pmod(hash(band, band_sig), {_N_BUCKETS})").alias("b")
+            ).count().collect()
+            assert {r["b"] for r in got} <= {bucket}, (f, got)
+            rows += sum(r["count"] for r in got)
+        assert rows == spark.table(index_table).count() > 0
+
+    index_table = "t_bucket_files_idx"
+    spark.sql(f"DROP TABLE IF EXISTS {index_table}")
+    for b in range(3):
+        pd.DataFrame([mk(100 * b + i) for i in range(12)]).to_parquet(
+            src / f"b{b}.parquet", index=False
+        )
+        if b == 0:
+            empty = spark.createDataFrame([], spark.read.parquet(str(src)).schema)
+            bootstrap_index(empty, index_table, str(idx))
+        before = len(index_files())
+        write_stream_dedup_ingest(
+            stream_documents(spark, str(src)), index_table, str(out),
+            str(tmp_path / "ckpt"),
+        ).awaitTermination()
+        assert len(index_files()) - before <= _N_BUCKETS
+        assert len(glob.glob(str(out / "data" / f"batch_id={b}" / "*.parquet"))) == 1
+    assert_bucketed()
+
+    assert forget_documents(spark, index_table, str(out), [101])["index_rows_removed"] > 0
+    assert len(index_files()) <= _N_BUCKETS
+    assert_bucketed()
+
+    # replay twins, so compact_index rewrites the table
+    write_bucketed(
+        build_lsh_index(spark.read.parquet(str(out / "data" / "batch_id=2"))),
+        index_table, ["band", "band_sig"], _N_BUCKETS, mode="append",
+    )
+    assert compact_index(spark, index_table) > 0
+    assert len(index_files()) <= _N_BUCKETS
+    assert_bucketed()
+    assert verify_index(spark, index_table, str(out))["ok"]
+    spark.sql(f"DROP TABLE IF EXISTS {index_table}")
+
+
 def test_forget_all_documents_keeps_corpus_readable(spark, tmp_path):
     """Takedown of EVERY document must leave the corpus readable (Spark
     writes a schema-bearing empty part file per emptied partition) —

@@ -16,7 +16,7 @@ work grows:
 Reports wall seconds per config, the 10×/1× ratio, the implied scaling
 exponent log10(T10/T1), and the marginal per-row cost derived from the
 two-point model T(N) = fixed + m·N (the same cancellation trick as
-tools/ingest_cost_split.py). Prints one JSON line; paste the table
+SCALE.md's "Ingest cost model"). Prints one JSON line; paste the table
 into SCALE.md.
 
 Usage: python tools/gen_scale_probe.py            # both pipelines
