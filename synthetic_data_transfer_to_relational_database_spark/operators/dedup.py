@@ -21,8 +21,6 @@ Scale notes (the whole point of these algorithms):
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -604,10 +602,16 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["dedup_simhash"] = dedup_simhash
 
 
+# Canonical edge sets up to this size run exact union-find on the
+# driver instead of the distributed star contraction (see
+# connected_components).
+_CC_COLLECT_MAX_EDGES = 50_000
+
+
 def _cc_driver_unionfind(e: DataFrame, rows: list) -> DataFrame:
     """Driver-side exact connected components over the collected rows of
     a BOUNDED canonical edge set ``e`` (caller dispatches under
-    ``spark.sdt.cc.collectMaxEdges``): union-find with path compression,
+    ``_CC_COLLECT_MAX_EDGES``): union-find with path compression,
     then one pass mapping every node to its component MINIMUM — the same
     (node, label) rows the distributed star contraction converges to,
     component roots excluded (a root never appears as a star edge's src;
@@ -655,7 +659,8 @@ def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
     nodes don't appear (callers left-join and coalesce to the node id).
 
     Physical dispatch (r18): canonical edge sets at or under
-    ``spark.sdt.cc.collectMaxEdges`` (default 50 000; 0 disables) run
+    ``_CC_COLLECT_MAX_EDGES`` (50 000; tests patch it to 0 to force
+    the contraction) run
     exact union-find on the driver — identical labels, no shuffle
     rounds, no ``max_rounds`` involvement (union-find cannot return
     partial labels). Larger sets run the distributed star contraction
@@ -689,27 +694,12 @@ def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
     # (each round is ~6 exchanges + an eager checkpoint + fixpoint-test
     # jobs, all latency at that size); union-find over a bounded collect
     # is milliseconds. ONE bounded ``limit(cap + 1)`` collect both sizes
-    # the edge set and fetches it, a single job per streaming trigger. Zero rows (the CLEAN batch, streaming ingest's
-    # common case) yields the empty frame. Memory is broadcast-side
-    # class (50k edges ≈ a few MB of Row objects).
-    # Production tuning: spark.sdt.cc.collectMaxEdges (0 disables).
-    # ADVICE r18 #4: read the conf from the SAME session handle the
-    # collect path uses (e, the canonicalized frame), and WARN on an
-    # unparseable value instead of silently resetting the cap — a typo'd
-    # production knob should be visible, not absorbed.
-    raw_cap = e.sparkSession.conf.get("spark.sdt.cc.collectMaxEdges", "50000")
-    try:
-        cap = int(raw_cap)
-    except ValueError:
-        warnings.warn(
-            f"spark.sdt.cc.collectMaxEdges={raw_cap!r} is not an integer; "
-            "using the 50000 default",
-            stacklevel=2,
-        )
-        cap = 50000
-    cap = max(cap, 0)  # a negative cap disables the driver path, as 0 does
-    rows = e.limit(cap + 1).collect()
-    if len(rows) <= cap:
+    # the edge set and fetches it, a single job per streaming trigger.
+    # Zero rows (the CLEAN batch, streaming ingest's common case) yields
+    # the empty frame. Memory is broadcast-side class (50k edges ≈ a few
+    # MB of Row objects).
+    rows = e.limit(_CC_COLLECT_MAX_EDGES + 1).collect()
+    if len(rows) <= _CC_COLLECT_MAX_EDGES:
         return _cc_driver_unionfind(e, rows)
     e = checkpoint_pinned(e, eager=True)
     # ONE count job seeds the fixpoint test's left side: every round's

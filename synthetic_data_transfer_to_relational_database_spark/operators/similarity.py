@@ -58,140 +58,23 @@ def _arr_lit(c: list[float]) -> str:
     return "array(" + ", ".join(_dlit(v) for v in c) + ")"
 
 
-def _dot_sql_lit(col_sql: str, c: list[float]) -> str:
-    """Dot product of an array column against a DRIVER-HELD centroid,
-    as ONE SQL string: on rows of exactly the model's width, the
-    unrolled tree ``((0.0 + (CAST(col[0] AS DOUBLE) * c0)) + …)`` — the
-    identical left-associated IEEE tree as ``aggregate(zip_with(col,
-    array(c), (a, b) -> cast(a as double) * b), 0.0D, (acc, x) -> acc +
-    x)``, so every bit matches the lambda form it replaces (pinned by
-    test_llm_ops.py::test_unrolled_literal_dot_bitwise_matches_fold);
-    any OTHER width falls through a size() guard to that textual fold,
-    reproducing the old behavior exactly (zip_with NULL-pads, so a
-    mismatched row yields NULL — a visible corruption signal — instead
-    of a silently truncated finite dot). The unrolled branch is what
-    whole-stage codegen compiles where the lambda fold is
-    CodegenFallback — interpreted per row, the measured dominator of
-    the vector serve paths (SCALE.md r13-r15). SQL text, not Column
-    arithmetic, for the r17 reason: the Column API pays py4j
-    round-trips per element."""
-    s = "CAST(0.0 AS DOUBLE)"
-    for i, v in enumerate(c):
-        s = f"({s} + (CAST({col_sql}[{i}] AS DOUBLE) * {_dlit(v)}))"
-    fold = _fold_sum(
-        f"zip_with({col_sql}, {_arr_lit(c)}, (a, b) -> cast(a as double) * b)"
-    )
-    return f"(CASE WHEN size({col_sql}) = {len(c)} THEN {s} ELSE {fold} END)"
-
-
-# Above this dimension the unrolled trees stop being obviously cheap to
-# analyze/compile: the unrolled left spine's Catalyst recursion is
-# O(dim) (StackOverflowError at 384, SCALE.md r16), and ~768 literal
-# statements in one method overflowed janino's per-statement recursion
-# on a vanilla 1g driver. One cap for every unrolled tree (the literal
-# centroid trees here and vector_index._cosine_col); callers keep the
-# bit-identical lambda-fold form past it, so wide-dim paths are
-# untouched.
-_LIT_UNROLL_MAX_DIM = 256
-
-# r19 (ADVICE r18 #3): the dim cap bounds PER-CENTROID tree depth only;
-# a k-centroid projection emits k×dim terms in ONE generated method, so
-# the janino budget must also cap the TOTAL. 2048 = the widest shape the
-# r18 paths ever took (8 cells × 256 dims); past it the generated method
-# would silently fall back to interpreted compile-retry — the fold form
-# is the honest choice there.
-_LIT_UNROLL_MAX_TERMS = 2048
-
-# The corpus size (Catalyst's compressed-bytes estimate) from which the
-# build side takes the literal trees — see ``_lit_build_path``.
-_LIT_UNROLL_MIN_BYTES = 4 << 20
-
-
-def _lit_build_path(df: DataFrame, cvs: list[list[float]]) -> bool:
-    """BUILD-side literal-unroll dispatch (r19, bench-adjudicated): the
-    unrolled-literal centroid trees (`_dot_sql_lit`/`_d2_sql_lit`) carry
-    a per-INVOCATION driver fixed cost — each Lloyd iteration / assign
-    embeds that model's values as scalar literals, so the optimizer,
-    codegen source build and janino compile re-run on a unique ~k×dim-term
-    tree every time (~0.7-1.0 s per projection measured,
-    tools/lloyd_cost_probe.py, settled rig). The compiled row eval only
-    pays that back when the corpus is big enough: at the bench's 2000-row
-    corpus the fold arm ran the whole sim_search_index entry 4.3-4.6 s vs
-    6.7-7.4 s for the literal arm (3 reps each, paired), while the fold's
-    interpreted per-row×per-cell×per-dim eval overtakes the fixed cost
-    between the bench's 2000 vectors and the sf1-replica's 20k (entry
-    A/B there: lit 4.76-5.17 s vs fold 5.45-6.33 s warm). Dispatch on
-    Catalyst's input-size estimate — the repo's standing
-    smallInputBytes pattern; NOTE it reports COMPRESSED parquet bytes
-    (~260 B per dim-64 vector on the testdata, not the 512 B raw) —
-    against ``_LIT_UNROLL_MIN_BYTES`` (4 MiB ≈ 16k dim-64 vectors
-    compressed, between the two measured points; 0 forces the literal
-    path, the plan-shape tests patch it so). Both branches are
-    bit-identical (r18 pins), so the dispatch can never change results.
-
-    Also guards the empty-model IndexError (ADVICE r18 #2) and the k×dim
-    janino term budget (ADVICE r18 #3)."""
-    if not cvs or len(cvs[0]) > _LIT_UNROLL_MAX_DIM:
-        return False
-    if len(cvs) * len(cvs[0]) > _LIT_UNROLL_MAX_TERMS:
-        return False
-    from .skew import estimated_plan_bytes
-
-    return estimated_plan_bytes(df) >= _LIT_UNROLL_MIN_BYTES
-
-
 def _dot_sql_fold(col_sql: str, c: list[float]) -> str:
     """The zip_with/aggregate dot-product FOLD against a driver-held
     centroid, built as ONE SQL string — the exact expression the
     ``F.zip_with(col, F.lit(c), …)`` Column form produces, without its
     construction cost: ``F.lit(list)`` + the lambda Columns pay py4j
     round trips per element, measured at ~1.5 s per 3-iteration refine
-    at 8×64 (tools/lloyd_cost_probe.py, the fold arm's 'parse' phase)
-    where this text parses in milliseconds. Identical operands, casts
-    and left-fold order ⇒ bit-identical results (the r18 pins compare
-    the unrolled tree against exactly this fold text)."""
+    at 8×64 (OPTIMIZATION_r19.md, work item 1) where this text parses in
+    milliseconds. Identical operands, casts and left-fold order ⇒
+    bit-identical results (pinned against the Column-API fold by
+    test_llm_ops.py::test_dot_sql_fold_bitwise_matches_column_fold).
+    The build side's one nearest-centroid form (Lloyd refinement and
+    ``_ivf_serve``): an unrolled-literal twin was ~2× slower at the
+    20k-vector corpora it was chosen for, because each new model's
+    literals re-run optimizer, codegen and janino on a k×dim-term tree
+    (SCALE.md, "Build-side literal unroll removed")."""
     return _fold_sum(
         f"zip_with({col_sql}, {_arr_lit(c)}, (a, b) -> cast(a as double) * b)"
-    )
-
-
-def _d2_sql_lit(col_sql: str, c: list[float]) -> str:
-    """Squared-L2 distance against a driver-held centroid — the
-    ``_dot_sql_lit`` recipe for the d2 fold: unrolled tree bit-identical
-    to ``aggregate(zip_with(col, cv, (a, b) -> (cast(a as double) - b) *
-    (cast(a as double) - b)), 0.0D, (acc, x) -> acc + x)`` on
-    exact-width rows, with the same textual fold as the size()-guarded
-    fallback on any other width (NULL, never a truncated distance)."""
-    s = "CAST(0.0 AS DOUBLE)"
-    for i, v in enumerate(c):
-        t = f"(CAST({col_sql}[{i}] AS DOUBLE) - {_dlit(v)})"
-        s = f"({s} + ({t} * {t}))"
-    fold = _fold_sum(
-        f"zip_with({col_sql}, {_arr_lit(c)}, "
-        "(a, b) -> (cast(a as double) - b) * (cast(a as double) - b))"
-    )
-    return f"(CASE WHEN size({col_sql}) = {len(c)} THEN {s} ELSE {fold} END)"
-
-
-def _argmin_assign_lit(
-    vectors: DataFrame, centroids: list[tuple[int, list[float]]], id_col: str
-) -> DataFrame:
-    """Literal-model twin of ``_argmin_assign`` for DRIVER-HELD models
-    at dim <= _LIT_UNROLL_MAX_DIM: the same d2 bits (_d2_sql_lit) and
-    the same first-minimum tiebreak over the id-ordered array, but as a
-    PURE PROJECTION — no crossJoin, no broadcast, no interpreted lambda
-    per row (the zip_with/aggregate fold is CodegenFallback; at build
-    scale the whole corpus pays it per centroid). Row-identity to the
-    struct-row path is test-pinned (test_vector_index.py)."""
-    cents = sorted(centroids)
-    d2s = "array(" + ",".join(_d2_sql_lit("embedding", cv) for _, cv in cents) + ")"
-    ids = "array(" + ",".join(str(int(cid)) for cid, _ in cents) + ")"
-    scored = vectors.select("*", F.expr(d2s).alias("__d2s"))
-    idx = F.array_position(F.col("__d2s"), F.array_min("__d2s"))
-    return scored.select(
-        *vectors.columns,
-        F.element_at(F.expr(ids), idx.cast("int")).alias(id_col),
-        F.array_min("__d2s").alias("d2"),
     )
 
 
@@ -819,21 +702,9 @@ def sim_search_ivf_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_serve(e: DataFrame, cvs: list[list[float]]) -> DataFrame:
     """The IVF serving plan for a given centroid model (see callers)."""
-    if _lit_build_path(e, cvs):
-        # unrolled literal dots (r18, bit-identical — see _dot_sql_lit),
-        # behind the r19 corpus-size dispatch: the lambda form evaluates
-        # interpreted per row per centroid, but the literal tree pays
-        # plan-processing fixed cost per invocation (_lit_build_path)
-        cell_scores = F.expr(
-            "array(" + ",".join(_dot_sql_lit("embedding", c) for c in cvs) + ")"
-        )
-    else:
-        # small corpora / wide dims: the fold form — as SQL TEXT
-        # (_dot_sql_fold): the old F.lit(c)+lambda Column construction
-        # paid py4j per element (r19; the r6/r17 lesson again)
-        cell_scores = F.expr(
-            "array(" + ",".join(_dot_sql_fold("embedding", c) for c in cvs) + ")"
-        )
+    cell_scores = F.expr(
+        "array(" + ",".join(_dot_sql_fold("embedding", c) for c in cvs) + ")"
+    )
     # named column first: array_position + array_max would otherwise
     # re-evaluate all _N_CELLS dot products twice
     scored = e.select(
@@ -894,29 +765,10 @@ def _lloyd_refine(e: DataFrame, cvs: list[list[float]], iters: int = 3) -> list[
     import math
 
     n_dims = len(cvs[0])
-    # r19: ONE dispatch decision for all iterations — the corpus and the
-    # model shape are loop-invariant, and the size estimate is a ~0.1 s
-    # py4j round trip not worth paying per iteration
-    use_lit = _lit_build_path(e, cvs)
     for _ in range(iters):
-        if use_lit:
-            # unrolled literal dots (r18): the zip_with/aggregate lambda
-            # form was CodegenFallback — interpreted per row per centroid
-            # per iteration; the SQL-text tree is bit-identical
-            # (_dot_sql_lit) and whole-stage-codegen compiled. Each
-            # iteration's UNIQUE literals re-pay optimizer+codegen+janino
-            # (~1 s, tools/lloyd_cost_probe.py) — _lit_build_path only
-            # routes here when the corpus eval savings cover it.
-            cs = F.expr(
-                "array(" + ",".join(_dot_sql_lit("embedding", c) for c in cvs) + ")"
-            )
-        else:
-            # small corpora / wide dims: the fold form — as SQL TEXT
-            # (_dot_sql_fold): the old F.lit(c)+lambda Column form paid
-            # ~1.5 s of py4j per refine at 8×64 (lloyd_cost_probe 'parse')
-            cs = F.expr(
-                "array(" + ",".join(_dot_sql_fold("embedding", c) for c in cvs) + ")"
-            )
+        cs = F.expr(
+            "array(" + ",".join(_dot_sql_fold("embedding", c) for c in cvs) + ")"
+        )
         scored = e.select("embedding", cs.alias("cs"))
         assigned = scored.select(
             "embedding",

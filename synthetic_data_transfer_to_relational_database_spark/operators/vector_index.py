@@ -101,12 +101,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window  # search top-k only; assignment is window-free
 
 from .similarity import (
-    _LIT_UNROLL_MAX_DIM,
     _argmin_assign,
-    _argmin_assign_lit,
     _dot_sql_cols,
     _fold_sum,
-    _lit_build_path,
     _lloyd_refine,
     _seed_centroids,
 )
@@ -414,17 +411,6 @@ def _assign(spark: SparkSession, vectors: DataFrame, centroids: list[tuple[int, 
     crossJoin+row_number form shuffled k copies of every 64-float
     embedding to pick rn=1, k × batch × payload bytes for a user-knob k).
     Plan-asserted shuffle-free in tests/test_plans.py."""
-    if _lit_build_path(vectors, [cv for _, cv in centroids]):
-        # r18: the model is driver-held here, so at codegen-safe dims the
-        # argmin is an unrolled-literal pure projection (no broadcast, no
-        # interpreted zip_with fold over the whole corpus per centroid) —
-        # d2 bits and tiebreak identical, pinned in test_vector_index.py.
-        # r19: behind the corpus-size dispatch (similarity._lit_build_path)
-        # — the unique-literal tree costs ~1 s of per-invocation plan
-        # processing that a small batch never earns back.
-        return _argmin_assign_lit(
-            vectors.select("vec_id", "label", "embedding"), centroids, "cell_id"
-        )
     cents_row = spark.createDataFrame(
         [([(cid, cv) for cid, cv in sorted(centroids)],)],
         "__cents array<struct<cell_id:int,cv:array<double>>>",
@@ -1251,6 +1237,14 @@ def search_vector_index(
 # the 5k-query serve probe. ``_cosine_col`` therefore picks the unrolled
 # tree only when the session's hugeMethodLimit makes it fast.
 _JIT_METHOD_LIMIT = 8000
+
+# Widest dim for which ``_cosine_col`` builds the unrolled serve tree:
+# its left spine's Catalyst recursion is O(dim) (StackOverflowError at
+# 384, SCALE.md r16), and ~768 statements in one generated method
+# overflowed janino's per-statement recursion on a vanilla 1g driver.
+# Past it the serve keeps the bit-identical fold, so wide dims are
+# untouched.
+_LIT_UNROLL_MAX_DIM = 256
 
 
 def _cosine_col(dim: int, spark: SparkSession):

@@ -68,6 +68,12 @@ def _sql_name(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _rank_sorted(keys) -> list:
+    """Parent keys in global key-rank order, the order the join path
+    numbers them in (``_indexed_parent``: ascending, NULLs first)."""
+    return sorted(keys, key=lambda v: (v is not None, v))
+
+
 def _array_literal(values: list) -> str:
     """ONE ``array(...)`` literal for a Python list, as SQL text.
 
@@ -387,7 +393,7 @@ class GenerationPlan:
                 # mutate)
                 or len(prepped[1]) != len(override)
             ):
-                srt = sorted(override)
+                srt = _rank_sorted(override)
                 prepped = (override, srt, sum(len(str(v)) + 3 for v in srt))
                 self._override_prepped[memo_key] = prepped
             _, override, est = prepped
@@ -431,9 +437,11 @@ class GenerationPlan:
             and n_parent * self._key_width_estimate(parent_name, parent_col)
             <= self.broadcast_key_bytes
         ):
-            keys = [r[0] for r in parent_df.select(parent_col).collect()]
-            # ONE array literal (a single Catalyst Literal node), not 10^5
-            # per-element literals
+            # global key rank, as the readback override above and the
+            # join path do, so the dispatch outcome never changes which
+            # key a child row draws. ONE array literal (a single Catalyst
+            # Literal node), not 10^5 per-element literals
+            keys = _rank_sorted(r[0] for r in parent_df.select(parent_col).collect())
             idx = self._sample_idx(id_sql, salt, len(keys), col.unique, child_rows)
             return f"element_at({_array_literal(keys)}, CAST(({idx}) + 1 AS INT))"
 
@@ -541,13 +549,14 @@ class GenerationPlan:
         # Requests are grouped per (parent, fk constraint salt): composite-FK
         # columns that share a constraint join against ONE sampled parent
         # row, keeping tuple consistency on this path too. The final
-        # projection puts the joined columns after the inline ones.
+        # projection keeps the table's column order, so the output schema
+        # does not depend on which FKs took the join.
         grouped: dict[tuple[str, str], list[tuple[ColumnSpec, str]]] = {}
         for col, parent_name, parent_col in join_requests:
             salt = col.fk_salt or f"{table.name}.{col.name}"
             grouped.setdefault((parent_name, salt), []).append((col, parent_col))
 
-        final = [_sql_name(name) for name in names]
+        final = {name: _sql_name(name) for name in names}
         for (parent_name, salt), pairs in grouped.items():
             parent_idx, n_parent = self._indexed_parent(parent_name, pairs)
             uniq = any(col.unique for col, _ in pairs)
@@ -557,11 +566,14 @@ class GenerationPlan:
                 .join(parent_idx, F.col("__pick") == F.col("__pidx"), "left")
                 .drop("__pick", "__pidx")
             )
-            final += [
-                f"{_fk_sql(col, _sql_name(f'__pk_{col.name}'), table_seed)} AS {_sql_name(col.name)}"
-                for col, _ in pairs
-            ]
-        return out.selectExpr(*final)
+            for col, _ in pairs:
+                final[col.name] = (
+                    f"{_fk_sql(col, _sql_name(f'__pk_{col.name}'), table_seed)}"
+                    f" AS {_sql_name(col.name)}"
+                )
+        return out.selectExpr(
+            *[final[c.name] for c in table.generated_columns if c.name in final]
+        )
 
     # ------------------------------------------------------------------
     def _indexed_parent(

@@ -47,10 +47,10 @@ _MODULES = [
 #      text_doc_pairs_jaccard / text_containment (verification rewritten
 #      to array_intersect over grouped token sets), vector_norms (local
 #      folds unrolled), the persisted-index serves sim_search_index /
-#      sim_search_warm / embedding_index_refresh (ride the
-#      _lit_build_path size dispatch AND the serve's unrolled tree from
+#      sim_search_warm / embedding_index_refresh (ride the build's
+#      nearest-centroid assignment AND the serve's unrolled tree from
 #      similarity._dot_sql_cols), sim_search_ivf_lloyd /
-#      sim_search_ivfpq (ride _ivf_serve/_lloyd_refine dispatch,
+#      sim_search_ivfpq (ride _ivf_serve/_lloyd_refine's fold text,
 #      rows-only), and gen_synthetic_orders / fk_sample_join (ride the
 #      generator's split()-literal array rendering). The dedup keys'
 #      only r19 diff is a warn-on-misconfig branch — bookkeeping, not

@@ -1,10 +1,14 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, so a second checkout (an A/B
+# copy, a CI clone) tests its own package
+REPO_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO_ROOT))
 
 from synthetic_data_transfer_to_relational_database_spark.session import get_spark
 

@@ -19,9 +19,9 @@ from .full_schema import REFERENCE_SCRIPT, census_script, full_schema_kind, full
 DIGEST_GOLDEN = os.path.join(os.path.dirname(__file__), "census_build_digest.json")
 
 
-def _build(spark, script):
+def _build(spark, script, **plan_kw):
     tables = parse_schema_script(script)
-    plan = GenerationPlan(spark, tables, seed=11, default_rows=15)  # ROW_COUNT=15, run_engine.py:18
+    plan = GenerationPlan(spark, tables, seed=11, default_rows=15, **plan_kw)  # ROW_COUNT=15, run_engine.py:18
     return tables, plan.run(materialize=True)
 
 
@@ -183,6 +183,13 @@ def _table_digest(df) -> str:
     return h.hexdigest()
 
 
+def _changed_vs_golden(built) -> list[str]:
+    got = {name: _table_digest(df) for name, df in sorted(built.items())}
+    with open(DIGEST_GOLDEN) as f:
+        want = json.load(f)
+    return sorted(n for n in set(want) | set(got) if want.get(n) != got.get(n))
+
+
 def test_census_build_digest(census_build):
     """Cross-commit byte identity of the generator: per-table digests of
     the census stand-in built at seed 11, 15 rows/table, materialize=True.
@@ -192,8 +199,19 @@ def test_census_build_digest(census_build):
     Regenerate it (and say why in CHANGES.md) only for an intended
     output change."""
     _, built = census_build
-    got = {name: _table_digest(df) for name, df in sorted(built.items())}
-    with open(DIGEST_GOLDEN) as f:
-        want = json.load(f)
-    changed = sorted(n for n in set(want) | set(got) if want.get(n) != got.get(n))
+    changed = _changed_vs_golden(built)
     assert not changed, f"{len(changed)} census tables changed output: {changed[:10]}"
+
+
+def test_census_build_digest_with_join_sampled_fks(spark):
+    """FK sampling must not depend on the dispatch: with
+    ``broadcast_key_bytes=0`` every generated parent that is not
+    expression-computable goes through the equi-join path
+    (``_indexed_parent``) instead of the collected key array. Both index
+    parent keys by global key rank and keep the table's column order, so
+    the build matches the default build's golden digests table for
+    table."""
+    _, built = _build(spark, census_script(), broadcast_key_bytes=0)
+    changed = _changed_vs_golden(built)
+    assert not changed, f"{len(changed)} census tables differ by FK dispatch: {changed[:10]}"
+

@@ -204,31 +204,28 @@ def test_incremental_dedup_bucketed_index_join_shuffles_only_the_batch(spark, sf
         spark.sql("DROP TABLE IF EXISTS t_lsh_index")
 
 
-def test_connected_components_deep_chain(spark):
+def test_connected_components_deep_chain(spark, monkeypatch):
     """Star contraction must handle components whose diameter dwarfs the
     round budget that one-hop label propagation could afford: a 150-node
     chain (diameter 149) plus a triangle converge in O(log n) rounds,
     every node labeled with its component minimum. Forces the
-    DISTRIBUTED path (collectMaxEdges=0) — the r18 small-edge-set driver
-    dispatch would otherwise swallow this star-contraction drill."""
+    DISTRIBUTED path (_CC_COLLECT_MAX_EDGES=0) — the r18 small-edge-set
+    driver dispatch would otherwise swallow this star-contraction drill."""
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(149)] + [(500, 501), (501, 502), (500, 502)],
         "src long, dst long",
     )
-    spark.conf.set("spark.sdt.cc.collectMaxEdges", "0")
-    try:
-        labels = {
-            r["node"]: r["label"] for r in dedup.connected_components(edges).collect()
-        }
-    finally:
-        spark.conf.unset("spark.sdt.cc.collectMaxEdges")
+    monkeypatch.setattr(dedup, "_CC_COLLECT_MAX_EDGES", 0)
+    labels = {
+        r["node"]: r["label"] for r in dedup.connected_components(edges).collect()
+    }
     assert all(labels[i] == 0 for i in range(1, 150))
     assert labels[501] == 500 and labels[502] == 500
     # component roots carry no star edge — callers coalesce to self
     assert 0 not in labels and 500 not in labels
 
 
-def test_connected_components_dispatch_parity(spark):
+def test_connected_components_dispatch_parity(spark, monkeypatch):
     """The r18 cost-based dispatch (small canonical edge sets run exact
     union-find on the driver, the window_rank smallInputBytes pattern)
     must be label-IDENTICAL to the distributed star contraction — same
@@ -247,14 +244,10 @@ def test_connected_components_dispatch_parity(spark):
         (r["node"], r["label"])
         for r in dedup.connected_components(edges).collect()  # default cap: driver path
     }
-    spark.conf.set("spark.sdt.cc.collectMaxEdges", "0")
-    try:
-        dist = {
-            (r["node"], r["label"])
-            for r in dedup.connected_components(edges).collect()
-        }
-    finally:
-        spark.conf.unset("spark.sdt.cc.collectMaxEdges")
+    monkeypatch.setattr(dedup, "_CC_COLLECT_MAX_EDGES", 0)
+    dist = {
+        (r["node"], r["label"]) for r in dedup.connected_components(edges).collect()
+    }
     assert driver == dist and len(driver) > 0
 
 
@@ -272,21 +265,18 @@ def test_connected_components_empty_and_selfloop_fast_path(spark):
     assert dedup.connected_components(loops).count() == 0
 
 
-def test_connected_components_refuses_partial_labels(spark):
+def test_connected_components_refuses_partial_labels(spark, monkeypatch):
     """ADVICE r2: hitting the round cap without a fixpoint must raise —
     partial labels are wrong labels, never returned silently. Applies to
-    the DISTRIBUTED path only (forced via collectMaxEdges=0): the r18
-    driver union-find dispatch is exact by construction and has no
+    the DISTRIBUTED path only (forced via _CC_COLLECT_MAX_EDGES=0): the
+    r18 driver union-find dispatch is exact by construction and has no
     rounds to cap."""
     import pytest
 
     edges = spark.createDataFrame([(i, i + 1) for i in range(99)], "src long, dst long")
-    spark.conf.set("spark.sdt.cc.collectMaxEdges", "0")
-    try:
-        with pytest.raises(RuntimeError, match="did not converge"):
-            dedup.connected_components(edges, max_rounds=1)
-    finally:
-        spark.conf.unset("spark.sdt.cc.collectMaxEdges")
+    monkeypatch.setattr(dedup, "_CC_COLLECT_MAX_EDGES", 0)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(edges, max_rounds=1)
 
 
 def test_dedup_cluster_matches_bruteforce_closure(spark, sf_dir):
@@ -422,36 +412,33 @@ def test_approx_percentile_rank_error_bound(spark, sf_dir_mid):
         assert got[flag]["n"] == n
 
 
-def test_connected_components_under_reliable_checkpoint(spark, tmp_path):
+def test_connected_components_under_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """The contraction loop's per-round lineage cut switches to RELIABLE
     checkpoints when a checkpoint dir is configured (the cluster
     setting): the persist -> eager checkpoint -> unpersist path must
     produce the same labels as localCheckpoint mode, with checkpoint
-    files actually written. Forces the contraction (collectMaxEdges=0):
-    a 42-edge set would otherwise take the driver union-find, which
-    checkpoints nothing."""
+    files actually written. Forces the contraction
+    (_CC_COLLECT_MAX_EDGES=0): a 42-edge set would otherwise take the
+    driver union-find, which checkpoints nothing."""
     import os
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)] + [(90, 91), (91, 92)],
         "src long, dst long",
     )
-    spark.conf.set("spark.sdt.cc.collectMaxEdges", "0")
+    monkeypatch.setattr(dedup, "_CC_COLLECT_MAX_EDGES", 0)
+    baseline = {
+        r["node"]: r["label"] for r in dedup.connected_components(edges).collect()
+    }
+    ckpt = str(tmp_path / "cc_ckpt")
+    spark.sparkContext.setCheckpointDir(ckpt)
     try:
-        baseline = {
+        reliable = {
             r["node"]: r["label"] for r in dedup.connected_components(edges).collect()
         }
-        ckpt = str(tmp_path / "cc_ckpt")
-        spark.sparkContext.setCheckpointDir(ckpt)
-        try:
-            reliable = {
-                r["node"]: r["label"] for r in dedup.connected_components(edges).collect()
-            }
-            assert any(files for _, _, files in os.walk(ckpt)), "no checkpoint files"
-        finally:
-            spark.sparkContext.setCheckpointDir(None)
+        assert any(files for _, _, files in os.walk(ckpt)), "no checkpoint files"
     finally:
-        spark.conf.unset("spark.sdt.cc.collectMaxEdges")
+        spark.sparkContext.setCheckpointDir(None)
     assert reliable == baseline
     assert baseline[40] == 0 and baseline[92] == 90
 
@@ -864,12 +851,12 @@ def test_text_ngram_lm_backoff_smooths_and_matches_staged_oracle(
     assert have == want
 
 
-def test_unrolled_literal_dot_bitwise_matches_fold(spark, sf_dir):
-    """_dot_sql_lit (r18): the unrolled literal-dot SQL tree that
-    replaced the interpreted zip_with/aggregate lambda in _lloyd_refine
-    and _ivf_serve must be BIT-identical to the lambda form — same
-    left-associated IEEE order, same casts — over real embeddings and an
-    adversarial centroid (negatives, tiny/huge magnitudes)."""
+def test_dot_sql_fold_bitwise_matches_column_fold(spark, sf_dir):
+    """_dot_sql_fold: the SQL-text centroid dot that _lloyd_refine and
+    _ivf_serve build their nearest-centroid plans from must be
+    BIT-identical to the Column-API zip_with/aggregate fold it replaced
+    — same left-fold IEEE order, same casts — over real embeddings and
+    an adversarial centroid (negatives, tiny/huge magnitudes)."""
     import struct
 
     from synthetic_data_transfer_to_relational_database_spark.operators import (
@@ -890,7 +877,7 @@ def test_unrolled_literal_dot_bitwise_matches_fold(spark, sf_dir):
     rows = e.select(
         "vec_id",
         fold.alias("f"),
-        F.expr(S._dot_sql_lit("embedding", cent)).alias("u"),
+        F.expr(S._dot_sql_fold("embedding", cent)).alias("u"),
     ).collect()
     assert len(rows) > 0
     for r in rows:
@@ -933,46 +920,13 @@ def test_vector_norms_unrolled_bitwise_matches_fold(spark, sf_dir):
         assert struct.pack("<2d", *new[k]) == struct.pack("<2d", *old[k]), k
 
 
-def test_lit_build_path_dispatch_and_lloyd_parity(spark, sf_dir, monkeypatch):
-    """r19: the build-side literal-unroll dispatch
-    (similarity._lit_build_path) must (a) route small corpora to the fold
-    form and honor the size threshold both ways, (b) refuse empty models and k×dim
-    budget violations (ADVICE r18 #2/#3), and (c) produce IDENTICAL Lloyd
-    centroids on both branches — the dispatch may change plan shape,
-    never a result."""
-    from synthetic_data_transfer_to_relational_database_spark.operators import (
-        similarity as S,
-    )
-    from synthetic_data_transfer_to_relational_database_spark.sources.tables import (
-        table,
-    )
-
-    e = table(spark, sf_dir, "embeddings")
-    seeds = S._seed_centroids(e)
-    # (a) this test corpus is far below the 4 MiB threshold -> fold branch
-    assert S._lit_build_path(e, seeds) is False
-    with monkeypatch.context() as m:
-        m.setattr(S, "_LIT_UNROLL_MIN_BYTES", 0)
-        assert S._lit_build_path(e, seeds) is True
-        # (b) guards still apply under a forced threshold
-        assert S._lit_build_path(e, []) is False
-        assert S._lit_build_path(e, [[0.0] * 300] * 2) is False  # dim cap
-        assert S._lit_build_path(e, [[0.0] * 256] * 9) is False  # k*dim cap
-        lit_cvs = S._lloyd_refine(e, seeds, iters=2)
-    fold_cvs = S._lloyd_refine(e, seeds, iters=2)
-    # (c) bit-identical centroids either way
-    import struct
-
-    pack = lambda cvs: [struct.pack(f"<{len(c)}d", *c) for c in cvs]  # noqa: E731
-    assert pack(lit_cvs) == pack(fold_cvs)
-
-
 def test_literal_dot_nonfinite_and_width_mismatch_guards(spark):
-    """r18 review hardening: (a) non-finite centroid components must
-    render as parseable SQL (repr would emit 'nanD' — an unresolved
-    identifier crash); (b) rows NOT matching the model width must fall
-    back to the zip_with fold's behavior — NULL (visible corruption
-    signal), never a silently truncated finite dot/d2."""
+    """r18 review hardening, on the fold text the build side runs
+    (_dot_sql_fold): (a) non-finite centroid components must render as
+    parseable SQL (repr would emit 'nanD' — an unresolved identifier
+    crash); (b) rows NOT matching the model width must yield NULL — the
+    zip_with fold NULL-pads, a visible corruption signal — never a
+    silently truncated finite dot."""
     from synthetic_data_transfer_to_relational_database_spark.operators import (
         similarity as S,
     )
@@ -983,15 +937,13 @@ def test_literal_dot_nonfinite_and_width_mismatch_guards(spark):
     )
     cent = [float("nan"), 2.0, float("inf")]
     got = {
-        r["id"]: (r["d"], r["d2"])
+        r["id"]: r["d"]
         for r in rows.select(
-            "id",
-            F.expr(S._dot_sql_lit("v", cent)).alias("d"),
-            F.expr(S._d2_sql_lit("v", cent)).alias("d2"),
+            "id", F.expr(S._dot_sql_fold("v", cent)).alias("d")
         ).collect()
     }
     # width match: evaluates (NaN propagates through the math, no crash)
-    assert got[1][0] != got[1][0] and got[1][1] != got[1][1]  # NaN
-    # width mismatch either direction: NULL, exactly like the fold
-    assert got[2] == (None, None)
-    assert got[3] == (None, None)
+    assert got[1] != got[1]  # NaN
+    # width mismatch either direction: NULL
+    assert got[2] is None
+    assert got[3] is None

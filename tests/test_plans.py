@@ -518,7 +518,7 @@ def test_waiting_suppliers_semi_anti(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_nearest_centroid_assignment_is_map_side(spark, monkeypatch):
+def test_nearest_centroid_assignment_is_map_side(spark):
     """r11 verdict #1: the nearest-centroid argmin must be the map-side
     array expression, never the crossJoin+row_number fan-out — no Window
     anywhere, and the vector side must reach the assignment without a
@@ -544,37 +544,17 @@ def test_nearest_centroid_assignment_is_map_side(spark, monkeypatch):
             )
         ]
 
-    # r19: the literal-unroll branch is size-dispatched (the unique-literal
-    # tree costs ~1 s of per-invocation plan processing — see
-    # similarity._lit_build_path); force it to pin its plan shape
-    from synthetic_data_transfer_to_relational_database_spark.operators import (
-        similarity as S,
-    )
-
-    with monkeypatch.context() as m:
-        m.setattr(S, "_LIT_UNROLL_MIN_BYTES", 0)
-        plan = (
-            vi._assign(spark, e, cents)._jdf.queryExecution().executedPlan().toString()
-        )
-    assert "Window" not in plan
-    assert not _shuffles(plan), f"assignment stage shuffles:\n{_shuffles(plan)}"
-    # r18: at codegen-safe dims the driver-held model unrolls to literal
-    # expressions — a pure projection, not even a broadcast join
-    assert "Join" not in plan and "Exchange" not in plan
-
-    # default dispatch at this test corpus (small): the struct-row
-    # broadcast form — still window-free and shuffle-free, the model
-    # rides a broadcast, and both outcomes are row-identical
-    # (test_vector_index.py::test_assign_literal_path_row_identical...)
-    dplan = (
+    # the struct-row broadcast form: window-free and shuffle-free, the
+    # model rides a broadcast
+    plan = (
         vi._assign(spark, e, cents)._jdf.queryExecution().executedPlan().toString()
     )
-    assert "Window" not in dplan
-    assert not _shuffles(dplan), f"assignment stage shuffles:\n{_shuffles(dplan)}"
-    assert "BroadcastNestedLoopJoin" in dplan
+    assert "Window" not in plan
+    assert not _shuffles(plan), f"assignment stage shuffles:\n{_shuffles(plan)}"
+    assert "BroadcastNestedLoopJoin" in plan
 
-    # wide dims keep the broadcast struct-row form (the janino budget
-    # rule): the model rides a broadcast, the argmin is expression-only
+    # wide dims take the same broadcast struct-row form: the model
+    # rides a broadcast, the argmin is expression-only
     from pyspark.sql import functions as F
 
     wide_e = e.select(

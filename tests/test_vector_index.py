@@ -1550,40 +1550,3 @@ def test_rebuild_carries_epoch_forward_and_fences_stale_handle(spark, tmp_path):
         map(tuple, vi.search_vector_index_df(spark, idx, q2, top_k=3, n_probe=4).collect())
     )
     assert warm2 == one_shot2 and len(warm2) == 4 * 3
-
-
-def test_assign_literal_path_row_identical_to_struct_row_path(spark, sf_dir):
-    """r18: vector_index._assign dispatches driver-held models at
-    codegen-safe dims to the unrolled-literal pure projection
-    (similarity._argmin_assign_lit). Every (vec_id, cell_id) assignment
-    AND every d2 bit must match the broadcast struct-row fold path it
-    replaced — same IEEE order, same first-min tiebreak."""
-    import struct as _struct
-
-    from pyspark.sql import functions as F
-
-    from synthetic_data_transfer_to_relational_database_spark.operators import (
-        similarity as S,
-    )
-    from synthetic_data_transfer_to_relational_database_spark.operators import (
-        vector_index as vi,
-    )
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "label", "embedding"
-    )
-    cents = S._seed_centroids(e, 8)
-    centroids = list(enumerate([list(map(float, c)) for c in cents]))
-    lit = {
-        r["vec_id"]: (r["cell_id"], _struct.pack("<d", r["d2"]))
-        for r in S._argmin_assign_lit(e, centroids, "cell_id").collect()
-    }
-    cents_row = spark.createDataFrame(
-        [([(cid, cv) for cid, cv in sorted(centroids)],)],
-        "__cents array<struct<cell_id:int,cv:array<double>>>",
-    )
-    old = {
-        r["vec_id"]: (r["cell_id"], _struct.pack("<d", r["d2"]))
-        for r in S._argmin_assign(e, cents_row, "cell_id").collect()
-    }
-    assert lit == old and len(lit) > 0
