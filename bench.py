@@ -1,32 +1,35 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+"""Benchmark harness: times ENTRIES at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
+line {"metric", "value", "unit", "queries", "sf", "settled", "method"}.
+``value`` is the sum over the entries outside PIPELINE.
 
-Methodology (two layers, both recorded so rounds stay comparable):
+Method:
 
-- per query, best-of-2 materializations WITHIN a JVM — a co-tenant CPU
+- per entry, best-of-2 materializations WITHIN a JVM — a co-tenant CPU
   spike during a single pass otherwise inflates the number by 30%+
-  (observed); the first pass is also kept so single-pass rounds (r1)
-  remain comparable.
-- TWO independent JVM samples (subprocess invocations of this script) —
-  one sample per round cannot separate co-tenant noise from a real
-  regression (the r3 verdict's +12-27% on unchanged queries was
-  unadjudicable for exactly this reason). The reported per-query number
-  is the min across samples; both full samples ride along under
-  "samples".
+  (observed). The PIPELINE entries are stateful end-to-end runs, timed
+  once per JVM.
+- TWO independent JVM samples (subprocess invocations of this script):
+  one sample cannot separate co-tenant noise from a real regression.
+  The reported per-entry number is the min across samples; both samples
+  are appended to BENCH_samples_history.jsonl, each with the rig it ran
+  on (cpus, master, shuffle partitions), next to the launch yardsticks.
+  If both samples fail, their stderr is printed and the run exits
+  non-zero: a bench that prints no line is louder than a wrong one.
 
-Each query is fully materialized through the `noop` datasource sink so the
-timing covers the whole plan (scan → shuffle → sink), not a count()
+Each query is fully materialized through the `noop` datasource sink so
+the timing covers the whole plan (scan → shuffle → sink), not a count()
 shortcut that lets Spark prune columns. One warm-up run of the flagship
-query first so JVM/codegen warm-up isn't charged to q1.
+query first so JVM/codegen warm-up isn't charged to the first entry.
 
-RIG NOTE (r12): all figures through the FIRST r12 official run were
-measured on pyspark's 1g default driver heap (session.py never set it);
-from the second r12 run the JVM is sized to the machine (8g — SCALE.md
-"Heap sizing"). Cross-rig comparisons carry a ~0-30% GC-tax skew on top
-of the usual noise band; the history file's loadavg/cpu telemetry marks
-the boundary.
+``python bench.py <entry> ...`` times only the named entries by the same
+method — the scoped re-run an above-band delta needs before it is called
+a regression (SCALE.md "Bench noise band"). It appends a
+``"kind": "adjudication"`` line to the history and leaves
+BENCH_samples.json alone. A scoped run warms up with one query, so its
+figures read high against the full run's (an upper bound: it can clear
+a suspected regression, never condemn one).
 """
 
 from __future__ import annotations
@@ -41,14 +44,19 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tests.full_schema import full_schema_kind, full_schema_script  # noqa: E402
 
-# Headline set: one per operator family, heaviest members preferred.
-HEADLINE = [
+INGEST_CORPUS = "ingest_corpus_4batches"
+MAINTAIN_FULL = "maintain_full_after_4batches"
+FORCED_SCALABLE = "window_rank_scalable_forced"
+
+# Timed in this order. Registered queries first: one per operator family
+# (heaviest members preferred), then the catalog's heavyweights.
+ENTRIES = [
     "revenue_by_nation",   # 4-way join + agg + sort (flagship)
     "join_broadcast",      # broadcast-hash join
     "join_range",          # non-equi theta join
     "agg_hash",            # hash aggregate
     "agg_rollup",          # hierarchical agg
-    "window_rank",         # window exec (cost-based dispatch: naive branch here)
+    "window_rank",         # window exec (cost-based dispatch: one-window branch here)
     "topk_per_group",      # rank-filter top-k
     "sort_limit",          # global sort + limit
     "scalar_json",         # JSON parse over events
@@ -58,120 +66,28 @@ HEADLINE = [
     "dedup_exact",         # hash-groupBy dedup
     "dedup_minhash_lsh",   # MinHash LSH near-dup
     "sim_search",          # brute-force top-k cosine
+    "text_doc_pairs_jaccard",    # inverted-index all-pairs similarity join
+    "sim_knn_graph",             # blocked kNN graph
+    "sim_search_pq",             # PQ train (3 Lloyd jobs) + encode + ADC
+    "lineitem_pricing_summary",  # full-scan pricing summary (TPC-H Q1 shape)
+    "orders_big_volume",         # 3-way-join big-order aggregate (Q18)
+    "stream_tumbling",           # watermarked micro-batch pipeline to completion
+    "returned_item_report",      # 3-way join + TakeOrderedAndProject (Q10)
+    "top_supplier_revenue",      # tie-safe max-over-aggregate (Q15)
+    "bracket_revenue",           # OR-of-ANDs pushdown (Q19)
+    "waiting_suppliers",         # LeftSemi + LeftAnti (Q21)
+    "sim_search_index",          # vector index build + partitioned write + serve
+    "text_ngram_lm_score",       # corpus bigram-LM scorer
+    "gen_1m_rows",               # generator: 10k-row dim + 1M-row fact
+    INGEST_CORPUS,               # 4 crawl files through the streaming near-dup ingest
+    MAINTAIN_FULL,               # `maintain --full` on the corpus the ingest built
+    "gen_full_schema",           # the 85-table schema at 10k rows/table
+    "gen_full_schema_skew",      # the same with fk_skew=1.0
+    FORCED_SCALABLE,             # window_rank forced onto its range-slice branch
 ]
-
-# The range-slice rank machinery never crosses its 1 GiB dispatch
-# threshold at sf0.1, so its constant factors would go untimed; this
-# entry forces window_rank onto the scalable branch (threshold 0) so the
-# distributed derivation is tracked round-over-round. Excluded from the
-# r3-comparable total (it did not exist then).
-FORCED_SCALABLE = "window_rank_scalable_forced"
-
-# New-in-r4 heavyweights tracked the same way (excluded from the
-# r3-comparable totals; comparable from r5 on): the inverted-index
-# all-pairs similarity join (multi-join + cached token index) and the
-# blocked kNN-graph (block-quadratic cosine + per-src window).
-# Series note: text_doc_pairs_jaccard re-baselined TWICE — r12 at the
-# shuffle-hash plan adoption (broadcast dies at 10× corpus), r13 at
-# ≈3.0 s after a quiet-rig scoped adjudication showed the 2.362 r12
-# figure was one favorable sample (SHJ-era samples range 2.6–5.0 s;
-# it is the most stage-count-heavy sub-5 s entry, so it surfs
-# co-tenancy hardest — treat 2.6–3.3 as in-band, SCALE.md).
-EXTRA = ["text_doc_pairs_jaccard", "sim_knn_graph"]
-# New in r5 (no prior numbers): tracked but outside BOTH comparable
-# totals until r6 — the PQ entry times train(3 Lloyd jobs)+encode+ADC.
-EXTRA_R5 = ["sim_search_pq"]
-# New in r6 (no prior numbers; comparable from r7): the heaviest two of
-# the TPC-H-shaped pack — the full-scan pricing summary (Q1 shape) and
-# the 3-way-join big-order aggregate (Q18 shape) — plus the streaming
-# engine's first tracked number: stream_tumbling runs the watermarked
-# micro-batch pipeline to completion (source -> stateful agg ->
-# complete-mode sink), so checkpoint + state-store costs are in the
-# timing, not just the logical agg.
-EXTRA_R6 = ["lineitem_pricing_summary", "orders_big_volume", "stream_tumbling"]
-# New in r9 (comparable from r10 — folded into total_r4_comparable per
-# the r9 verdict now that r9 recorded prior numbers): the four shapes
-# that completed the feasible classic suite — Q10 top-20 returned-item
-# revenue (3-way join + TakeOrderedAndProject), Q15 tie-safe
-# max-over-aggregate (double lineitem scan + decimal-key hash attach),
-# Q19 OR-of-ANDs bracket revenue (pushdown showcase), Q21 semi+anti
-# waiting suppliers (the catalog's only LeftSemi AND LeftAnti plan).
-# Re-baseline constant for the expanded series: r9's
-# total_r4_comparable 12.538 + r9's EXTRA_R9 sum 2.553 = 15.091 — that
-# is the r9-equivalent figure r10's total_r4_comparable compares to.
-EXTRA_R9 = [
-    "returned_item_report",
-    "top_supplier_revenue",
-    "bracket_revenue",
-    "waiting_suppliers",
-]
-# New in r12 (no prior numbers; comparable from r13): the persisted
-# vector index's full loop — sim_search_index times build (seed + 3
-# Lloyd refinements) + partitioned write + full-probe serve from the
-# files, so the number covers the whole day-1 story, not just the query
-# — and the corpus bigram-LM scorer (two vocabulary aggs + token-keyed
-# joins over ~doc-length×corpus bigram instances). Series note:
-# text_ngram_lm_score's r13-comparable baseline is 0.955 s from the
-# 8g-rig official run, which already carries the shuffle_hash plan
-# (the fix for the static broadcast that DIED at the 10× corpus probe;
-# SCALE.md §2). On the sized rig the shuffle plan costs what the
-# broadcast plan did; the 1.402 s scoped adjudication in the history
-# was the same plan paying the old 1g rig's GC tax.
-EXTRA_R12 = ["sim_search_index", "text_ngram_lm_score"]
-# New in r6: the engine the repo is named for, at benchmark scale — the
-# reference's FULL 85-table script.sql schema generated at 10k rows per
-# table (850k rows, 131 FK constraints) through the parquet
-# materialize="write" path (the at-scale mode: nothing pinned in
-# memory, dependents re-read from storage). Single pass per JVM — a
-# 10-table-per-second pipeline is not a microbenchmark, and its cost is
-# plan construction + 85 unique-plan compiles, which best-of-2 would
-# halve dishonestly. Excluded from the QUERY totals permanently (two
-# orders of magnitude above query scale — folding it in would drown
-# them), but from r7 its own per-key series IS comparable
-# round-over-round: r6 recorded 38.062 s; method unchanged since.
-GEN_FULL_SCHEMA = "gen_full_schema"
-# New in r7: the same 85-table build with fk_skew=1.0 — every
-# with-replacement FK draw warped heavy-tailed (hot low parent ids), so
-# the bench clock covers the skew machinery commit 60cefcc built (the
-# r6 verdict: "nothing times it yet"). Same single-pass method and the
-# same exclusion rules as GEN_FULL_SCHEMA; its series starts r7.
-GEN_FULL_SCHEMA_SKEW = "gen_full_schema_skew"
-# New in r7: the streaming corpus-ingest pipeline's first tracked
-# number — the sf documents table split into 4 crawl files, drained as
-# 4 micro-batches through write_stream_dedup_ingest (sign once,
-# in-batch cluster dedup, cross-corpus index join, bucketed index
-# append, ledger commit). Single pass (a stateful pipeline, not a
-# microbenchmark); file split + index bootstrap happen OUTSIDE the
-# timed region. Excluded from every comparable total; series starts r7.
-INGEST_CORPUS = "ingest_corpus_4batches"
-# New in r10: the day-2 maintenance cost on the corpus the ingest entry
-# just built — the composed `maintain --full` pass (compact_corpus
-# folds the 4 committed micro-batch directories into the base,
-# compact_index drops crash-replay duplicate rows, verify_index runs
-# last so its verdict covers the post-maintenance state). Timed in the
-# same JVM right after the ingest drain, against the same tmp corpus,
-# before teardown. Single pass, excluded from every comparable total
-# (pipeline scale); its own series starts r10 — this is the number the
-# SCALE.md batch-sizing guidance needs for "how often can you afford
-# the maintenance pass".
-MAINTAIN_FULL = "maintain_full_after_4batches"
-_PIPELINE_KEYS = {GEN_FULL_SCHEMA, GEN_FULL_SCHEMA_SKEW, INGEST_CORPUS, MAINTAIN_FULL}
-_GEN_KEYS = _PIPELINE_KEYS  # historical alias used by the totals below
-NONCOMPARABLE = {
-    FORCED_SCALABLE, *EXTRA, *EXTRA_R5, *EXTRA_R6, *EXTRA_R9, *EXTRA_R12,
-    *_PIPELINE_KEYS,
-}
-# entries absent from the r4 record — ONE definition so each new
-# EXTRA_Rn extends a single set, not three chains. EXTRA_R9 left this
-# set in r10 (it now counts toward total_r4_comparable; see the
-# re-baseline constant above). EXTRA_R5/R6 stay excluded: their
-# per-key series are tracked individually and folding them would break
-# an 5-round-old total for no information gain.
-R4_EXCLUDED = frozenset({*EXTRA_R5, *EXTRA_R6, *EXTRA_R12, *_PIPELINE_KEYS})
-# From r5 the three r4-new heavyweights COUNT (they have r4 numbers to
-# compare against): total_r4_comparable = everything timed. Keeping both
-# totals means a regression in the three most expensive plans is visible
-# while the long-running r3 series stays unbroken.
+# Stateful end-to-end runs, timed once per JVM and left out of the
+# headline value: they are two orders of magnitude above query scale.
+PIPELINE = {INGEST_CORPUS, MAINTAIN_FULL, "gen_full_schema", "gen_full_schema_skew"}
 
 
 def _materialize(df) -> None:
@@ -332,9 +248,14 @@ def _ingest_corpus(spark, sf_dir: str, n_batches: int = 4, with_maintain: bool =
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def run_sample(sf_dir: str) -> dict:
-    """One JVM sample: best-of-2 per headline query."""
+def _headline(timings: dict[str, float]) -> float:
+    return round(sum(v for k, v in timings.items() if k not in PIPELINE), 3)
+
+
+def run_sample(sf_dir: str, names: list[str]) -> dict:
+    """One JVM sample over ``names`` (in ENTRIES order), with its rig."""
     from synthetic_data_transfer_to_relational_database_spark import registry
+    from synthetic_data_transfer_to_relational_database_spark.operators import skew
     from synthetic_data_transfer_to_relational_database_spark.session import get_spark
 
     spark = get_spark("sdt-bench")
@@ -343,18 +264,44 @@ def run_sample(sf_dir: str) -> dict:
     # Warm-up: JVM JIT, codegen cache, parquet footer reads.
     _materialize(queries["revenue_by_nation"](spark, sf_dir))
 
-    timings: dict[str, float] = {}
-    first_pass: dict[str, float] = {}
+    def query(name: str):
+        return lambda: _materialize(queries[name](spark, sf_dir))
 
-    def run_best_of_2(name: str, run) -> None:
+    def forced_scalable() -> None:
+        # window_rank on its range-slice branch; the dispatch cache keys
+        # on the threshold, so the default-branch verdict is not reused
+        saved = skew.RANK_SMALL_INPUT_BYTES
+        skew.RANK_SMALL_INPUT_BYTES = 0
+        try:
+            query("window_rank")()
+        finally:
+            skew.RANK_SMALL_INPUT_BYTES = saved
+
+    runs = {
+        "gen_1m_rows": lambda: _gen_1m(spark),
+        "gen_full_schema": lambda: _gen_full_schema(spark),
+        "gen_full_schema_skew": lambda: _gen_full_schema(spark, fk_skew=1.0),
+        FORCED_SCALABLE: forced_scalable,
+    }
+    timings: dict[str, float] = {}
+    for name in names:
+        if name == MAINTAIN_FULL:
+            continue  # timed with the drain, on the corpus it built
+        if name == INGEST_CORPUS:
+            drain, maintain = _ingest_corpus(
+                spark, sf_dir, with_maintain=MAINTAIN_FULL in names
+            )
+            timings[INGEST_CORPUS] = round(drain, 3)
+            if maintain is not None:
+                timings[MAINTAIN_FULL] = round(maintain, 3)
+            spark.catalog.clearCache()
+            continue
+        run = runs.get(name) or query(name)
         best = float("inf")
-        for i in range(2):
+        for _ in range(1 if name in PIPELINE else 2):
             t0 = time.perf_counter()
             run()
-            dt = time.perf_counter() - t0
-            if i == 0:
-                first_pass[name] = round(dt, 3)
-            best = min(best, dt)
+            best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
         # queries that cache() shared subtrees (minhash signatures, the
         # pair-join token index) would otherwise leave populated caches
@@ -362,56 +309,14 @@ def run_sample(sf_dir: str) -> dict:
         # clear outside the timed region so entries stay independent
         spark.catalog.clearCache()
 
-    for name in [*HEADLINE, *EXTRA, *EXTRA_R5, *EXTRA_R6, *EXTRA_R9, *EXTRA_R12]:
-        fn = queries[name]
-        run_best_of_2(name, lambda fn=fn: _materialize(fn(spark, sf_dir)))
-    # Series note: gen_1m_rows re-baselined in r11 at ≈0.5–0.8 s — the
-    # r10 sentence-cardinality fix costs ≈0.1 µs/row on the description
-    # column (measured column-level A/B, SCALE.md "Bench noise band");
-    # pre-r11 values (0.344 s r9) are not comparable.
-    run_best_of_2("gen_1m_rows", lambda: _gen_1m(spark))
-
-    drain, maintain = _ingest_corpus(spark, sf_dir, with_maintain=True)
-    timings[INGEST_CORPUS] = first_pass[INGEST_CORPUS] = round(drain, 3)
-    timings[MAINTAIN_FULL] = first_pass[MAINTAIN_FULL] = round(maintain, 3)
-    spark.catalog.clearCache()
-
-    for key, skew in ((GEN_FULL_SCHEMA, 0.0), (GEN_FULL_SCHEMA_SKEW, 1.0)):
-        t0 = time.perf_counter()
-        _gen_full_schema(spark, fk_skew=skew)
-        dt = round(time.perf_counter() - t0, 3)
-        timings[key] = dt
-        first_pass[key] = dt
-        spark.catalog.clearCache()
-
-    # Forced-scalable branch: threshold 0 routes window_rank through the
-    # range-slice derivation (the dispatch cache keys on the threshold,
-    # so this does not poison the naive-branch entry above).
-    spark.conf.set("spark.sdt.rank.smallInputBytes", "0")
-    try:
-        fn = queries["window_rank"]
-        run_best_of_2(FORCED_SCALABLE, lambda: _materialize(fn(spark, sf_dir)))
-    finally:
-        spark.conf.unset("spark.sdt.rank.smallInputBytes")
-
-    spark.stop()
-    comparable = [k for k in timings if k not in NONCOMPARABLE]
-    return {
-        "queries": timings,
-        "total": round(
-            sum(v for k, v in timings.items() if k not in _GEN_KEYS), 3
-        ),
-        "total_r3_comparable": round(sum(timings[k] for k in comparable), 3),
-        "total_r4_comparable": round(
-            sum(v for k, v in timings.items() if k not in R4_EXCLUDED), 3
-        ),
-        # same exclusions as total_r3_comparable: this figure's whole
-        # purpose is comparability with rounds that predate the entries
-        "single_pass_total": round(
-            sum(v for k, v in first_pass.items() if k not in NONCOMPARABLE), 3
-        ),
-        "queries_single_pass": first_pass,
+    sc = spark.sparkContext
+    rig = {
+        "cpus": sc.defaultParallelism,
+        "master": sc.master,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
     }
+    spark.stop()
+    return {"queries": timings, "total": _headline(timings), **rig}
 
 
 def _hardware_yardsticks() -> dict:
@@ -538,19 +443,26 @@ def _unsettled_reasons(hw: dict) -> list[str]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    scoped = sys.argv[1:]
+    unknown = sorted(set(scoped) - set(ENTRIES))
+    if unknown:
+        sys.exit(f"unknown bench entries {unknown}; known: {', '.join(ENTRIES)}")
+    wanted = set(scoped or ENTRIES)
+    if MAINTAIN_FULL in wanted:
+        wanted.add(INGEST_CORPUS)  # maintain runs on the corpus the drain builds
+    names = [e for e in ENTRIES if e in wanted]
 
     if os.environ.get("SDT_BENCH_CHILD"):
-        print(json.dumps(run_sample(sf_dir)))
+        print(json.dumps(run_sample(sf_dir, names)))
         return
 
     # yardsticks bracket the run: drift adjudication needs the machine
     # state at START and END, not a single point (a co-tenant arriving
     # mid-run shows as a before/after disagreement)
     hw_before = _hardware_yardsticks()
-    # launch gate (r17 verdict #2): a drifted official must SELF-IDENTIFY
-    # at launch instead of being diagnosed a round later. The run still
-    # proceeds (the driver owns the schedule), but the warning is loud
-    # and the history line carries settled:false for mechanical triage.
+    # launch gate: a drifted run must SELF-IDENTIFY at launch. It still
+    # proceeds, but the warning is loud and the history line carries
+    # settled:false for mechanical triage.
     unsettled = _unsettled_reasons(hw_before)
     if unsettled:
         print(
@@ -562,15 +474,10 @@ def main() -> None:
         )
     samples: list[dict] = []
     for i in range(2):
-        # machine-state telemetry rides with each sample (r11 verdict #4):
-        # the r11 driver run was +20% across 31 untouched entries —
-        # co-tenancy seesaws are only diagnosable from the RECORD if the
-        # record says what the machine was doing at the time
         load_before = list(os.getloadavg())
-        env = dict(os.environ, SDT_BENCH_CHILD="1")
         proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__)],
-            env=env,
+            [sys.executable, os.path.abspath(__file__), *scoped],
+            env=dict(os.environ, SDT_BENCH_CHILD="1"),
             capture_output=True,
             text=True,
         )
@@ -589,97 +496,66 @@ def main() -> None:
                 file=sys.stderr,
             )
     if not samples:
-        # last resort: one in-process sample so the driver still gets a line
-        samples = [run_sample(sf_dir)]
+        sys.exit("bench: every JVM sample failed (stderr tails above)")
 
-    # per-query min across JVM samples: reports the machine, not the neighbor
-    names = list(samples[0]["queries"])
+    # per-entry min across JVM samples: reports the machine, not the neighbor
     queries = {
-        n: min(s["queries"][n] for s in samples if n in s["queries"]) for n in names
+        n: min(s["queries"][n] for s in samples if n in s["queries"])
+        for n in samples[0]["queries"]
     }
-    comparable = [n for n in names if n not in NONCOMPARABLE]
-    # headline value stays the QUERY total: the gen_full_schema pair is
-    # a pipeline benchmark two orders of magnitude above the query
-    # scale, and folding it in would make the headline meaningless
-    # against every earlier round. Each rides in "queries" on its own
-    # key (plain comparable from r6, skew series from r7).
-    total = round(
-        sum(v for n, v in queries.items() if n not in _GEN_KEYS), 3
-    )
-
-    # Raw samples live OFF stdout: r4's merged line embedded them and
-    # outgrew the driver's 2 kB tail capture (BENCH_r04.json "parsed":
-    # null). From r11 the in-place file holds only the MERGED best-of
-    # summary (a reviewable ~30-line diff per run); the full per-JVM
-    # samples are append-only in BENCH_samples_history.jsonl below —
-    # that split is the r10-verdict stretch item 8.
-    try:
-        repo = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(repo, "BENCH_samples.json"), "w") as f:
-            json.dump(
-                {
-                    "sf": sf,
-                    "queries_best_of_runs": queries,
-                    "n_jvm_samples": len(samples),
-                    "raw_samples": "BENCH_samples_history.jsonl (append-only)",
-                },
-                f,
-                indent=1,
-            )
-    except OSError as e:  # bench must still report even on a read-only tree
-        print(f"could not write BENCH_samples.json: {e}", file=sys.stderr)
-    try:
-        # The in-place file holds only the LATEST run; past rounds' raw
-        # samples were only recoverable from git history, which made the
-        # A/A noise-band analysis (SCALE.md "Bench noise band") awkward
-        # to cite. Keep every run appended here too — one line per
-        # bench invocation, timestamped.
-        with open(os.path.join(repo, "BENCH_samples_history.jsonl"), "a") as f:
-            f.write(
-                json.dumps(
+    repo = os.path.dirname(os.path.abspath(__file__))
+    record = {
+        "ts": int(time.time()),
+        "sf": sf,
+        "loadavg_at_write": [round(x, 2) for x in os.getloadavg()],
+        "settled": not unsettled,
+        "unsettled_reasons": unsettled,
+        # gen_full_schema series: "reference" script.sql or the "census"
+        # stand-in (a separate series)
+        "gen_schema": full_schema_kind(),
+        "hardware_before": hw_before,
+        "hardware_after": _hardware_yardsticks(),
+        "samples": samples,
+    }
+    if scoped:
+        record["kind"] = "adjudication"
+    else:
+        # the in-place file holds only the merged best-of summary (a
+        # reviewable diff per run); raw samples are in the history
+        try:
+            with open(os.path.join(repo, "BENCH_samples.json"), "w") as f:
+                json.dump(
                     {
-                        "ts": int(time.time()),
                         "sf": sf,
-                        "n_cpus": os.cpu_count(),
-                        "loadavg_at_write": [round(x, 2) for x in os.getloadavg()],
-                        # r16 verdict #3: the hand-run drift yardsticks,
-                        # recorded mechanically with every official line;
-                        # r17 verdict #2: the launch gate's verdict rides
-                        # with them so a drifted official self-identifies
-                        "settled": not unsettled,
-                        "unsettled_reasons": unsettled,
-                        # gen_full_schema series: "reference" script.sql
-                        # or the "census" stand-in (a separate series)
-                        "gen_schema": full_schema_kind(),
-                        "hardware_before": hw_before,
-                        "hardware_after": _hardware_yardsticks(),
-                        "samples": samples,
-                    }
+                        "queries_best_of_runs": queries,
+                        "n_jvm_samples": len(samples),
+                        "raw_samples": "BENCH_samples_history.jsonl (append-only)",
+                    },
+                    f,
+                    indent=1,
                 )
-                + "\n"
-            )
+        except OSError as e:  # bench must still report even on a read-only tree
+            print(f"could not write BENCH_samples.json: {e}", file=sys.stderr)
+    try:
+        # one line per invocation, append-only: the A/A noise-band
+        # analysis (SCALE.md "Bench noise band") cites these
+        with open(os.path.join(repo, "BENCH_samples_history.jsonl"), "a") as f:
+            f.write(json.dumps(record) + "\n")
     except OSError as e:
         print(f"could not write BENCH_samples_history.jsonl: {e}", file=sys.stderr)
 
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": queries,
-                "method": f"best_of_2_x{len(samples)}jvm",
-                "total_r3_comparable": round(sum(queries[n] for n in comparable), 3),
-                "total_r4_comparable": round(
-                    sum(v for n, v in queries.items() if n not in R4_EXCLUDED), 3
-                ),
-                "sf": float(sf) if sf.replace(".", "", 1).isdigit() else sf,
-                # r17 verdict #2: the launch-settledness verdict rides on
-                # the official line too (extra key — harmless to parsers)
-                "settled": not unsettled,
-            }
-        )
-    )
+    out = {
+        "metric": "headline_total_wall",
+        "value": _headline(queries),
+        "unit": "sec",
+        "queries": queries,
+        "method": f"best_of_2_x{len(samples)}jvm",
+        "sf": float(sf) if sf.replace(".", "", 1).isdigit() else sf,
+        "settled": not unsettled,
+    }
+    if scoped:
+        out["kind"] = "adjudication"
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":

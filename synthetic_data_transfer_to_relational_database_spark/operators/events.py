@@ -510,8 +510,8 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     `percentile` buffers a per-group value-count map whose size grows
     with distinct values — a giant single-reducer state per type at
     100 TB. Cost-based dispatch (the window_rank pattern, one shared
-    definition in skew.small_rank_input, conf
-    ``spark.sdt.percentile.smallInputBytes``): EXACT interpolated
+    definition in skew.small_percentile_input, threshold
+    ``skew.PERCENTILE_SMALL_INPUT_BYTES``): EXACT interpolated
     percentile below the threshold — DuckDB-hash-matchable, the
     CORRECTNESS branch — and ``percentile_approx``'s fixed-size
     mergeable KLL-style sketch above it (map-side combinable, state
@@ -520,18 +520,14 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped percentile passes, per-type stats joined back via AQE
     broadcast (one row per event type). No window, no per-group
     funnel."""
-    from .skew import small_rank_input
+    from .skew import small_percentile_input
 
     e = table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    exact = small_rank_input(
-        e,
-        cache_key=("events_anomaly_mad", sf_dir),
-        conf_name="spark.sdt.percentile.smallInputBytes",
-    )
+    exact = small_percentile_input(e, cache_key=("events_anomaly_mad", sf_dir))
 
     def _median(col: str):
         if exact:
@@ -803,25 +799,24 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY a.variant
     """,
 )
-def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_ab_test(spark: SparkSession, sf_dir: str, salt: str = "") -> DataFrame:
     """A/B experiment readout: users split 50/50 by the same
     content-stable md5 bucketing as corpus_split (reproducible across
     engines and re-partitioning — never rand()), conversion = any
     purchase event, per-variant rates reported. The z-statistic is
     downstream arithmetic on these exact counts; the query's job is the
     deterministic ASSIGNMENT + JOIN shape experimentation platforms
-    standardize. The assignment is salted by ``spark.sdt.abtest.salt``
-    (default empty = the oracle's split): every experiment gets an
-    independent 50/50 split by changing one string, the way real
-    platforms re-randomize between experiments without new
-    infrastructure. A non-empty salt is a DIFFERENT experiment — the
-    oracle models only the default.
+    standardize. The assignment is salted by ``salt``, the experiment's
+    identity (default empty = the oracle's split, which the registered
+    query runs): every experiment gets an independent 50/50 split by
+    changing one string, the way real platforms re-randomize between
+    experiments without new infrastructure. A non-empty salt is a
+    DIFFERENT experiment — the oracle models only the default.
 
     Scale notes: distinct users then one user-keyed left join against
     the (small) converter set — AQE broadcasts it when it fits; the
     final aggregate has 2 groups. No shuffle carries event payloads."""
     e = table(spark, sf_dir, "events")
-    salt = spark.conf.get("spark.sdt.abtest.salt", "")
     variant = hash_bucket(
         F.concat(F.col("user_id").cast("string"), F.lit(salt)), 2
     )

@@ -172,7 +172,7 @@ def multimodal_dyn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec, but size buckets are FEW (payload_bytes/256) while rows are
     many — at 100 TB each bucket would sort through one WindowExec task.
     Like ``relational.window_rank`` the physical form is COST-BASED on
-    Catalyst's size estimate (``spark.sdt.rank.smallInputBytes``): small
+    Catalyst's size estimate (``skew.RANK_SMALL_INPUT_BYTES``): small
     input takes the one-window plan (the derivation's fixed driver jobs
     would dominate), large input takes
     ``skew.group_distribution_ranks`` (range slices + broadcast offsets,

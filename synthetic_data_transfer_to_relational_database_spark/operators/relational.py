@@ -424,7 +424,7 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection — the same stats-driven strategy choice Catalyst makes for
     broadcast-vs-sort-merge joins, applied to window ranking:
 
-    - input below ``spark.sdt.rank.smallInputBytes`` (default 1 GiB, per
+    - input below ``skew.RANK_SMALL_INPUT_BYTES`` (1 GiB, per
       Catalyst's optimized-plan size estimate): the one-window form.
       Even if every row landed in ONE WindowExec task, a ≤1 GiB sort is
       a normal task; the distributed derivation's extra jobs (range

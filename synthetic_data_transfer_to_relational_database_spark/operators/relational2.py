@@ -231,7 +231,7 @@ def window_ranks_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     naive window), no task ever sorts more than one range slice.
 
     Like ``relational.window_rank``, the physical form is COST-BASED:
-    below ``spark.sdt.rank.smallInputBytes`` (Catalyst size estimate)
+    below ``skew.RANK_SMALL_INPUT_BYTES`` (Catalyst size estimate)
     the one-window plan wins — the distributed derivation's fixed jobs
     (range sampling + checkpoint + offsets collect) cost more than just
     sorting a small input in one task."""
@@ -519,8 +519,8 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side after one customer-keyed aggregation (the same
     sketch-then-broadcast shape write_zordered uses). The quartiles are
     cost-dispatched like events_anomaly_mad (one shared definition,
-    skew.small_rank_input, conf
-    ``spark.sdt.percentile.smallInputBytes``): EXACT ungrouped
+    skew.small_percentile_input, threshold
+    ``skew.PERCENTILE_SMALL_INPUT_BYTES``): EXACT ungrouped
     `percentile` below the threshold (its state is a value-count map
     over one global group — oracle-hash-matchable, and cheap because
     the input is already one row per customer), ``percentile_approx``'s
@@ -541,14 +541,10 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "monetary_cents"
         ),
     )
-    from .skew import small_rank_input
+    from .skew import small_percentile_input
 
     mx = rfm.agg(F.max("last_day").alias("corpus_last"))
-    exact = small_rank_input(
-        rfm,
-        cache_key=("orders_rfm", sf_dir),
-        conf_name="spark.sdt.percentile.smallInputBytes",
-    )
+    exact = small_percentile_input(rfm, cache_key=("orders_rfm", sf_dir))
 
     def _pct(p: float):
         if exact:
@@ -1142,11 +1138,16 @@ def data_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("col_name", "n_rows", "n_null", "n_distinct", "min_val", "max_val")
 
 
+# user_erasure_audit's demo cohort: c_custkey % _DEMO_COHORT_MOD == 0.
+# Real cohorts are passed to erasure_audit(erasure_list=...).
+_DEMO_COHORT_MOD = 97
+
+
 @q(
     "user_erasure_audit",
-    sql="""
+    sql=f"""
     WITH victims AS (
-      SELECT c_custkey AS key FROM customer WHERE c_custkey % 97 = 0
+      SELECT c_custkey AS key FROM customer WHERE c_custkey % {_DEMO_COHORT_MOD} = 0
     )
     SELECT 'customer' AS table_name,
            COUNT(*) AS n_rows,
@@ -1168,8 +1169,8 @@ def data_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten impact audit over the default demo cohort:
     delegates to :func:`erasure_audit` with no erasure list, which
-    selects ``c_custkey % spark.sdt.erasure.cohortMod == 0``
-    (default 97 — the oracle's cohort). Real compliance runs pass their
+    selects ``c_custkey % _DEMO_COHORT_MOD == 0`` (97 — the oracle's
+    cohort). Real compliance runs pass their
     uploaded erasure list as a DataFrame to :func:`erasure_audit`."""
     return erasure_audit(spark, sf_dir)
 
@@ -1180,7 +1181,7 @@ def erasure_audit(
     """Right-to-be-forgotten impact audit: given a deletion cohort —
     ``erasure_list``, a DataFrame whose single column holds subject keys
     (any column name), or, when omitted, the deterministic
-    ``c_custkey % spark.sdt.erasure.cohortMod`` demo stand-in — report
+    ``c_custkey % _DEMO_COHORT_MOD`` demo stand-in — report
     how many rows in every table reference those subjects — directly
     (customer, orders, events) and transitively through the FK graph
     (lineitem via orders). The query compliance teams run BEFORE
@@ -1198,8 +1199,7 @@ def erasure_audit(
     li = table(spark, sf_dir, "lineitem")
     e = table(spark, sf_dir, "events")
     if erasure_list is None:
-        mod = int(spark.conf.get("spark.sdt.erasure.cohortMod", "97"))
-        victims = c.filter(F.col("c_custkey") % mod == 0).select(
+        victims = c.filter(F.col("c_custkey") % _DEMO_COHORT_MOD == 0).select(
             F.col("c_custkey").alias("key")
         )
     else:

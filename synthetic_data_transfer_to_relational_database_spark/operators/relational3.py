@@ -325,7 +325,7 @@ def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     through one task each — the same single-task collapse class as an
     unpartitioned window. Like ``window_ranks_pct``
     (relational2.py), the physical form is COST-BASED: below
-    ``spark.sdt.rank.smallInputBytes`` the single window wins (the
+    ``skew.RANK_SMALL_INPUT_BYTES`` the single window wins (the
     distributed derivation's fixed jobs cost more than one small sort);
     above it NTILE is derived from ``skew.group_distribution_ranks``
     (range-partition the (priority, price, key) total order, broadcast

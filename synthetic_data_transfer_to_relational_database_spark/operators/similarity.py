@@ -581,6 +581,15 @@ def embedding_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# sim_search_lsh geometry: _LSH_TABLES tables of _LSH_BITS-bit
+# signatures. Sized for the synthetic embeddings' weak-correlation
+# regime; a real corpus with neighbor cosine >= 0.8 wants 16-24 bits
+# (a bucket holds ~n/2^b vectors) and more tables. Recall floors:
+# tests/test_llm_ops.py::test_ann_recall_floors.
+_LSH_BITS = 4
+_LSH_TABLES = 12
+
+
 def sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH ANN, MULTI-TABLE (the standard OR-of-L /
     AND-of-b amplification): L independent hash tables of b-bit
@@ -593,26 +602,22 @@ def sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     The r6 single-table 8-bit form had recall ≈ 0.04 on the synthetic
     embeddings (near-orthogonal vectors agree on all 8 signs almost
     never); the multi-table form reaches the floor locked by
-    tests/test_llm_ops.py::test_ann_recall_floors. Tunables
-    ``spark.sdt.lsh.bits`` / ``spark.sdt.lsh.tables`` (default 4/12,
-    sized for this weak-correlation regime): a real embedding corpus
-    with neighbor cosine ≥ 0.8 at 100 TB wants MORE bits (16-24, so a
-    bucket holds ~n/2^b vectors) and more tables — recall per table
-    falls geometrically in b but the OR over L recovers it, and the
-    rescoring stays bucket-confined either way.
+    tests/test_llm_ops.py::test_ann_recall_floors. The geometry is
+    ``_LSH_BITS`` / ``_LSH_TABLES`` (4/12, sized for this
+    weak-correlation regime): recall per table falls geometrically in b
+    but the OR over L recovers it, and the rescoring stays
+    bucket-confined either way.
 
     Rows-only: recall < 1 by design; scores are exact (test-locked)."""
     e = table(spark, sf_dir, "embeddings")
-    b = int(spark.conf.get("spark.sdt.lsh.bits", "4"))
-    n_tables = int(spark.conf.get("spark.sdt.lsh.tables", "12"))
 
     def buckets(vcol: str) -> F.Column:
         # array of L b-bit bucket ids; all map-side expression work
         return F.expr(
-            f"transform(sequence(0, {n_tables - 1}), t -> "
-            f" aggregate(sequence(0, {b - 1}), cast(0 as int), (acc, p) -> acc | "
+            f"transform(sequence(0, {_LSH_TABLES - 1}), t -> "
+            f" aggregate(sequence(0, {_LSH_BITS - 1}), cast(0 as int), (acc, p) -> acc | "
             f"  (CASE WHEN aggregate(sequence(1, 64), cast(0.0 as double),"
-            f"    (s, d) -> s + (CASE WHEN pmod(xxhash64(t * {b} + p, d), 2) = 0"
+            f"    (s, d) -> s + (CASE WHEN pmod(xxhash64(t * {_LSH_BITS} + p, d), 2) = 0"
             f"                    THEN 1.0 ELSE -1.0 END)"
             f"             * cast(element_at({vcol}, d) as double)) > 0"
             f"   THEN shiftleft(1, p) ELSE 0 END)))"
@@ -993,12 +998,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential sum are operand-order-independent, as is na·nb), so each
     unordered pair is scored ONCE (src < dst) and exploded map-side
     into both directed edges — half the fold evaluations of the naive
-    src != dst join for an identical result (r6: −40% wall).
-
-    ``spark.sdt.knn.k`` overrides k for reuse outside the harness (the
-    oracle above is generated for the default k=3 — override and the
-    entry is effectively rows-only)."""
-    k = int(spark.conf.get("spark.sdt.knn.k", str(_KNN_K)))
+    src != dst join for an identical result (r6: −40% wall)."""
     e = table(spark, sf_dir, "embeddings")
     a, b = _norm_sides(e, "src", "dst")
     scored = (
@@ -1025,7 +1025,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), "dst")
     return (
         both.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= _KNN_K)
         .select("src", "dst", "label", "cosine", "rn")
     )
 
@@ -1088,16 +1088,12 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     safe). Edges carry two ids — vectors never enter the contraction."""
     from .dedup import connected_components
 
-    # spark.sdt.semdedup.tau overrides the similarity cut for reuse
-    # outside the harness (the oracle is generated for the default —
-    # override and the entry is effectively rows-only)
-    tau = float(spark.conf.get("spark.sdt.semdedup.tau", str(_SEM_TAU)))
     e = table(spark, sf_dir, "embeddings")
     a, b = _norm_sides(e, "src", "dst")
     cos = F.expr(_DOT_AB) / (F.col("na") * F.col("nb"))
     edges = (
         a.join(b, (F.col("label") == F.col("blabel")) & (F.col("src") < F.col("dst")))
-        .filter(cos >= tau)
+        .filter(cos >= _SEM_TAU)
         .select("src", "dst")
     )
     comp = connected_components(edges).select(

@@ -45,46 +45,51 @@ def estimated_plan_bytes(df: DataFrame) -> int:
         return 1 << 62
 
 
+# Small-input thresholds (bytes of Catalyst's optimized-plan size
+# estimate) of the cost-based dispatch sites: at or below them the exact
+# single-pass plan wins (a <= 1 GiB single-task sort is a normal task,
+# and the scalable branch's fixed jobs would dominate). The rank
+# branches are bit-identical while the percentile branch above its
+# threshold is approximate, so each family is forced on its own. Read
+# at call time: setting the attribute to 0 forces the scalable branch.
+RANK_SMALL_INPUT_BYTES = 1 << 30
+PERCENTILE_SMALL_INPUT_BYTES = 1 << 30
+
 # Dispatch verdicts keyed on (caller-supplied input identity, threshold).
 # The estimate is a py4j optimizedPlan().stats() round trip (~0.1 s);
 # uncached it is paid on EVERY query construction — the r3 bench charged
-# window_rank +74% for exactly this. Entries are (name, sf_dir, conf)
-# tuples over immutable testdata files, so the cache stays tiny and
-# cannot go stale; a changed threshold conf is a different key.
+# window_rank +74% for exactly this. Entries are (name, sf_dir,
+# threshold) tuples over immutable testdata files, so the cache stays
+# tiny and cannot go stale; a forced threshold is a different key.
 _DISPATCH_CACHE: dict[tuple, bool] = {}
 
 
-def small_rank_input(
-    df: DataFrame,
-    cache_key: tuple | None = None,
-    conf_name: str = "spark.sdt.rank.smallInputBytes",
-) -> bool:
-    """The cost-based small-input dispatch shared by ``window_rank`` /
-    ``window_ranks_pct`` / ``multimodal_dyn_batch`` (rank sites, conf
-    ``spark.sdt.rank.smallInputBytes``) and the exact-vs-approx
-    percentile sites ``events_anomaly_mad`` / ``orders_rfm`` (conf
-    ``spark.sdt.percentile.smallInputBytes``): True when Catalyst's
-    optimized-plan size estimate is below the conf (default 1 GiB) —
-    there the exact single-pass plan wins (even a single-task sort of
-    ≤ 1 GiB is a normal task, and the scalable branch's fixed overhead
-    would dominate); above it the scalable branch amortizes. One
-    definition so the default and comparison cannot drift between
-    dispatch sites; ``conf_name`` keeps the two families independently
-    tunable (the bench forces the rank branch without flipping the
-    percentile sites).
-
-    ``cache_key`` (optional): identity of the INPUT, supplied by callers
-    whose input is a pure projection of an immutable source (the
-    dispatch sites pass (query-name, sf_dir)). The verdict is memoized
-    per (cache_key, conf_name, threshold) so repeated query construction
-    pays the plan-stats round trip once, not per call."""
-    threshold = int(df.sparkSession.conf.get(conf_name, str(1 << 30)))
+def _below(df: DataFrame, threshold: int, cache_key: tuple | None) -> bool:
     if cache_key is None:
         return estimated_plan_bytes(df) <= threshold
-    k = (*cache_key, conf_name, threshold)
+    k = (*cache_key, threshold)
     if k not in _DISPATCH_CACHE:
         _DISPATCH_CACHE[k] = estimated_plan_bytes(df) <= threshold
     return _DISPATCH_CACHE[k]
+
+
+def small_rank_input(df: DataFrame, cache_key: tuple | None = None) -> bool:
+    """The small-input dispatch shared by the rank sites (window_rank,
+    window_ranks_pct, window_ntile, multimodal_dyn_batch,
+    corpus_quantile_filter): True when Catalyst's size estimate is at
+    most ``RANK_SMALL_INPUT_BYTES``. ``cache_key`` (optional) names the
+    INPUT — sites whose input is a pure projection of an immutable
+    source pass (query-name, sf_dir) — and memoizes the verdict per
+    (cache_key, threshold), so repeated query construction pays the
+    plan-stats round trip once."""
+    return _below(df, RANK_SMALL_INPUT_BYTES, cache_key)
+
+
+def small_percentile_input(df: DataFrame, cache_key: tuple | None = None) -> bool:
+    """``small_rank_input`` for the exact-vs-approx percentile sites
+    (events_anomaly_mad, orders_rfm), against
+    ``PERCENTILE_SMALL_INPUT_BYTES``."""
+    return _below(df, PERCENTILE_SMALL_INPUT_BYTES, cache_key)
 
 
 def salted_join(

@@ -828,7 +828,7 @@ def text_doc_pairs_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by sum(df^2) over rare tokens <= cap * |tok| — the df cap is
     the knob that keeps the classic inverted-index blowup (quadratic in
     the hottest token) off the plan. The cap is
-    ``least(6% * n_docs, spark.sdt.pairs.maxTokenDf)`` (default 10 000):
+    ``least(6% * n_docs, _MAX_TOKEN_DF)`` (10 000):
     the relative term makes "rare" mean the same thing at 500 docs and
     50 billion, the ABSOLUTE term is the 100 TB guard — 6% of 50 B docs
     is 3 B postings on one token key, i.e. ~1e18 candidate pairs from a
@@ -860,6 +860,9 @@ def text_doc_pairs_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_MAX_TOKEN_DF = 10_000  # absolute df cap (text_doc_pairs_jaccard notes)
+
+
 def _doc_pair_commons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared candidate-generation + exact-overlap machinery behind
     text_doc_pairs_jaccard and text_containment: inverted token index →
@@ -889,7 +892,6 @@ def _doc_pair_commons(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc sizes come free as size(toks)
     doc_toks = tok.groupBy("doc_id").agg(F.collect_list("token").alias("toks"))
     n = doc_toks.agg(F.count(F.lit(1)).alias("n_docs"))
-    abs_cap = int(spark.conf.get("spark.sdt.pairs.maxTokenDf", "10000"))
     # Every join below whose build side SCALES WITH THE CORPUS (the df
     # vocabulary, the token index, the per-doc sizes) is hinted
     # shuffle_hash: Catalyst's static size estimates above the tokenize
@@ -902,7 +904,7 @@ def _doc_pair_commons(spark: SparkSession, sf_dir: str) -> DataFrame:
     rare = (
         tok.join(df_.hint("shuffle_hash"), "token")
         .crossJoin(F.broadcast(n))
-        .filter(F.col("df") <= F.least(F.col("n_docs") * 0.06, F.lit(abs_cap)))
+        .filter(F.col("df") <= F.least(F.col("n_docs") * 0.06, F.lit(_MAX_TOKEN_DF)))
         .select("doc_id", "token")
     )
     a, b = rare.alias("a"), rare.alias("b")
@@ -999,7 +1001,7 @@ def text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors have containment >= 0.7.
 
     Reuses _doc_pair_commons verbatim (same inverted index, same
-    least(6%, spark.sdt.pairs.maxTokenDf) df cap, same keyed
+    least(6%, _MAX_TOKEN_DF) df cap, same keyed
     verification joins — one more projection + union on top, no new
     shuffle). Determinism: one IEEE division of exact integers."""
     pairs = _doc_pair_commons(spark, sf_dir)

@@ -253,6 +253,23 @@ def test_readme_catalog_counts_match_registry():
     )
 
 
+def test_package_reads_no_session_knobs():
+    """Catalog thresholds and geometry are module constants, not session
+    confs: a query built on a driver's own SparkSession must plan exactly
+    as its oracle was checked, whatever that session carries."""
+    from pathlib import Path
+
+    import synthetic_data_transfer_to_relational_database_spark as pkg
+
+    hits = [
+        f"{p}:{i}"
+        for p in sorted(Path(pkg.__file__).parent.rglob("*.py"))
+        for i, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
+        if "spark.sdt." in line
+    ]
+    assert hits == [], f"session knobs read in the package: {hits}"
+
+
 def test_bench_hardware_yardsticks_shape():
     """The drift-adjudication method reads these fields from every
     official bench line (SCALE.md bench-method, r16 verdict #3) — a

@@ -227,7 +227,7 @@ def test_connected_components_deep_chain(spark, monkeypatch):
 
 def test_connected_components_dispatch_parity(spark, monkeypatch):
     """The r18 cost-based dispatch (small canonical edge sets run exact
-    union-find on the driver, the window_rank smallInputBytes pattern)
+    union-find on the driver, the window_rank RANK_SMALL_INPUT_BYTES pattern)
     must be label-IDENTICAL to the distributed star contraction — same
     (node, label) row set, component roots absent on both paths. A
     seeded random graph with chains, triangles, duplicate/reversed
@@ -544,13 +544,11 @@ def test_pagerank_invariants_and_known_graph(spark):
     assert all(abs(v - 1.0) < 1e-12 for v in tr.values())
 
 
-def test_erasure_audit_custom_list_and_cohort_conf(spark, sf_dir):
+def test_erasure_audit_custom_list(spark, sf_dir):
     """The compliance operator takes a real erasure list (any single-column
-    DataFrame of subject keys), and the demo cohort modulus is a conf —
-    defaults reproduce the registered oracle-checked query exactly."""
+    DataFrame of subject keys)."""
     from synthetic_data_transfer_to_relational_database_spark.operators.relational2 import (
         erasure_audit,
-        user_erasure_audit,
     )
 
     # explicit list: two known customers -> customer table reports exactly them
@@ -561,17 +559,8 @@ def test_erasure_audit_custom_list_and_cohort_conf(spark, sf_dir):
     # every impacted-row count is >= the direct subject count's floor
     assert all(r["n_rows"] >= r["n_subjects"] for r in got.values())
 
-    # conf-driven cohort: mod 50 selects more subjects than the default 97
-    spark.conf.set("spark.sdt.erasure.cohortMod", "50")
-    try:
-        wide = {r["table_name"]: r for r in erasure_audit(spark, sf_dir).collect()}
-    finally:
-        spark.conf.unset("spark.sdt.erasure.cohortMod")
-    deflt = {r["table_name"]: r for r in user_erasure_audit(spark, sf_dir).collect()}
-    assert wide["customer"]["n_subjects"] > deflt["customer"]["n_subjects"]
 
-
-def test_ab_test_salt_conf_rerandomizes(spark, sf_dir):
+def test_ab_test_salt_rerandomizes(spark, sf_dir):
     """A non-default salt re-randomizes assignment (different per-arm user
     counts) while conserving the total; the default reproduces the oracle
     split."""
@@ -580,13 +569,10 @@ def test_ab_test_salt_conf_rerandomizes(spark, sf_dir):
     )
 
     base = {r["variant"]: r["n_users"] for r in events_ab_test(spark, sf_dir).collect()}
-    spark.conf.set("spark.sdt.abtest.salt", "exp-reassign-7")
-    try:
-        salted = {
-            r["variant"]: r["n_users"] for r in events_ab_test(spark, sf_dir).collect()
-        }
-    finally:
-        spark.conf.unset("spark.sdt.abtest.salt")
+    salted = {
+        r["variant"]: r["n_users"]
+        for r in events_ab_test(spark, sf_dir, salt="exp-reassign-7").collect()
+    }
     assert set(base) == set(salted) == {0, 1}
     assert sum(base.values()) == sum(salted.values())  # same population
     assert base != salted  # a new experiment is a new split

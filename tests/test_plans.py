@@ -213,7 +213,7 @@ def test_topk_per_group_gets_partial_window_group_limit(spark):
     assert "Partial" in plan
 
 
-def test_scalable_rank_helpers_have_no_group_only_windows(spark):
+def test_scalable_rank_helpers_have_no_group_only_windows(spark, monkeypatch):
     """The scalable rank derivations (the large-input branches of
     window_rank / window_ranks_pct, and multimodal_dyn_batch's in-bucket
     sequence) must key every window by the range-slice id or a bounded
@@ -223,27 +223,26 @@ def test_scalable_rank_helpers_have_no_group_only_windows(spark):
     (correctly) pick the one-window plan."""
     import re
 
-    spark.conf.set("spark.sdt.rank.smallInputBytes", "0")
-    try:
-        for name, bounded_keys in [
-            ("window_ranks_pct", ("__pid",)),
-            ("window_rank", ("__pid",)),
-            ("window_ntile", ("__pid",)),
-            ("multimodal_dyn_batch", ("__pid", "batch_id")),
-            ("corpus_quantile_filter", ("__pid",)),
-        ]:
-            plan = _plan(registry.all_queries()[name](spark, SF_DIR))
-            specs = re.findall(r"windowspecdefinition\(([^)]*?)(?:, specifiedwindowframe|\))", plan)
-            assert specs, f"{name}: expected window specs"
-            for spec in specs:
-                assert any(k in spec for k in bounded_keys), (
-                    f"{name}: window partitioned by group alone: {spec}"
-                )
-    finally:
-        spark.conf.unset("spark.sdt.rank.smallInputBytes")
+    from synthetic_data_transfer_to_relational_database_spark.operators import skew
+
+    monkeypatch.setattr(skew, "RANK_SMALL_INPUT_BYTES", 0)
+    for name, bounded_keys in [
+        ("window_ranks_pct", ("__pid",)),
+        ("window_rank", ("__pid",)),
+        ("window_ntile", ("__pid",)),
+        ("multimodal_dyn_batch", ("__pid", "batch_id")),
+        ("corpus_quantile_filter", ("__pid",)),
+    ]:
+        plan = _plan(registry.all_queries()[name](spark, SF_DIR))
+        specs = re.findall(r"windowspecdefinition\(([^)]*?)(?:, specifiedwindowframe|\))", plan)
+        assert specs, f"{name}: expected window specs"
+        for spec in specs:
+            assert any(k in spec for k in bounded_keys), (
+                f"{name}: window partitioned by group alone: {spec}"
+            )
 
 
-def test_rank_dispatch_is_cost_based(spark):
+def test_rank_dispatch_is_cost_based(spark, monkeypatch):
     """window_rank picks its physical form from Catalyst's size estimate:
     small input (test scale, default 1 GiB threshold) ⇒ the one-window
     plan, zero distributed-rank scaffolding; threshold forced to 0 ⇒ the
@@ -257,12 +256,11 @@ def test_rank_dispatch_is_cost_based(spark):
     small_batch = _plan(registry.all_queries()["multimodal_dyn_batch"](spark, SF_DIR))
     assert "__pid" not in small_batch
 
-    spark.conf.set("spark.sdt.rank.smallInputBytes", "0")
-    try:
-        big = _plan(registry.all_queries()["window_rank"](spark, SF_DIR))
-        assert "__pid" in big
-    finally:
-        spark.conf.unset("spark.sdt.rank.smallInputBytes")
+    from synthetic_data_transfer_to_relational_database_spark.operators import skew
+
+    monkeypatch.setattr(skew, "RANK_SMALL_INPUT_BYTES", 0)
+    big = _plan(registry.all_queries()["window_rank"](spark, SF_DIR))
+    assert "__pid" in big
 
 
 def test_tfidf_construction_runs_no_job(spark):

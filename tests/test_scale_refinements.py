@@ -1,13 +1,13 @@
 """Round-5 scale refinements, each asserted semantically:
 
 - text_doc_pairs_jaccard's candidate cap is least(6% * n_docs,
-  spark.sdt.pairs.maxTokenDf) — the absolute term must BIND when set.
+  text._MAX_TOKEN_DF) — the absolute term must BIND when set.
 - graph triangles use degree-ordered orientation — the triangle SET must
   be identical to the id-ordered form (pure refinement, not a semantics
   change), checked against a brute-force enumeration on a hub-skewed
   graph.
 - events_anomaly_mad / orders_rfm percentiles are cost-dispatched:
-  exact below spark.sdt.percentile.smallInputBytes, percentile_approx
+  exact below skew.PERCENTILE_SMALL_INPUT_BYTES, percentile_approx
   above — the forced-approx branch is tolerance-tested, not just 'runs'.
 """
 
@@ -19,6 +19,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from synthetic_data_transfer_to_relational_database_spark.operators import skew, text
 from synthetic_data_transfer_to_relational_database_spark.operators.events import (
     QUERIES as EVENTS_QUERIES,
 )
@@ -33,10 +34,8 @@ from synthetic_data_transfer_to_relational_database_spark.sources.tables import 
 
 
 @pytest.fixture()
-def forced_approx(spark):
-    spark.conf.set("spark.sdt.percentile.smallInputBytes", "0")
-    yield
-    spark.conf.unset("spark.sdt.percentile.smallInputBytes")
+def forced_approx(monkeypatch):
+    monkeypatch.setattr(skew, "PERCENTILE_SMALL_INPUT_BYTES", 0)
 
 
 def _write_docs(tmp_path, docs) -> str:
@@ -48,29 +47,27 @@ def _write_docs(tmp_path, docs) -> str:
     return str(tmp_path)
 
 
-def test_doc_pairs_absolute_df_cap_binds(spark, tmp_path):
+def test_doc_pairs_absolute_df_cap_binds(spark, tmp_path, monkeypatch):
     """A token under the RELATIVE cap (5 of 100 docs < 6%) but over the
-    ABSOLUTE cap (conf 3) must generate no candidate pairs; an
+    ABSOLUTE cap (3) must generate no candidate pairs; an
     uncapped near-dup pair must still survive. Same corpus, default
-    conf: the hot-token pairs reappear — proving the absolute term, not
+    cap: the hot-token pairs reappear — proving the absolute term, not
     corpus shape, is what excluded them."""
     docs = [(i, f"w{i}a w{i}b w{i}c") for i in range(93)]  # all-unique filler
     docs += [(100 + i, "hot") for i in range(5)]  # identical 1-token docs, df(hot)=5
     docs += [(200, "x1 x2 x3 x4"), (201, "x1 x2 x3 x9")]  # jaccard 0.6 pair
     sf_dir = _write_docs(tmp_path, docs)
 
-    spark.conf.set("spark.sdt.pairs.maxTokenDf", "3")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(text, "_MAX_TOKEN_DF", 3)
         pairs = {
             (r.doc_a, r.doc_b)
             for r in TEXT_QUERIES["text_doc_pairs_jaccard"](spark, sf_dir).collect()
         }
-    finally:
-        spark.conf.unset("spark.sdt.pairs.maxTokenDf")
     assert (200, 201) in pairs
     assert not any(100 <= a < 105 for a, _ in pairs), "capped token leaked pairs"
 
-    # default conf (1e4): the relative cap alone (6% of 100 = 6 >= 5)
+    # default cap (1e4): the relative cap alone (6% of 100 = 6 >= 5)
     # admits the hot token, so the identical docs pair up
     spark.catalog.clearCache()
     pairs_default = {

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from synthetic_data_transfer_to_relational_database_spark.operators import skew
 from synthetic_data_transfer_to_relational_database_spark.operators.skew import (
     group_distribution_ranks,
 )
@@ -251,7 +252,7 @@ def test_window_rank_scalable_matches_naive_window(spark, sf_dir_mid):
     assert got == want
 
 
-def test_window_ranks_pct_branches_match(spark, sf_dir_mid):
+def test_window_ranks_pct_branches_match(spark, sf_dir_mid, monkeypatch):
     """window_ranks_pct's two physical branches (one-window vs
     distribution-rank derivation) must be bit-identical on real data."""
     from synthetic_data_transfer_to_relational_database_spark.operators.relational2 import (
@@ -265,15 +266,12 @@ def test_window_ranks_pct_branches_match(spark, sf_dir_mid):
         }
 
     small_branch = run()
-    spark.conf.set("spark.sdt.rank.smallInputBytes", "0")
-    try:
-        big_branch = run()
-    finally:
-        spark.conf.unset("spark.sdt.rank.smallInputBytes")
+    monkeypatch.setattr(skew, "RANK_SMALL_INPUT_BYTES", 0)
+    big_branch = run()
     assert small_branch == big_branch
 
 
-def test_window_ntile_branches_match(spark, sf_dir_mid):
+def test_window_ntile_branches_match(spark, sf_dir_mid, monkeypatch):
     """window_ntile's two physical branches (one NTILE window vs the
     group_distribution_ranks ceil-first-buckets derivation) must assign
     identical buckets on real data — the equality that licenses its
@@ -289,11 +287,8 @@ def test_window_ntile_branches_match(spark, sf_dir_mid):
         }
 
     small_branch = run()
-    spark.conf.set("spark.sdt.rank.smallInputBytes", "0")
-    try:
-        big_branch = run()
-    finally:
-        spark.conf.unset("spark.sdt.rank.smallInputBytes")
+    monkeypatch.setattr(skew, "RANK_SMALL_INPUT_BYTES", 0)
+    big_branch = run()
     assert small_branch == big_branch
 
 

@@ -15,8 +15,14 @@ DECIMAL to float64, Spark keeps int64 / decimal objects). A query only
 counts as green here if both engines emit the same canonical primitives.
 
 Usage:
-    python tools/driver_sim.py [query ...]        # default: all queries
+    python tools/driver_sim.py [--scalable] [query ...]   # default: all queries
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python tools/driver_sim.py
+
+``--scalable`` zeroes ``skew.RANK_SMALL_INPUT_BYTES``, forcing every
+cost-based rank dispatch (window_rank, window_ranks_pct, window_ntile,
+multimodal_dyn_batch, corpus_quantile_filter) onto its scalable branch,
+so THAT plan is what gets strict-oracle-checked. The percentile sites
+stay exact.
 """
 
 from __future__ import annotations
@@ -76,19 +82,18 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from synthetic_data_transfer_to_relational_database_spark import registry
+    from synthetic_data_transfer_to_relational_database_spark.operators import skew
     from synthetic_data_transfer_to_relational_database_spark.session import get_spark
 
+    args = sys.argv[1:]
+    if "--scalable" in args:
+        args.remove("--scalable")
+        skew.RANK_SMALL_INPUT_BYTES = 0
     queries = registry.all_queries()
     oracles = registry.all_oracles()
-    names = sys.argv[1:] or [n for n in queries if n in oracles]
+    names = args or [n for n in queries if n in oracles]
 
     spark = get_spark("driver-sim")
-    # DRIVER_SIM_CONF: JSON dict of session confs — e.g.
-    # '{"spark.sdt.rank.smallInputBytes": "0"}' forces every cost-based
-    # rank dispatch onto its scalable branch so THAT plan is what gets
-    # strict-oracle-checked.
-    for k, v in json.loads(os.environ.get("DRIVER_SIM_CONF", "{}")).items():
-        spark.conf.set(k, str(v))
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

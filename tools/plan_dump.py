@@ -4,7 +4,7 @@
 Usage: python tools/plan_dump.py <tag> [query ...]
   tag    subdirectory under plans/ (e.g. r18) — files land as
          plans/<tag>/<query>_<suffix>.txt
-  query  names to dump (default: the bench HEADLINE+EXTRA set)
+  query  names to dump (default: the registered queries in bench.ENTRIES)
 
 Env:
   PLAN_DUMP_SUFFIX   file suffix (default "before")
@@ -36,16 +36,12 @@ def main() -> None:
     from synthetic_data_transfer_to_relational_database_spark import registry
     from synthetic_data_transfer_to_relational_database_spark.session import get_spark
 
-    if not names:
-        names = [*bench.HEADLINE, *bench.EXTRA, *bench.EXTRA_R5, *bench.EXTRA_R6,
-                 *bench.EXTRA_R9, *bench.EXTRA_R12]
-
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                            "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan-dump")
     queries = registry.all_queries()
-    for name in names:
+    for name in names or [n for n in bench.ENTRIES if n in queries]:
         try:
             df = queries[name](spark, sf_dir)
             buf = io.StringIO()
