@@ -16,8 +16,7 @@ Column composition costs one py4j socket round trip per ``F.*`` call (and
 per ``_lit``): an 85-table schema build spent ~50% of its wall clock in
 ~240k such round trips (profiled, r9). Rendering each column's whole
 expression as one SQL string is O(1) round trips per TABLE instead of
-per NODE — the same fix applied to array literals
-(plans/executor._array_literal). The caller (plans/compiler.compile_rule
+per NODE. The caller (plans/compiler.compile_rule
 → plans/executor) aliases each column's string and parses the whole
 table in one ``selectExpr``.
 
@@ -58,8 +57,7 @@ def _qi(v: int) -> str:
 
 def _qd(v: float) -> str:
     """Double literal. A bare SQL ``1.5`` parses as DECIMAL(2,1) — the
-    CAST-from-repr form is the established exact-double rendering
-    (plans/executor._array_literal)."""
+    CAST-from-repr form renders the exact double."""
     if v != v:
         return "CAST('NaN' AS DOUBLE)"
     if v == float("inf"):

@@ -1,9 +1,12 @@
 """Generator-engine operators exposed through the driver contract.
 
-These are rows-only (no DuckDB oracle): referential sampling is
-deterministic for our engine but not SQL-reproducible — exactly the
-"non-SQL-expressible" category the driver records with a weaker
-rows-only check (SURVEY.md §2.3 fk_sample_join row).
+These have no DuckDB oracle: referential sampling is deterministic for
+our engine but not SQL-reproducible — exactly the "non-SQL-expressible"
+category the driver records with a weaker rows-only check (SURVEY.md
+§2.3 fk_sample_join row). The test suite checks each exactly by property
+instead: row count, a unique key, and FK closure (no NULL parent-side
+column after the join back to the parent;
+tests/test_oracle_parity.py::test_property_checked_queries).
 """
 
 from __future__ import annotations

@@ -10,28 +10,22 @@ The Spark-native re-expression of the reference's engines
   the PK functions, the FK samplers below) and the table is one
   ``spark.range(n).selectExpr(*items)`` call — whole-stage codegen, no
   Python row loop (SURVEY.md §4).
-- **FK sampling join (J1, run_engine.py:156-162)**: each child row gets a
-  uniformly-random EXISTING parent key. Two physical strategies:
-    * parents ≤ `broadcast_threshold` rows AND an estimated
-      ≤ `broadcast_key_bytes` of rendered key text: collected key array
-      broadcast into an ``element_at(keys, pmod(hash, n)+1)`` expression
-      — zero shuffle, mirroring the reference's 1000-key ID cache but
-      complete. The byte cap exists because the literal array rides in
-      the TASK BINARY and every task thread deserializes its own boxed
-      copy: at 100k uuid keys (~4 MB text) × 32 local task threads the
-      per-task copies alone OOM a default 1g heap (measured r10, the
-      10× full-schema probe), and on a real cluster the closure
-      re-ships per stage;
-    * larger parents: deterministic random index on the child + equi-join
-      against the parent's keys numbered by their global rank
-      (``_indexed_parent``: range-partitioned, partition-local sorts) —
-      shuffle-based, scales to any parent cardinality, AQE handles skew.
+- **FK sampling (J1, run_engine.py:156-162)**: each child row gets a
+  uniformly-random EXISTING parent key, by one of two means:
+    * composition: a parent whose PK is an expression of its row index
+      (uuid/int/identity rules) is sampled by recomputing that expression
+      at a sampled index — no join, no collect;
+    * every other parent (shared-PK subtypes, live-DB identity read-back
+      in ``parent_keys_override``): a deterministic random index on the
+      child equi-joined against the parent's keys numbered by their
+      global rank (``_indexed_parent``: range-partitioned,
+      partition-local sorts) — one strategy at every parent cardinality.
 - **FK fallback (J2, run_engine.py:160-162)**: empty parent ⇒ fabricated
   key by type (the reference tolerates the violation because constraints
   are disabled; we reproduce the semantics and flag it).
 - **self-referencing FKs** (CariHesap, script.sql:4043-4049): sampled
-  within the same generated batch by *recomputing the PK expression at a
-  sampled row index* — pure function composition, no second pass.
+  within the same generated batch by the same composition — no second
+  pass.
 - **shared-PK subtypes** (FK_SatisBelge_BelgeBaslik_Id,
   script.sql:4256-4257): child PK sampled from parent PKs WITHOUT
   replacement via an affine permutation of the parent index space —
@@ -68,72 +62,9 @@ def _sql_name(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _rank_sorted(keys) -> list:
-    """Parent keys in global key-rank order, the order the join path
-    numbers them in (``_indexed_parent``: ascending, NULLs first)."""
-    return sorted(keys, key=lambda v: (v is not None, v))
-
-
-def _array_literal(values: list) -> str:
-    """ONE ``array(...)`` literal for a Python list, as SQL text.
-
-    ``F.lit(list)`` in classic PySpark builds the array ELEMENT-BY-ELEMENT
-    — one py4j round trip per element — so a 10k-key parent array cost
-    ~5 s of pure socket time per FK edge, and an 85-table schema build
-    spent ~47% of its wall clock inside those listcomps (measured, r6).
-    Rendering the SQL text driver-side and parsing it once JVM-side is
-    O(1) round trips at any length. Covers every key type a parent can
-    carry (str/int/float/bool/Decimal/date/datetime/bytes, None as NULL);
-    anything else raises TypeError.
-
-    Float and string rendering delegate to generators._qd /._qs so the
-    exact-double repr and the parser-mode-safe quoting (unbase64 for
-    strings with quotes/backslashes) live in one place."""
-    import datetime
-    import decimal
-
-    # r19: big STRING key arrays (the collected-FK path ships up to
-    # broadcast_key_bytes of rendered uuids — 22 calls × 10k keys ≈ 8 MB
-    # of array(...) text per full-schema build, measured) render as ONE
-    # string literal + split(): the parser scans one token and the
-    # analyzer walks 3 nodes instead of one per key; the optimizer
-    # constant-folds split-of-literal to the IDENTICAL ArrayData, so the
-    # executed plan, the task-binary footprint and the output bytes are
-    # unchanged (tests/test_full_schema_gen.py::test_census_build_digest
-    # and tests/test_generator.py pin it). Strings only — every other key
-    # dtype keeps the exact typed-literal rendering below; ';' inside a
-    # key falls back likewise.
-    if len(values) >= 64 and all(
-        isinstance(v, str) and v and ";" not in v for v in values
-    ):
-        return f"split({_qs(';'.join(values))}, ';')"
-
-    def render(v) -> str:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        if isinstance(v, int):
-            return f"{v}L"
-        if isinstance(v, float):
-            return _qd(v)
-        if isinstance(v, decimal.Decimal):
-            _, digits, exp = v.as_tuple()
-            scale = max(0, -exp)
-            int_digits = max(len(digits) + exp, 0) if exp < 0 else len(digits) + exp
-            prec = max(int_digits + scale, 1)
-            return f"CAST('{v}' AS DECIMAL({prec},{scale}))"
-        if isinstance(v, datetime.datetime):
-            return f"TIMESTAMP '{v.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
-        if isinstance(v, datetime.date):
-            return f"DATE '{v.isoformat()}'"
-        if isinstance(v, str):
-            return _qs(v)
-        if isinstance(v, (bytes, bytearray)):
-            return f"X'{bytes(v).hex()}'"
-        raise TypeError(f"no SQL literal for {type(v).__name__} key {v!r}")
-
-    return "array(" + ",".join(render(v) for v in values) + ")"
+def _int_array(values: list[int]) -> str:
+    """``array(...)`` SQL literal of Python ints, as BIGINTs."""
+    return "array(" + ",".join(f"{int(v)}L" for v in values) + ")"
 
 
 def _fk_sql(col: ColumnSpec, value_sql: str, table_seed: int) -> str:
@@ -169,12 +100,6 @@ class GenerationPlan:
     seed: int = 42
     row_counts: dict[str, int] = field(default_factory=dict)
     default_rows: int = DEFAULT_ROW_COUNT
-    broadcast_threshold: int = 100_000
-    # second gate on the collected-array FK path: estimated rendered key
-    # bytes (n_parent × per-key width by dtype). 2 MiB ≈ 55k uuids —
-    # big parents switch to the equi-join strategy, whose cost scales
-    # with the shuffle, not with per-task literal deserialization.
-    broadcast_key_bytes: int = 2 << 20
     num_partitions: int | None = None
     # opt-in heavy-tailed FK sampling (see _sample_idx): 0.0 = uniform
     # (the reference's semantics and every oracle-checked default);
@@ -192,8 +117,8 @@ class GenerationPlan:
     # the real keys after insert and stores them here ({table: {pk_col:
     # [keys]}}); children then sample these instead of the assumed range.
     # Contract: to change a column's keys, REPLACE the list (assign a new
-    # one) — never mutate it in place; the byte-gate memo invalidates on
-    # list identity (+ a length backstop for .extend misuse).
+    # one) — never mutate it in place; the join frame is rebuilt on a
+    # change of list identity.
     parent_keys_override: dict[str, dict[str, list]] = field(default_factory=dict)
     # storage root for materialize="write" (defaults to spark-warehouse)
     materialize_dir: str = "spark-warehouse/_generated"
@@ -202,14 +127,10 @@ class GenerationPlan:
     _built: dict[str, DataFrame] = field(default_factory=dict)
     _pk_expr_fns: dict[str, object] = field(default_factory=dict)
     _row_count_of: dict[str, int] = field(default_factory=dict)
-    # (parent, col) -> (source list, sorted keys, rendered-byte estimate)
-    # memo for the parent_keys_override byte gate; the SOURCE element is
-    # the identity check that invalidates the memo when a caller replaces
-    # the override list between builds (concurrent same-key writes are
+    # synthetic __override__ join frame -> the override list it was built
+    # from: the identity check that rebuilds the frame when a caller
+    # replaces the list between builds (concurrent same-key writes are
     # GIL-atomic and value-identical — same-level builds may race benignly)
-    _override_prepped: dict[tuple[str, str], tuple[list, list, int]] = field(default_factory=dict)
-    # synthetic __override__ join-frame -> the sorted key list it was
-    # built from (identity-checked for the same replacement staleness)
     _override_syn_src: dict[str, list] = field(default_factory=dict)
     # per-table scratch caches (indexed-parent frames) released once the
     # child that referenced them is materialized. THREAD-LOCAL because
@@ -339,9 +260,12 @@ class GenerationPlan:
 
     def _fk_value(self, table: TableSpec, col: ColumnSpec, id_sql: str) -> str:
         """J1/J2: deterministic sample of an existing parent key, as SQL
-        text over ``id_sql``. The salt is per-FK-constraint (not
-        per-column) so composite-FK columns sample the same parent row —
-        tuple-consistent references."""
+        text over ``id_sql`` — the parent's PK expression composed at a
+        sampled index, or the J2 fallback — else raises ``_NeedsJoin`` so
+        _build_table samples the parent through the index equi-join. The
+        salt is per-FK-constraint (not per-column) so composite-FK
+        columns sample the same parent row — tuple-consistent
+        references."""
         parent_name, _, parent_col = col.fk_parent.partition(".")
         salt = col.fk_salt or f"{table.name}.{col.name}"
         child_rows = self._row_count_of.get(table.name, self.rows_for(table.name))
@@ -361,55 +285,14 @@ class GenerationPlan:
         if override is not None:
             if not override:
                 return self._fk_fallback(col, id_sql, salt)
-            # r10 advice: the collected-path byte gate applies HERE too —
-            # it is only the default fetch_limit=1000 that keeps readback
-            # lists small, and a caller raising it re-opens the exact
-            # per-task-literal OOM the gate exists for (the array literal
-            # rides the task binary, one boxed copy per task thread).
-            # Values are already in hand, so gate on actual rendered width.
-            # Canonical (sorted) key order first: the equi-join path maps
-            # sample index -> key by GLOBAL KEY RANK (_indexed_parent), so
-            # the array path must use the same order for the two dispatch
-            # outcomes to stay row-identical (same pin as the generated-
-            # parent gate, tests/test_generator.py). Sort + byte estimate
-            # are memoized per (parent, col): a 1M-key readback referenced
-            # by many children would otherwise re-pay O(n log n) driver
-            # work per FK column.
-            # The memo entry records WHICH list object it was built from:
-            # build_one is public precisely to allow interleaved
-            # build/load/fetch, so a re-fetch may REPLACE the override list
-            # for the same column — an identity check invalidates the
-            # stale sort instead of silently sampling first-fetch keys
-            # (r11 advice).
-            memo_key = (parent_name, parent_col)
-            prepped = self._override_prepped.get(memo_key)
-            if (
-                prepped is None
-                or prepped[0] is not override
-                # length check: catches the in-place `.extend(new_keys)`
-                # misuse that an identity check alone cannot (same-length
-                # in-place edits are the caller's contract breach — see
-                # the parent_keys_override field doc: replace, never
-                # mutate)
-                or len(prepped[1]) != len(override)
-            ):
-                srt = _rank_sorted(override)
-                prepped = (override, srt, sum(len(str(v)) + 3 for v in srt))
-                self._override_prepped[memo_key] = prepped
-            _, override, est = prepped
-            if len(override) <= self.broadcast_threshold and est <= self.broadcast_key_bytes:
-                idx = self._sample_idx(id_sql, salt, len(override), col.unique, child_rows)
-                return f"element_at({_array_literal(override)}, CAST(({idx}) + 1 AS INT))"
-            # Over cap: route through the same equi-join machinery as big
-            # GENERATED parents, against a DataFrame built from the
-            # readback keys. Registered under a synthetic name because
-            # the real parent_name may still hold the generated parent
-            # whose assumed keys this override supersedes.
+            # sampled through the same equi-join as generated parents,
+            # against a frame built from the readback keys. Registered
+            # under a synthetic name because the real parent_name may
+            # still hold the generated parent whose assumed keys this
+            # override supersedes. build_one is public to allow
+            # interleaved build/load/fetch, so a re-fetch may REPLACE the
+            # list: rebuild the frame then, never serve first-fetch keys.
             syn = f"__override__{parent_name}.{parent_col}"
-            # same staleness rule as the memo: `override` here is the
-            # memoized sorted list, whose identity changes exactly when
-            # the caller replaced the override — rebuild the join frame
-            # with it, never serve a first-fetch frame for replaced keys
             if self._override_syn_src.get(syn) is not override:
                 self._built[syn] = self.spark.createDataFrame(
                     [(v,) for v in override], [parent_col]
@@ -432,56 +315,8 @@ class GenerationPlan:
         if fn is not None:
             return fn(self._sample_idx(id_sql, salt, n_parent, col.unique, child_rows))
 
-        if (
-            n_parent <= self.broadcast_threshold
-            and n_parent * self._key_width_estimate(parent_name, parent_col)
-            <= self.broadcast_key_bytes
-        ):
-            # global key rank, as the readback override above and the
-            # join path do, so the dispatch outcome never changes which
-            # key a child row draws. ONE array literal (a single Catalyst
-            # Literal node), not 10^5 per-element literals
-            keys = _rank_sorted(r[0] for r in parent_df.select(parent_col).collect())
-            idx = self._sample_idx(id_sql, salt, len(keys), col.unique, child_rows)
-            return f"element_at({_array_literal(keys)}, CAST(({idx}) + 1 AS INT))"
-
-        # large-parent path is planned in _build_table via an equi-join
+        # every other parent is sampled in _build_table via the equi-join
         raise _NeedsJoin(parent_name, parent_col)
-
-    def _key_width_estimate(self, parent_name: str, parent_col: str) -> int:
-        """Rendered-SQL bytes per key for the collected-array gate —
-        rough and dtype-based, decided BEFORE collecting anything so an
-        over-cap parent never pays the driver fetch it would discard.
-
-        The estimate (and ``broadcast_key_bytes``) is a TEXT-BYTE PROXY
-        for a several-times-larger heap footprint: the measured r10 OOM
-        is driven by per-task boxed UTF8String/array copies at ~40+
-        bytes of JVM object overhead per key, one copy per task THREAD
-        (32 on local[32]). The 2 MiB default is sized with that
-        multiplier in mind — ~2 MiB of literal text ≈ tens of MiB of
-        transient heap across a fully-parallel stage; raise it only
-        with executor heap to spare."""
-        t = self.tables.get(parent_name)
-        spec = None
-        if t is not None:
-            spec = next((c for c in t.columns if c.name == parent_col), None)
-        if spec is None:
-            return 40
-        if spec.dtype == "uuid":
-            return 39  # 36 chars + quotes + comma
-        if spec.dtype in ("int", "short", "long"):
-            return 22
-        if spec.dtype.startswith("decimal"):
-            # r10 advice: decimal PKs previously fell to the generic
-            # length branch; size from declared precision instead —
-            # digits + sign + point + comma margin.
-            return (spec.precision or 18) + 5
-        if spec.length is not None and spec.length < 0:
-            # length=-1 is the varchar(MAX) sentinel (plans/model.py) —
-            # unbounded keys must never slip under the cap as "minimum
-            # width"; route straight to the join path.
-            return self.broadcast_key_bytes + 1
-        return max(spec.length or 24, 8) + 3
 
     def _fk_fallback(self, col: ColumnSpec, id_sql: str, salt: str) -> str:
         """J2 semantics (run_engine.py:160-162): fabricate by type."""
@@ -545,8 +380,8 @@ class GenerationPlan:
             return self._id_frame(n).selectExpr(*items)
         out = self._id_frame(n).selectExpr(id_sql, *items)
 
-        # Large-parent FK values via index-equi-join (scale path of J1).
-        # Requests are grouped per (parent, fk constraint salt): composite-FK
+        # FK values of parents without a PK expression, via the index
+        # equi-join. Requests are grouped per (parent, fk constraint salt): composite-FK
         # columns that share a constraint join against ONE sampled parent
         # row, keeping tuple consistency on this path too. The final
         # projection keeps the table's column order, so the output schema
@@ -622,8 +457,8 @@ class GenerationPlan:
             offsets.append(acc)
             acc += counts[part]
         off_sql = (
-            f"element_at(map_from_arrays({_array_literal(parts)},"
-            f" {_array_literal(offsets)}), __part)"
+            f"element_at(map_from_arrays({_int_array(parts)},"
+            f" {_int_array(offsets)}), __part)"
         )
         order = ", ".join(_sql_name(c) for c in key_cols)
         parent_idx = p.selectExpr(
@@ -764,8 +599,8 @@ class GenerationPlan:
         level cannot influence any sampled key (locked by
         tests/test_generator.py)."""
         self.for_each_level(lambda n: self.build_one(n, materialize), parallelism)
-        # synthetic __override__ key frames (the over-cap readback path)
-        # are join scaffolding, not schema tables — callers enumerating
+        # synthetic __override__ key frames (the readback join path) are
+        # join scaffolding, not schema tables — callers enumerating
         # the result (table writers, CLI counts) must not see them
         return {k: v for k, v in self._built.items() if not k.startswith("__override__")}
 

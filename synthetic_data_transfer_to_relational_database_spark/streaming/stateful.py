@@ -9,6 +9,10 @@ Scale shape: the stream shuffles once on user_id; state lives in the
 executor state store partitioned the same way, so each key's updates are
 local after the shuffle. Arrow moves batches into pandas (vectorized) —
 the per-key Python work is O(rows of that key in this batch).
+
+This is the one implementation. Spark 4's ``transformWithStateInPandas``
+would express the same profile as a StatefulProcessor, but it needs
+``google.protobuf`` and the RocksDB state store at runtime.
 """
 
 from __future__ import annotations
@@ -87,66 +91,3 @@ def user_profile_stream(events: DataFrame) -> DataFrame:
         )
     )
 
-
-# --- transformWithStateInPandas (Spark 4 successor API) -----------------
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor  # noqa: E402
-
-
-class UserProfileProcessor(StatefulProcessor):
-    """StatefulProcessor form of the same per-user running profile —
-    Spark 4's ``transformWithStateInPandas`` replaces the (key, pdfs,
-    state) callback with a processor object owning named state variables;
-    state here is a single ValueState row per user. Requires the RocksDB
-    state store provider (see ``user_profile_stream_tws``)."""
-
-    def init(self, handle) -> None:
-        self._profile = handle.getValueState("profile", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        if self._profile.exists():
-            n, cents, first_ts, last_ts = self._profile.get()
-        else:
-            n, cents, first_ts, last_ts = 0, 0, None, None
-        for pdf in rows:
-            n += len(pdf)
-            cents += int(round(pdf["value"].sum() * 100))
-            lo, hi = pdf["ts"].min(), pdf["ts"].max()
-            first_ts = lo if first_ts is None else min(first_ts, lo)
-            last_ts = hi if last_ts is None else max(last_ts, hi)
-        self._profile.update((n, cents, first_ts, last_ts))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n],
-                "value_cents": [cents],
-                "first_ts": [first_ts],
-                "last_ts": [last_ts],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def user_profile_stream_tws(events: DataFrame) -> DataFrame:
-    """``transformWithStateInPandas`` version of the running profile.
-    Runtime needs ``google.protobuf`` (the state-server wire protocol;
-    absent in this sandbox, so the parity test skips — the
-    ``applyInPandasWithState`` twin covers the same semantics).
-    Callers must enable the RocksDB state store (the API requires it):
-    ``spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")``.
-    Same shuffle shape as ``applyInPandasWithState``: one exchange on
-    user_id, state co-partitioned with it."""
-    return (
-        events.select("user_id", "ts", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=UserProfileProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

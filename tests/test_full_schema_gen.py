@@ -201,17 +201,3 @@ def test_census_build_digest(census_build):
     _, built = census_build
     changed = _changed_vs_golden(built)
     assert not changed, f"{len(changed)} census tables changed output: {changed[:10]}"
-
-
-def test_census_build_digest_with_join_sampled_fks(spark):
-    """FK sampling must not depend on the dispatch: with
-    ``broadcast_key_bytes=0`` every generated parent that is not
-    expression-computable goes through the equi-join path
-    (``_indexed_parent``) instead of the collected key array. Both index
-    parent keys by global key rank and keep the table's column order, so
-    the build matches the default build's golden digests table for
-    table."""
-    _, built = _build(spark, census_script(), broadcast_key_bytes=0)
-    changed = _changed_vs_golden(built)
-    assert not changed, f"{len(changed)} census tables differ by FK dispatch: {changed[:10]}"
-

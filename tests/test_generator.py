@@ -140,48 +140,6 @@ def test_iban_mod97_valid(spark):
         assert int(rearranged) % 97 == 1, iban
 
 
-def test_broadcast_key_byte_cap_switches_to_join_path_identically(spark):
-    """The collected-array FK path is gated by estimated key BYTES as
-    well as parent rows (at 100k uuid keys the per-task literal copies
-    OOM a 1g heap — measured r10). Forcing the cap to 1 byte must route
-    every non-expression-PK FK through the equi-join strategy and stay
-    row-identical to the array-path build."""
-    plan_a = GenerationPlan(spark, mini_erp(), seed=7, row_counts=ROWS)
-    a = plan_a.run()
-    plan_j = GenerationPlan(
-        spark, mini_erp(), seed=7, row_counts=ROWS, broadcast_key_bytes=1
-    )
-    j = plan_j.run()
-    for name in a:
-        cols = a[name].columns
-        assert (
-            a[name].select(cols).exceptAll(j[name].select(cols)).count() == 0
-            and j[name].select(cols).exceptAll(a[name].select(cols)).count() == 0
-        ), f"dispatch paths diverge on {name}"
-
-
-def test_key_width_estimate_treats_varchar_max_as_over_cap():
-    # length=-1 is the varchar(MAX) sentinel: unbounded keys must never
-    # slip under the byte cap as "minimum width" — the estimate routes
-    # them straight to the join path.
-    from synthetic_data_transfer_to_relational_database_spark.plans.model import ColumnSpec, TableSpec
-
-    plan = GenerationPlan(
-        None,
-        {
-            "P": TableSpec(
-                name="P",
-                columns=[ColumnSpec("K", "string", nullable=False, length=-1)],
-                pk=["K"],
-            )
-        },
-    )
-    assert plan._key_width_estimate("P", "K") > plan.broadcast_key_bytes
-    # and a bounded string still estimates by its declared length
-    plan.tables["P"].columns[0].length = 10
-    assert plan._key_width_estimate("P", "K") == 13
-
-
 def test_sentence_cardinality_grows_with_rows(spark):
     """The r9 advisor note: bank-only sentence composition capped
     distinct sentences per column at 65,536 (256x256 fragment pairs),
@@ -554,32 +512,36 @@ def test_fk_skew_produces_heavy_tail_and_keeps_closure(spark):
     assert ufreqs[0] < 110
 
 
+def _qs_array(vals: list[str]) -> str:
+    """An ``array(...)`` of ``generators._qs`` string literals — the
+    quoting every string literal the compiler emits goes through."""
+    from synthetic_data_transfer_to_relational_database_spark.functions.generators import _qs
+
+    return "array(" + ",".join(_qs(v) for v in vals) + ")"
+
+
 def test_array_literal_quotes_parse_in_both_parser_modes(spark):
     """ADVICE r6 (corrected by the r7 review): NO quoting scheme parses
     identically under both the default parser and the legacy
     spark.sql.parser.escapedStringLiterals=true (a doubled quote is not
     collapsed in legacy mode — engine-verified), so a string containing
     a quote OR backslash renders as ``CAST(unbase64('..') AS STRING)``
-    (generators._qs). Three arrays so both renderings are exercised:
-    plain strings render as quoted literals, quote- and
-    backslash-bearing ones through unbase64, and all three round-trip
-    bit-exact in BOTH parser modes."""
-    from synthetic_data_transfer_to_relational_database_spark.plans.executor import (
-        _array_literal,
-    )
-
+    (generators._qs). Three arrays of ``_qs`` literals so both
+    renderings are exercised: plain strings render as quoted literals,
+    quote- and backslash-bearing ones through unbase64, and all three
+    round-trip bit-exact in BOTH parser modes."""
     plain = ["alpha", "beta gamma", "d-elta_9"]
     quoted = ["it's", "two''quotes", "plain"]
     slashed = ["back\\slash", "plain"]
 
     # the rendering is asserted structurally so no case silently takes
     # the other form (the vacuous-test trap the r7 review caught)
-    assert _array_literal(plain) == "array('alpha','beta gamma','d-elta_9')"
-    assert "unbase64" in _array_literal(quoted)
-    assert "unbase64" in _array_literal(slashed)
+    assert _qs_array(plain) == "array('alpha','beta gamma','d-elta_9')"
+    assert "unbase64" in _qs_array(quoted)
+    assert "unbase64" in _qs_array(slashed)
 
     def roundtrip(vals):
-        return spark.range(1).selectExpr(f"{_array_literal(vals)} AS a").collect()[0]["a"]
+        return spark.range(1).selectExpr(f"{_qs_array(vals)} AS a").collect()[0]["a"]
 
     for vals in (plain, quoted, slashed):
         assert roundtrip(vals) == vals
@@ -665,17 +627,13 @@ def test_fk_skew_feeds_salted_join_end_to_end(spark):
 
 
 def test_array_literal_fuzz_roundtrip_both_parser_modes(spark):
-    """Fuzz the literal renderer: ONE array of many adversarial strings
-    (quotes, doubled quotes, backslashes, unicode, whitespace, empty)
-    must round-trip bit-exact in the default AND the legacy
+    """Fuzz the string-literal renderer (``generators._qs``): ONE array
+    of many adversarial strings (quotes, doubled quotes, backslashes,
+    unicode, whitespace, empty) must round-trip bit-exact in the default AND the legacy
     escapedStringLiterals parser mode. Seeded generation so the suite is
     deterministic; one array per mode rather than a Spark collect per
     fuzz example (that would be minutes)."""
     import random
-
-    from synthetic_data_transfer_to_relational_database_spark.plans.executor import (
-        _array_literal,
-    )
 
     rng = random.Random(7)
     alphabet = "ab'\\\"%_ \tçİ;,()-"
@@ -686,7 +644,7 @@ def test_array_literal_fuzz_roundtrip_both_parser_modes(spark):
     vals += ["", "'", "''", "\\", "\\'", "'; DROP TABLE x; --", "a'b\\c"]
 
     def roundtrip():
-        return spark.range(1).selectExpr(f"{_array_literal(vals)} AS a").collect()[0]["a"]
+        return spark.range(1).selectExpr(f"{_qs_array(vals)} AS a").collect()[0]["a"]
 
     assert roundtrip() == vals
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
@@ -696,24 +654,17 @@ def test_array_literal_fuzz_roundtrip_both_parser_modes(spark):
         spark.conf.unset("spark.sql.parser.escapedStringLiterals")
 
 
-def test_binary_and_null_keys_take_the_collected_array_path(spark):
-    """Every key a parent can carry renders as SQL text: a binary-keyed
-    parent (bytearray keys, ``X'..'`` literals) and a natural-key parent
-    holding a NULL both go through the collected-array path; the child
-    samples only existing keys, the NULL key included."""
-    from synthetic_data_transfer_to_relational_database_spark.plans.executor import (
-        _array_literal,
-    )
+def test_binary_and_null_keys_sample_through_the_join(spark):
+    """A binary-keyed parent and a natural-key parent holding a NULL,
+    neither with a PK expression, are sampled through the index
+    equi-join; the child draws only existing keys, the NULL key
+    included."""
     from synthetic_data_transfer_to_relational_database_spark.plans.model import (
         ColumnSpec,
         FKSpec,
         TableSpec,
         wire_fk_rules,
     )
-
-    assert _array_literal([b"\x00\xff", bytearray(b"a"), None]) == "array(X'00ff',X'61',NULL)"
-    with pytest.raises(TypeError):
-        _array_literal([object()])
 
     tables = {
         "B": TableSpec("B", [ColumnSpec("K", "binary", nullable=False)], pk=["K"]),
@@ -734,7 +685,7 @@ def test_binary_and_null_keys_take_the_collected_array_path(spark):
     b_keys = [bytearray(b"\x00\x01"), bytearray(b"\xfe"), bytearray(b"k3")]
     n_keys = ["AA", None, "BB", "CC"]
     # registered as built, so neither parent has a PK expression to
-    # compose and both FKs sample the collected key arrays
+    # compose and both FKs sample through the index join
     plan._built["B"] = spark.createDataFrame([(k,) for k in b_keys], "K binary")
     plan._built["N"] = spark.createDataFrame([(k,) for k in n_keys], "Kod string")
     plan._row_count_of.update(B=len(b_keys), N=len(n_keys))
@@ -773,12 +724,10 @@ def test_packed_draws_are_uniform_even_at_high_divisors(spark):
 
 
 def test_override_key_byte_cap_switches_to_join_path_identically(spark):
-    """r10 advice: the live-DB readback (parent_keys_override) path gets
-    the same byte gate as collected generated keys — a caller raising
-    fetch_limit must not re-open the per-task-literal OOM. Forcing the
-    cap to 1 byte routes the override through the synthetic-parent
-    equi-join and must stay row-identical to the array path (both use
-    canonical sorted key order)."""
+    """The live-DB readback (parent_keys_override) is sampled through the
+    synthetic-parent equi-join, indexing keys by global rank, so children
+    of a deliberately UNSORTED readback list draw only readback keys —
+    never generated ones — whatever order the server returned them in."""
     import uuid
 
     from synthetic_data_transfer_to_relational_database_spark.plans.model import (
@@ -788,48 +737,40 @@ def test_override_key_byte_cap_switches_to_join_path_identically(spark):
         wire_fk_rules,
     )
 
-    def build(cap: int):
-        tables = {
-            "P": TableSpec(
-                name="P",
-                columns=[ColumnSpec("Id", "uuid", nullable=False, length=36, identity=True)],
-                pk=["Id"],
-                fks=[],
-            ),
-            "C": TableSpec(
-                name="C",
-                columns=[
-                    ColumnSpec("Id", "uuid", nullable=False, length=36),
-                    ColumnSpec("PId", "uuid", nullable=False, length=36),
-                ],
-                pk=["Id"],
-                fks=[FKSpec(["PId"], "P", ["Id"])],
-            ),
-        }
-        wire_fk_rules(tables)
-        plan = GenerationPlan(
-            spark, tables, seed=7, row_counts={"P": 10, "C": 200}, broadcast_key_bytes=cap
-        )
-        # deliberately UNSORTED readback list — identity readback order is
-        # server-defined; canonicalization must not depend on it
-        keys = sorted(str(uuid.UUID(int=i * 7919)) for i in range(1, 51))[::-1]
-        plan.parent_keys_override["P"] = {"Id": list(keys)}
-        return plan.run(materialize=False)["C"]
-
-    a = sorted(map(tuple, build(2 * 1024 * 1024).collect()))
-    j = sorted(map(tuple, build(1).collect()))
-    assert a == j
-    # and the FK values really are the override keys, not generated ones
+    tables = {
+        "P": TableSpec(
+            name="P",
+            columns=[ColumnSpec("Id", "uuid", nullable=False, length=36, identity=True)],
+            pk=["Id"],
+            fks=[],
+        ),
+        "C": TableSpec(
+            name="C",
+            columns=[
+                ColumnSpec("Id", "uuid", nullable=False, length=36),
+                ColumnSpec("PId", "uuid", nullable=False, length=36),
+            ],
+            pk=["Id"],
+            fks=[FKSpec(["PId"], "P", ["Id"])],
+        ),
+    }
+    wire_fk_rules(tables)
+    plan = GenerationPlan(spark, tables, seed=7, row_counts={"P": 10, "C": 200})
+    # identity readback order is server-defined; sampling must not depend on it
+    keys = sorted(str(uuid.UUID(int=i * 7919)) for i in range(1, 51))[::-1]
+    plan.parent_keys_override["P"] = {"Id": list(keys)}
+    rows = plan.run(materialize=False)["C"].collect()
+    assert len(rows) == 200
+    # the FK values really are the override keys, not generated ones
     override_set = {str(uuid.UUID(int=i * 7919)) for i in range(1, 51)}
-    assert {r[1] for r in a} <= override_set
+    assert {r[1] for r in rows} <= override_set
 
 
-def test_override_replacement_invalidates_memo(spark):
+def test_override_replacement_rebuilds_join_frame(spark):
     """r11 advice: build_one is public precisely to allow interleaved
     build/load/fetch — a caller that re-fetches identity keys and
     REPLACES parent_keys_override for the same column must see children
-    sample the new list, not a memoized first-fetch sort. Covers both
-    dispatch outcomes (array literal and over-cap synthetic join)."""
+    sample the new list, not a join frame built from the first fetch."""
     import uuid
 
     from synthetic_data_transfer_to_relational_database_spark.plans.model import (
@@ -842,32 +783,29 @@ def test_override_replacement_invalidates_memo(spark):
     def keyset(tag: int) -> list[str]:
         return [str(uuid.UUID(int=tag * 10_000 + i)) for i in range(1, 31)]
 
-    for cap in (2 * 1024 * 1024, 1):  # array path, then forced join path
-        tables = {
-            "P": TableSpec(
-                name="P",
-                columns=[ColumnSpec("Id", "uuid", nullable=False, length=36, identity=True)],
-                pk=["Id"],
-                fks=[],
-            ),
-            "C": TableSpec(
-                name="C",
-                columns=[
-                    ColumnSpec("Id", "uuid", nullable=False, length=36),
-                    ColumnSpec("PId", "uuid", nullable=False, length=36),
-                ],
-                pk=["Id"],
-                fks=[FKSpec(["PId"], "P", ["Id"])],
-            ),
-        }
-        wire_fk_rules(tables)
-        plan = GenerationPlan(
-            spark, tables, seed=7, row_counts={"P": 10, "C": 100}, broadcast_key_bytes=cap
-        )
-        plan.parent_keys_override["P"] = {"Id": keyset(1)}
-        first = {r["PId"] for r in plan.build_one("C", materialize=False).collect()}
-        assert first <= set(keyset(1))
-        # the interleaved re-fetch: same column, NEW list object
-        plan.parent_keys_override["P"] = {"Id": keyset(2)}
-        second = {r["PId"] for r in plan.build_one("C", materialize=False).collect()}
-        assert second <= set(keyset(2)), f"stale memo served first-fetch keys (cap={cap})"
+    tables = {
+        "P": TableSpec(
+            name="P",
+            columns=[ColumnSpec("Id", "uuid", nullable=False, length=36, identity=True)],
+            pk=["Id"],
+            fks=[],
+        ),
+        "C": TableSpec(
+            name="C",
+            columns=[
+                ColumnSpec("Id", "uuid", nullable=False, length=36),
+                ColumnSpec("PId", "uuid", nullable=False, length=36),
+            ],
+            pk=["Id"],
+            fks=[FKSpec(["PId"], "P", ["Id"])],
+        ),
+    }
+    wire_fk_rules(tables)
+    plan = GenerationPlan(spark, tables, seed=7, row_counts={"P": 10, "C": 100})
+    plan.parent_keys_override["P"] = {"Id": keyset(1)}
+    first = {r["PId"] for r in plan.build_one("C", materialize=False).collect()}
+    assert first <= set(keyset(1))
+    # the interleaved re-fetch: same column, NEW list object
+    plan.parent_keys_override["P"] = {"Id": keyset(2)}
+    second = {r["PId"] for r in plan.build_one("C", materialize=False).collect()}
+    assert second <= set(keyset(2)), "stale join frame served first-fetch keys"

@@ -294,3 +294,22 @@ def test_bench_hardware_yardsticks_shape():
         # one spin per usable CPU
         assert hw["cpu_scale_k"] == len(os.sched_getaffinity(0))
         assert hw["cpu_scale_n"] > 0
+
+
+def test_bench_settledness_gate_scales_loadavg_by_cores():
+    """The launch gate reads the 1-min and the 15-min loadavg against a
+    per-core band. The drifted 4-core launch [6.68, 3.0, 2.15] (under the
+    old absolute 15-min band of 4.0) is unsettled; a quiet one is not."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("bench", "bench.py")
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    quiet = {"fsync_ms_p90": 0.15, "steal_pct": 0.0, "cpu_scale_k": 4, "cpu_scale_n": 1.01}
+    reasons = bench._unsettled_reasons({**quiet, "loadavg_1_5_15": [6.68, 3.0, 2.15]})
+    assert [r.split("=")[0] for r in reasons] == ["loadavg_1", "loadavg_15"], reasons
+    assert bench._unsettled_reasons({**quiet, "loadavg_1_5_15": [0.4, 0.3, 0.2]}) == []
+    # the same 15-min reading is quiet on 32 cores
+    assert bench._unsettled_reasons(
+        {**quiet, "cpu_scale_k": 32, "loadavg_1_5_15": [6.68, 3.0, 2.15]}
+    ) == []

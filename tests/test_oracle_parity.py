@@ -34,7 +34,38 @@ def test_oracle_parity(spark, duck, name):
     compare(df, duck, _ORACLES[name], name=name)
 
 
-@pytest.mark.parametrize("name", sorted(set(_QUERIES) - set(_ORACLES)))
+def _fk_closure(n_rows: int, key: str, parent_cols: list[str]):
+    """Exact property of a generated FK fact joined back to its parent:
+    ``n_rows`` rows, ``key`` unique, and every parent-side column non-null
+    (each sampled FK found an existing parent row)."""
+
+    def check(df):
+        from pyspark.sql import functions as F
+
+        got = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct(key).alias("distinct"),
+            *[F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in parent_cols],
+        ).first()
+        assert got["n"] == n_rows and got["distinct"] == n_rows, got
+        assert all(got[c] == 0 for c in parent_cols), got
+
+    return check
+
+
+# rows-only keys whose output has an exact property instead of an oracle
+_PROPERTIES = {
+    "gen_synthetic_orders": _fk_closure(1000, "Id", ["MusteriId", "Unvan"]),
+    "fk_sample_join": _fk_closure(2000, "fact_id", ["n_name"]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PROPERTIES))
+def test_property_checked_queries(spark, name):
+    _PROPERTIES[name](_QUERIES[name](spark, SF))
+
+
+@pytest.mark.parametrize("name", sorted(set(_QUERIES) - set(_ORACLES) - set(_PROPERTIES)))
 def test_rows_only_queries_run(spark, name):
     df = _QUERIES[name](spark, SF)
     assert df.count() >= 0

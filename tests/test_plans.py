@@ -106,10 +106,10 @@ def test_minhash_signatures_have_no_shuffle(spark):
 
 
 def test_large_parent_fk_join_has_no_global_window(spark):
-    """SURVEY §7 hard-part 1: the scale path of J1 (parent >
-    broadcast_threshold, non-expression PK) must not collapse the parent
-    into one partition. The dense index is built from partition-local
-    sorts + offsets; the only Window is partitioned by __part."""
+    """SURVEY §7 hard-part 1: the join path of J1 (a parent without a PK
+    expression) must not collapse the parent into one partition. The
+    dense index is built from partition-local sorts + offsets; the only
+    Window is partitioned by __part."""
     import re
 
     from synthetic_data_transfer_to_relational_database_spark.plans.executor import (
@@ -132,7 +132,7 @@ def test_large_parent_fk_join_has_no_global_window(spark):
             pk=["Id"],
         ),
         # subtype: PK is an FK — NOT expression-computable, so children of
-        # Belge must take the join path once Belge exceeds the threshold
+        # Belge take the join path
         "Belge": TableSpec(
             name="Belge",
             columns=[
@@ -158,7 +158,6 @@ def test_large_parent_fk_join_has_no_global_window(spark):
         tables,
         seed=5,
         row_counts={"Baslik": 80, "Belge": 60, "Satir": 200},
-        broadcast_threshold=10,  # force the join path at test size
     )
     built = plan.run()
 
@@ -176,6 +175,59 @@ def test_large_parent_fk_join_has_no_global_window(spark):
     belge_ids = {r[0] for r in built["Belge"].select("Id").collect()}
     for (v,) in built["Satir"].select("BelgeId").collect():
         assert v in belge_ids
+
+
+def test_small_parent_without_pk_expression_samples_through_join(spark):
+    """One FK strategy at every parent size: a 10-row parent whose PK is
+    not an expression of its row index (a shared-PK subtype) is sampled
+    through the index equi-join on ``__pidx``. No parent key is ever
+    collected into the child's plan as a literal."""
+    from synthetic_data_transfer_to_relational_database_spark.plans.executor import (
+        GenerationPlan,
+    )
+    from synthetic_data_transfer_to_relational_database_spark.plans.model import (
+        ColumnSpec,
+        FKSpec,
+        TableSpec,
+        wire_fk_rules,
+    )
+
+    tables = {
+        "Baslik": TableSpec(
+            name="Baslik",
+            columns=[ColumnSpec("Id", "uuid", nullable=False, length=36)],
+            pk=["Id"],
+        ),
+        "Belge": TableSpec(
+            name="Belge",
+            columns=[ColumnSpec("Id", "uuid", nullable=False, length=36)],
+            pk=["Id"],
+            fks=[FKSpec(["Id"], "Baslik", ["Id"])],
+        ),
+        "Satir": TableSpec(
+            name="Satir",
+            columns=[
+                ColumnSpec("Id", "uuid", nullable=False, length=36),
+                ColumnSpec("BelgeId", "uuid", nullable=False, length=36),
+            ],
+            pk=["Id"],
+            fks=[FKSpec(["BelgeId"], "Belge", ["Id"])],
+        ),
+    }
+    wire_fk_rules(tables)
+    plan = GenerationPlan(
+        spark, tables, seed=5, row_counts={"Baslik": 12, "Belge": 10, "Satir": 40}
+    )
+    plan.build_one("Baslik")
+    belge = plan.build_one("Belge")
+    keys = [r[0] for r in belge.select("Id").collect()]
+    assert len(keys) == 10
+
+    child = plan._build_table(tables["Satir"])
+    analyzed = child._jdf.queryExecution().analyzed().toString()
+    assert "Join" in analyzed and "__pidx" in analyzed
+    assert not [k for k in keys if k in analyzed], "parent keys inlined as a literal"
+    assert {r[0] for r in child.select("BelgeId").collect()} <= set(keys)
 
 
 def test_simhash_has_single_exchange(spark):

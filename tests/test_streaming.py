@@ -148,54 +148,6 @@ def test_foreachbatch_parquet_sink_idempotent(spark, tmp_path):
     assert n1 == want.count()
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (absent in this sandbox); "
-    "the applyInPandasWithState parity test covers the same semantics",
-)
-def test_stateful_user_profile_transform_with_state(spark):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor API) must
-    produce the identical per-user profile as applyInPandasWithState and
-    the batch groupBy. Needs the RocksDB state store provider."""
-    from synthetic_data_transfer_to_relational_database_spark.sources.tables import table
-    from synthetic_data_transfer_to_relational_database_spark.streaming.stateful import (
-        user_profile_stream_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got = run_to_completion(user_profile_stream_tws(stream_events(spark, SF_DIR)), "update")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    e = table(spark, SF_DIR, "events")
-    want = e.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-    )
-    assert _rows(got.select("user_id", "n_events", "value_cents", "first_ts", "last_ts")) == _rows(
-        want
-    )
-
-
 def test_foreachbatch_jdbc_sink_exactly_once(spark, tmp_path):
     """Streaming ingest into the relational target — the reference's bulk
     load driven from a stream: tumbling agg → foreachBatch → staging

@@ -166,8 +166,8 @@ def test_reference_script_unique_indexes_enforced(spark):
 
 
 def test_unique_fk_without_replacement_on_join_path(spark):
-    """The without-replacement guarantee must survive the large-parent
-    JOIN path too (parent > broadcast_threshold, non-expression PK):
+    """The without-replacement guarantee must survive the index JOIN
+    path too (a parent without a PK expression):
     the pick index is the affine permutation, so each child samples a
     distinct parent row."""
     tables = {
@@ -203,7 +203,6 @@ def test_unique_fk_without_replacement_on_join_path(spark):
         tables,
         seed=13,
         row_counts={"Baslik": 70, "Belge": 50, "BelgeEk": 50},
-        broadcast_threshold=5,  # force the index-join path
     )
     built = plan.run()
     assert _dupes(built["BelgeEk"], ["BelgeId"]) == 0
@@ -273,9 +272,7 @@ def test_indexed_parent_pins_one_partitioning(spark):
         return tables
 
     counts = {"Baslik": 70, "Belge": 50, "BelgeEk": 50}
-    plan = GenerationPlan(
-        spark, join_path_tables(), seed=13, row_counts=counts, broadcast_threshold=5
-    )
+    plan = GenerationPlan(spark, join_path_tables(), seed=13, row_counts=counts)
     plan.build_one("Baslik")
     plan.build_one("Belge")
     child = plan.build_one("BelgeEk", materialize=False)
@@ -285,9 +282,7 @@ def test_indexed_parent_pins_one_partitioning(spark):
         "range repartition"
     )
     # a materialized build releases the scratch cache afterwards
-    plan2 = GenerationPlan(
-        spark, join_path_tables(), seed=13, row_counts=counts, broadcast_threshold=5
-    )
+    plan2 = GenerationPlan(spark, join_path_tables(), seed=13, row_counts=counts)
     plan2.run()
     assert plan2._scratch == []
 
@@ -306,7 +301,7 @@ def test_indexed_parent_pins_one_partitioning(spark):
     )
     wire_fk_rules(tables3)
     plan3 = GenerationPlan(
-        spark, tables3, seed=13, row_counts={**counts, "BelgeNot": 40}, broadcast_threshold=5
+        spark, tables3, seed=13, row_counts={**counts, "BelgeNot": 40}
     )
     plan3.build_one("Baslik")
     plan3.build_one("Belge")
